@@ -6,13 +6,16 @@ plus a list of problems for the detail file.
 """
 import glob
 import json
-import math
+import os
 import re
+import sys
 
 import duckdb
 
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+# The registry's correctness gate: canonical form and cell equality.
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                "tools"))
+import compare  # noqa: E402
 
 
 def _tokens(s):
@@ -59,33 +62,17 @@ def search(doc_path, checks_path):
     return wrong, problems
 
 
-def _canon(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    if len(df) > 0:
-        df = df.sort_values(by=list(df.columns), kind="mergesort")
-    return df.reset_index(drop=True)
-
-
-def _cells_equal(a, b):
-    if a is None and b is None:
-        return True
-    if isinstance(a, float) and isinstance(b, float):
-        return (math.isnan(a) and math.isnan(b)) or a == b
-    try:
-        return bool(a == b)
-    except Exception:
-        return str(a) == str(b)
-
-
 def _diff(got, want):
-    """First difference between two canonical frames, or None."""
+    """First difference between two frames in tools/compare.py's canonical
+    form, or None."""
+    got, want = compare.canon(got), compare.canon(want)
     if list(got.columns) != list(want.columns):
         return f"columns {list(got.columns)} vs {list(want.columns)}"
     if len(got) != len(want):
         return f"rows {len(got)} vs {len(want)}"
     for col in got.columns:
         for i, (a, b) in enumerate(zip(got[col].tolist(), want[col].tolist())):
-            if not _cells_equal(a, b):
+            if not compare.cells_equal(a, b):
                 return f"col={col} row={i}: spark={a!r} oracle={b!r}"
     return None
 
@@ -95,7 +82,7 @@ def analytics(table_dir, checks_path):
     correctness gate does: columns sorted by name, rows sorted, exact cells.
     An entry without an oracle must return rows."""
     con = duckdb.connect()
-    for t in TABLES:
+    for t in compare.TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_dir}/{t}.parquet'")
     wrong, problems = 0, []
     for c in json.load(open(checks_path)):
@@ -109,7 +96,7 @@ def analytics(table_dir, checks_path):
                 problem = None if len(got) > 0 else "no rows"
             else:
                 try:
-                    problem = _diff(_canon(got), _canon(con.sql(c["oracle"]).df()))
+                    problem = _diff(got, con.sql(c["oracle"]).df())
                 except Exception as e:
                     problem = f"oracle: {e}"
         if problem is not None:

@@ -19,13 +19,13 @@ VOCAB = ["join", "hash", "row", "batch", "scan", "customer", "column", "filter",
          "agg", "value", "key", "stream", "window", "spark", "a", "group",
          "part", "big", "sort", "query", "fast", "the"]
 # Glossaries of the KG demo project (KgPipeline.OpGlossary etc.); the search
-# stream draws constraint values from them plus values no document carries.
+# stream draws constraint values from them, and its missing values from the
+# vocabulary words a type's glossary lacks.
 GLOSSARIES = {
     "op": ["join", "scan", "sort", "merge", "filter", "group", "agg", "window", "hash"],
     "speed": ["fast", "slow"],
     "size": ["big", "small"],
 }
-MISSING = {"op": ["pivot", "unnest"], "speed": ["medium"], "size": ["huge"]}
 LANGS = ["en", "es", "fr", "zh", "de"]
 LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
 EPOCH = dt.datetime(1970, 1, 1)
@@ -73,7 +73,8 @@ def _money(rng, n, lo, hi):
 
 
 def tables(out, rng, scale):
-    """Write the ten registry tables; `scale` 1.0 matches sf0.01's row counts."""
+    """Write the ten registry tables; `scale` 1.0 matches sf0.01's row counts.
+    Returns the documents table."""
     n_cust, n_supp, n_part = int(1500 * scale), max(10, int(100 * scale)), int(2000 * scale)
     n_ord, n_li, n_ev = int(15000 * scale), int(60000 * scale), int(10000 * scale)
     n_users = max(15, int(150 * scale))
@@ -137,13 +138,15 @@ def tables(out, rng, scale):
         "event_type": rng.choice(["click", "signup", "error", "view", "purchase"], n_ev).tolist(),
         "value": np.maximum(0.01, np.round(rng.exponential(50.0, n_ev), 2)),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)]}))
-    w("documents", documents(rng, 500))
+    docs = documents(rng, 500)
+    w("documents", docs)
     emb = rng.standard_normal((500, 64))
     emb = (emb / np.linalg.norm(emb, axis=1, keepdims=True)).astype(np.float32)
     w("embeddings", pa.table({
         "vec_id": pa.array(np.arange(500, dtype=np.int64)),
         "embedding": pa.array(list(emb), pa.list_(pa.float32())),
         "label": pa.array(rng.integers(0, 10, 500), pa.int32())}))
+    return docs
 
 
 def cdr_files(out, docs, n_files):
@@ -160,25 +163,43 @@ def cdr_files(out, docs, n_files):
         write(cdr.slice(f * per, per), f"{out}/part-{f:05d}.parquet")
 
 
-def _words(rng, lo, hi):
-    return " ".join(rng.choice(VOCAB, int(rng.integers(lo, hi + 1))).tolist())
+def _words(rng, n):
+    return " ".join(rng.choice(VOCAB, n).tolist())
 
 
-def _constraints(rng, n):
+# The kg_search stream copies the shapes of the registry's four kg_* entries
+# that call the query compiler directly, one op of each per block (1:1:1:1,
+# as the registry runs each entry once): kg_search (2 DemoCatalog
+# constraints, 2 free-text words, limit 50), kg_search_facets (facets on
+# op,size with k 10 over that search), kg_bm25 (3 query words, limit 50) and
+# kg_phrase (a 2-word phrase). The searches, plain and under facets, vary
+# what the registry leaves fixed over a cycle of three blocks: the cycle's
+# six searches take 1, 2 and 3 constraints each with and without free text,
+# and at each count one of the two carries a value that the documents hold
+# but that type's glossary lacks. A run measures whole cycles, so every
+# seed measures the same shapes; the seed draws the values, the words and
+# each block's order. A shape is (constraints, free text, missing value).
+SEARCH_CYCLE = [((1, True, True), (1, False, False)),   # (search, facets)
+                ((2, False, False), (2, True, True)),
+                ((3, True, False), (3, False, True))]
+FACET_FIELDS, FACET_K, LIMIT = "op,size", 10, 50
+BM25_WORDS, PHRASE_WORDS, FREE_WORDS = 3, 2, 2
+
+
+def _constraints(rng, n, missing):
+    types = rng.permutation(list(GLOSSARIES))[:n].tolist()
     cs = []
-    for ctype in rng.choice(list(GLOSSARIES), n).tolist():
-        pool = MISSING[ctype] if rng.random() < 0.15 else GLOSSARIES[ctype]
+    for i, ctype in enumerate(types):
+        pool = GLOSSARIES[ctype]
+        if missing and i == 0:
+            pool = [w for w in VOCAB if w not in pool]
         cs.append(f"{ctype}={rng.choice(pool)}")
     return ";".join(cs)
 
 
-# One block of the kg_search stream: (kind, constraints or query words,
-# free text?). Every block holds the same shapes in a seeded order, so every
-# run measures the same mix whatever the seed; the seed draws the values.
-BLOCK = [("search", 1, False), ("search", 2, True), ("search", 3, False), ("search", 2, False),
-         ("facets", 1, True), ("facets", 2, False),
-         ("bm25", 1, False), ("bm25", 3, False),
-         ("phrase", 2, False), ("phrase", 2, False)]
+def _search(rng, shape):
+    n, free, missing = shape
+    return [_constraints(rng, n, missing), _words(rng, FREE_WORDS) if free else "-", str(LIMIT)]
 
 
 def search_ops(rng, n_blocks):
@@ -190,18 +211,12 @@ def search_ops(rng, n_blocks):
     phrase  w1 w2
     """
     ops = []
-    for _ in range(n_blocks):
-        for i in rng.permutation(len(BLOCK)).tolist():
-            kind, n, free = BLOCK[i]
-            if kind in ("search", "facets"):
-                spec = [_constraints(rng, n), _words(rng, 1, 3) if free else "-",
-                        str(rng.choice([10, 20, 50]))]
-                if kind == "facets":
-                    fields = ",".join(sorted(rng.choice(list(GLOSSARIES), 2, replace=False).tolist()))
-                    spec += [fields, str(rng.choice([3, 10]))]
-                ops.append("\t".join([kind] + spec))
-            elif kind == "bm25":
-                ops.append(f"bm25\t{_words(rng, n, n)}\t{rng.choice([20, 50])}")
-            else:
-                ops.append(f"phrase\t{_words(rng, n, n)}")
+    for b in range(n_blocks):
+        search, facets = SEARCH_CYCLE[b % len(SEARCH_CYCLE)]
+        block = [
+            "\t".join(["search"] + _search(rng, search)),
+            "\t".join(["facets"] + _search(rng, facets) + [FACET_FIELDS, str(FACET_K)]),
+            f"bm25\t{_words(rng, BM25_WORDS)}\t{LIMIT}",
+            f"phrase\t{_words(rng, PHRASE_WORDS)}"]
+        ops += [block[i] for i in rng.permutation(len(block)).tolist()]
     return ops

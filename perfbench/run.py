@@ -26,15 +26,18 @@ import numpy as np
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
-import checks  # noqa: E402
 import gen  # noqa: E402
 
 WORK = os.path.join(HERE, ".work")
 BUILD = os.path.join(HERE, ".build")
+JSA = os.path.join(BUILD, "classes.jsa")
 RUN_LIMIT_S = 175
 # Workload sizes; BENCHMARK.json's "why" lines quote them.
 SEARCH_DOCS, CDR_FILES, SEARCH_BLOCKS = 1000, 40, 60
 TABLE_SCALE = 0.5
+# A traced op's program and Spark spans must cover this share of its wall
+# time; the rest is time no span accounts for.
+MIN_SPAN_COVER = 0.9
 # Spark 4 on JDK 17 outside spark-submit (as in the root build's javaOptions).
 ADD_OPENS = [a for p in [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
@@ -67,7 +70,8 @@ def sources_stamp():
 def build():
     """Compile the program and the benchmark; return the runtime classpath."""
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt"))
-            and os.path.isdir(os.path.join(ROOT, "src", "main", "scala"))):
+            and os.path.isdir(os.path.join(ROOT, "src", "main", "scala"))
+            and os.path.isfile(os.path.join(ROOT, "tools", "compare.py"))):
         fail("the program's sources are not next to the benchmark")
     stamp = sources_stamp()
     cp_file, stamp_file = os.path.join(BUILD, "classpath"), os.path.join(BUILD, "stamp")
@@ -88,13 +92,15 @@ def build():
     env["SBT_OPTS"] += f" -Djava.io.tmpdir={tmp}"
     with open(os.path.join(BUILD, "sbt.log"), "w") as log:
         r = subprocess.run(["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
-                            "export Runtime/fullClasspath"],
+                            "export Runtime/fullClasspathAsJars"],
                            cwd=HERE, env=env, stdout=subprocess.PIPE, stderr=log,
                            text=True, timeout=850)
         log.write(r.stdout)
     lines = [ln for ln in r.stdout.splitlines() if ln and not ln.startswith("[")]
     if r.returncode != 0 or not lines:
         fail(f"build failed, see {os.path.relpath(BUILD, ROOT)}/sbt.log")
+    if os.path.isfile(JSA):
+        os.remove(JSA)
     with open(cp_file, "w") as f:
         f.write(lines[-1])
     with open(stamp_file, "w") as f:
@@ -111,7 +117,7 @@ def generate(workload, seed, inp):
         with open(f"{inp}/ops.tsv", "w") as f:
             f.write("\n".join(gen.search_ops(rng, SEARCH_BLOCKS)) + "\n")
     else:
-        gen.tables(f"{inp}/tables", rng, TABLE_SCALE)
+        gen.cdr_files(f"{inp}/cdr", gen.tables(f"{inp}/tables", rng, TABLE_SCALE), CDR_FILES)
 
 
 def main():
@@ -128,6 +134,7 @@ def main():
     if a.workload not in [w["name"] for w in spec["workloads"]]:
         fail(f"unknown workload {a.workload}")
     cp = build()
+    import checks  # reads tools/compare.py, which build() found next to the benchmark
 
     t_start = time.time()
     run_id = f"{a.workload}-s{a.seed}-t{a.trace}"
@@ -141,7 +148,13 @@ def main():
     generate_s = time.time() - t0
 
     env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_")}
-    cmd = ["java", *ADD_OPENS, "-Xmx3g", "-Dspark.ui.enabled=false",
+    # The first run after a build archives the classes it loads (class data
+    # sharing); later runs map the archive, which shortens the JVM's and
+    # Spark's start.
+    cds = (f"-XX:SharedArchiveFile={JSA}" if os.path.isfile(JSA)
+           else f"-XX:ArchiveClassesAtExit={JSA}")
+    cmd = ["java", *ADD_OPENS, cds, "-Xlog:cds=off", "-Xlog:cds+dynamic=off", "-Xmx3g",
+           "-Dspark.ui.enabled=false",
            "-Dspark.sql.session.timeZone=UTC", f"-Djava.io.tmpdir={run_dir}/tmp",
            "-cp", cp, "perfbench.Main", "--workload", a.workload, "--seed", str(a.seed),
            "--seconds", str(a.seconds), "--trace", str(a.trace), "--input", inp, "--out", out]
@@ -168,7 +181,12 @@ def main():
     values.update(res["per_layer"])
     values["harness.generate_s"] = generate_s
     kind = "per_layer" if a.trace else "end_to_end"
-    metrics = {m["name"]: {"value": float(values.get(m["name"], 0.0)), "unit": m["unit"]}
+    missing = [m["name"] for m in spec[kind] if values.get(m["name"]) is None]
+    if missing:
+        fail(f"not measured: {', '.join(missing)}")
+    if a.trace and values["trace.self_sum_ratio"] < MIN_SPAN_COVER:
+        fail(f"spans cover only {values['trace.self_sum_ratio']:.3f} of an op's wall time")
+    metrics = {m["name"]: {"value": float(values[m["name"]]), "unit": m["unit"]}
                for m in spec[kind]}
     line = {"correct": failed == 0, "attempted": attempted, "failed": failed, "metrics": metrics}
     res.update(problems=problems, generate_s=generate_s, result=line)

@@ -27,9 +27,13 @@ final class Analytics(in: String, out: String, seed: Long) extends Workload {
     new scala.util.Random(seed).shuffle((0 until PanelSize).map(i => names((i * step + step / 2).toInt)))
   }
   private var keep = Set.empty[Int]
+  private var kgBuildMs = 0.0
+  private val ingest = new Ingest(s"$in/cdr", out)
 
   def setup(spark: SparkSession): Unit = {
+    val t0 = System.nanoTime()
     KgPipeline.kg(spark, dir)
+    kgBuildMs = (System.nanoTime() - t0) / 1e6
     Relational.graphBuild(spark, dir).count()
     keep = Caches.persistentIds(spark)
   }
@@ -42,16 +46,8 @@ final class Analytics(in: String, out: String, seed: Long) extends Workload {
     val pairs = ArrayBuffer[(Double, Double)]()
     val checks = ArrayBuffer[Map[String, Any]]()
     val entryMs = ArrayBuffer[(String, Double)]()
+    val kgCalls = ArrayBuffer[OpRecord]()
     var attempted, failed = 0
-
-    def sweep(): Unit = {
-      t.count("rdds_persisted", spark.sparkContext.getPersistentRDDs.keySet.count(!keep(_)).toDouble)
-      t.count("blocks_freed", spark.sparkContext.getRDDStorageInfo.filter(i => !keep(i.id))
-        .map(_.numCachedPartitions).sum.toDouble)
-      val t0 = System.nanoTime()
-      t.span("Caches", "sweep")(Caches.sweep(spark, keep))
-      t.count("sweep_ms", (System.nanoTime() - t0) / 1e6)
-    }
 
     def timed(name: String, on: Boolean): Option[OpRecord] = {
       attempted += 1
@@ -60,7 +56,7 @@ final class Analytics(in: String, out: String, seed: Long) extends Workload {
         val (_, rec) = t.op("entry", name) {
           val df = t.span("queries", "construct")(fns(name)(spark, dir))
           t.span("exec", "action")(df.write.format("noop").mode("overwrite").save())
-          sweep()
+          Layers.sweep(spark, t, keep)
         }
         Some(rec)
       } catch { case e: Exception =>
@@ -92,6 +88,10 @@ final class Analytics(in: String, out: String, seed: Long) extends Workload {
           entryMs += name -> u.wallMs
         }
         t.on = true
+        // the KG index should survive the sweeps: a call after each entry
+        // that launches a job is a rebuild
+        kgCalls += t.op("kg", "KgPipeline.kg")(
+          t.span("queries", "KgPipeline.kg")(KgPipeline.kg(spark, dir)))._2
       } else timed(name, on = false).foreach { r =>
         lat += r.wallMs
         entryMs += name -> r.wallMs
@@ -99,16 +99,21 @@ final class Analytics(in: String, out: String, seed: Long) extends Workload {
       checks += Map("name" -> name, "oracle" -> oracles.get(name), "result" -> res,
         "error" -> error, "runs" -> (attempted - runs0))
     }
-    val heap = Jvm.liveHeapMb()
+    val heap = if (t.on) Double.NaN else Jvm.liveHeapMb()
+    // the ingest plane's per-layer values come from one traced drain of
+    // the tables' documents, checked like kg_search's store
+    val layers = if (!t.on) Map.empty[String, Double] else {
+      val drained = ingest.tracedDrain(spark, t)
+      attempted += 1
+      if (!ingest.check(spark)) {
+        System.err.println(s"KG store ${ingest.lastStore} differs from the reference extraction")
+        failed += 1
+      }
+      Layers.caches(traced.toSeq) ++ Layers.kg(kgCalls.toSeq, spark, dir, kgBuildMs) ++ drained
+    }
     Files.writeString(Paths.get(out, "analytics_checks.json"), Json(checks))
-    def per(k: String) = Stats.mean(traced.map(_.counts.getOrElse(k, 0.0)))
     Measured(lat.toSeq, lat.size / (lat.sum / 1000.0), attempted, failed, traced.toSeq,
-      pairs.toSeq,
-      Map(
-        "Caches.sweep_ms" -> per("sweep_ms"),
-        "Caches.blocks_freed" -> per("blocks_freed"),
-        "Caches.rdds_persisted" -> per("rdds_persisted")),
-      heap,
+      pairs.toSeq, layers, heap,
       Map("panel" -> panel, "entry_ms" -> entryMs.toMap))
   }
 }

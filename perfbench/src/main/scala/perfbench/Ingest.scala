@@ -11,9 +11,10 @@ import graft.functions.TextFunctions
 import graft.queries.KgPipeline
 import graft.streaming.PipelineRunner
 
-/** The ingest plane of kg_search's set-up: `PipelineRunner.run` drains the
-  * corpus's CDR feed (many parquet files) with an AvailableNow trigger,
-  * through glossary extraction, into a parquet KG store.
+/** The ingest plane: `PipelineRunner.run` drains a CDR feed (many parquet
+  * files) with an AvailableNow trigger, through glossary extraction, into a
+  * parquet KG store. kg_search drains its corpus in set-up; the traced runs
+  * of both workloads drain their documents once more, traced.
   */
 final class Ingest(feed: String, out: String) {
   private val schema = StructType(Seq("doc_id", "url", "text", "lang")
@@ -61,8 +62,9 @@ final class Ingest(feed: String, out: String) {
     got.sorted == want.sorted
   }
 
-  /** Per-layer values of a traced drain op. */
-  def layers(rec: OpRecord): Map[String, Double] = {
+  /** Drain once more as a traced op; returns its per-layer values. */
+  def tracedDrain(spark: SparkSession, t: Tracer): Map[String, Double] = {
+    val (_, rec) = t.op("drain", "kg_ingest")(drain(spark, t))
     def c(k: String) = rec.counts.getOrElse(k, 0.0)
     val files = Files.list(Paths.get(lastStore)).toArray.count(_.toString.endsWith(".parquet"))
     Map(

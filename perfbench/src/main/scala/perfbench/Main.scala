@@ -5,10 +5,18 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.LogicalRDD
+
+import graft.Caches
+import graft.queries.KgPipeline
 
 /** What a workload hands back from its timed region. `latencyMs` feeds the
   * op percentiles, `throughput` the rate, and `traced` the per-layer
   * metrics; `extra` holds per-layer values the workload measures itself.
+  * `untracedPair` holds (untraced, traced) wall times of the same op.
+  * `heapMb` is the live heap after a fixed number of ops, so that it does
+  * not grow with the number of ops a run gets through; a traced run, which
+  * reports no end-to-end metric, does not read it.
   */
 final case class Measured(
     latencyMs: Seq[Double],
@@ -47,15 +55,22 @@ object Main {
     }
     var spark: SparkSession = null
     val sessionS = ArrayBuffer[Double]()
-    val setups = (1 to 3).map { _ =>
+    // The heap baseline is the live set once the kept session has started
+    // and run its first job, before the workload's set-up: the JVM, Spark
+    // and what the earlier, stopped sessions left behind. It is read
+    // outside the timed set-up.
+    var baselineMb = 0.0
+    val setups = (1 to 3).map { i =>
       if (spark != null) spark.stop()
       val t0 = System.nanoTime()
       spark = session(cores, out)
-      sessionS += (System.nanoTime() - t0) / 1e9
       spark.range(1000000L).selectExpr("sum(id)").collect()
-      sessionS += (System.nanoTime() - t0) / 1e9
+      val started = (System.nanoTime() - t0) / 1e9
+      sessionS += started
+      if (i == 3 && !traced) baselineMb = Jvm.liveHeapMb()
+      val t1 = System.nanoTime()
       w.setup(spark)
-      (System.nanoTime() - t0) / 1e9
+      started + (System.nanoTime() - t1) / 1e9
     }
     val tracer = new Tracer(spark, cores, traced)
     val canaryBefore = canary(spark)
@@ -67,7 +82,9 @@ object Main {
       "op_p50_ms" -> Stats.pct(m.latencyMs, 50),
       "op_p90_ms" -> Stats.pct(m.latencyMs, 90),
       "throughput_per_s" -> m.throughput,
-      "live_heap_mb" -> m.heapMb)
+      // the live set the workload added: its indexes and caches, and the
+      // session state its ops left behind
+      "live_heap_mb" -> (m.heapMb - baselineMb))
     val layers = if (traced) Layers.metrics(m) ++ Map(
       "harness.canary_before_ms" -> canaryBefore, "harness.canary_after_ms" -> canaryAfter)
     else Map.empty[String, Double]
@@ -77,6 +94,7 @@ object Main {
       "e2e" -> e2e, "per_layer" -> layers,
       "canary_ms" -> Map("before" -> canaryBefore, "after" -> canaryAfter),
       "setups_s" -> setups, "session_start_s" -> sessionS, "latency_ms" -> m.latencyMs,
+      "heap_baseline_mb" -> baselineMb,
       "ops" -> m.traced.map(r => Map("kind" -> r.kind, "name" -> r.name,
         "counts" -> r.counts, "self_ms" -> r.selfMs,
         "spans" -> r.spans.map(s => Seq(s.layer, s.name, s.start, s.end, s.depth))))) ++ m.detail
@@ -122,7 +140,7 @@ object Stats {
 }
 
 /** Per-layer metrics of a traced run: per-op means over the traced ops,
-  * self time per layer, and tracing overhead as traced minus untraced wall
+  * self time per layer, and tracing overhead as traced over untraced wall
   * time of the same ops.
   */
 object Layers {
@@ -130,8 +148,13 @@ object Layers {
     val ops = m.traced
     def per(k: String) = Stats.mean(ops.map(_.counts.getOrElse(k, 0.0)))
     val self = ops.map(_.selfMs.groupMapReduce(kv => selfGroup(kv._1))(_._2)(_ + _))
-    val selfSum = ops.zip(self).map { case (o, s) => s.values.sum / o.wallMs }
-    val (untr, tr) = (m.untracedPair.map(_._1), m.untracedPair.map(_._2))
+    // the share of each op's wall time that the program's and Spark's
+    // spans cover; the rest is the op's own span, i.e. untraced time
+    val covered = ops.zip(self).map { case (o, s) => 1.0 - s.getOrElse("harness", 0.0) / o.wallMs }
+    // Each op runs untraced and traced, and which goes first alternates.
+    // An op's second run is faster (warm caches and code), so the geometric
+    // mean of the per-op ratios cancels that order effect.
+    val logRatio = m.untracedPair.map { case (u, tr) => math.log(tr / u) }
     Map(
       "plans.analysis_ms" -> per("analysis_ms"),
       "plans.optimization_ms" -> per("optimization_ms"),
@@ -153,15 +176,52 @@ object Layers {
       "exec.task_skew" -> per("task_skew"),
       "jvm.gc_ms" -> per("gc_ms"),
       "trace.ops" -> ops.size.toDouble,
-      "trace.self_sum_ratio" -> Stats.mean(selfSum),
-      "trace.overhead_pct" ->
-        (if (untr.isEmpty) 0.0 else 100.0 * (Stats.median(tr) / Stats.median(untr) - 1.0))) ++
+      "trace.self_sum_ratio" -> (if (covered.isEmpty) 0.0 else covered.min),
+      "trace.overhead_pct" -> 100.0 * (math.exp(Stats.mean(logRatio)) - 1.0)) ++
       SelfGroups.map(k => s"self.${k}_ms" -> Stats.mean(self.map(_.getOrElse(k, 0.0)))) ++
       m.extra
   }
 
   val SelfGroups = Seq("harness", "sources", "queries", "query", "streaming", "plans",
     "Caches", "exec_driver", "exec_job", "exec_tasks")
+
+  /** The `queries.kg_*` values of traced ops that each made one
+    * `KgPipeline.kg` call: a rebuild is a call that launched a job.
+    */
+  def kg(calls: Seq[OpRecord], spark: SparkSession, dir: String,
+         buildMs: Double): Map[String, Double] = {
+    val rebuilds = calls.count(_.counts.getOrElse("jobs_in_kg_call", 0.0) > 0)
+    val kgRdds = KgPipeline.kg(spark, dir).queryExecution.analyzed.collect {
+      case lr: LogicalRDD => lr.rdd.id
+    }.toSet
+    val kgBytes = spark.sparkContext.getRDDStorageInfo.filter(i => kgRdds(i.id))
+      .map(i => i.memSize + i.diskSize).sum
+    Map(
+      "queries.kg_calls" -> calls.size.toDouble,
+      "queries.kg_rebuilds" -> rebuilds.toDouble,
+      "queries.kg_hit_ratio" -> (1.0 - rebuilds.toDouble / calls.size),
+      "queries.kg_index_mb" -> kgBytes / 1048576.0,
+      "queries.kg_build_ms" -> buildMs)
+  }
+
+  /** The `Caches.*` values: per-sweep means over the ops that swept. */
+  def caches(sweeps: Seq[OpRecord]): Map[String, Double] = {
+    def per(k: String) = Stats.mean(sweeps.map(_.counts.getOrElse(k, 0.0)))
+    Map(
+      "Caches.sweep_ms" -> per("sweep_ms"),
+      "Caches.blocks_freed" -> per("blocks_freed"),
+      "Caches.rdds_persisted" -> per("rdds_persisted"))
+  }
+
+  /** `Caches.sweep` as a traced call, with the counts of what it frees. */
+  def sweep(spark: SparkSession, t: Tracer, keep: Set[Int]): Unit = {
+    t.count("rdds_persisted", spark.sparkContext.getPersistentRDDs.keySet.count(!keep(_)).toDouble)
+    t.count("blocks_freed", spark.sparkContext.getRDDStorageInfo.filter(i => !keep(i.id))
+      .map(_.numCachedPartitions).sum.toDouble)
+    val t0 = System.nanoTime()
+    t.span("Caches", "sweep")(Caches.sweep(spark, keep))
+    t.count("sweep_ms", (System.nanoTime() - t0) / 1e6)
+  }
 
   /** Span layer → the self-time group it is reported under. */
   def selfGroup(layer: String): String = layer match {

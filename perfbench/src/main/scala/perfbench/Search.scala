@@ -8,10 +8,9 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Caches, Tables}
 import graft.queries.KgPipeline
 import graft.query.QueryCompiler
 import graft.query.QueryCompiler.{Constraint, QuerySpec}
@@ -91,18 +90,23 @@ final class Search(in: String, out: String) extends Workload {
   private val ops = Files.readAllLines(Paths.get(in, "ops.tsv")).asScala
     .map(SearchOp.parse).toIndexedSeq
   private var kgBuildMs = 0.0
+  private var keep = Set.empty[Int]
 
-  // The stream comes in blocks of Block ops with a fixed mix of kinds;
-  // a run measures whole blocks, at least MinBlocks of them.
-  private val Block = 10
-  private val MinBlocks = 2
-  private val TracedOps = 10
+  // The stream comes in blocks of Block ops, one of each kind, and its
+  // search shapes repeat every Cycle ops (gen.py SEARCH_CYCLE). A run
+  // measures whole cycles, at least MinCycles of them, so every run
+  // measures the same mix of shapes and the p90 stands on 36 ops or more.
+  private val Block = 4
+  private val Cycle = 3 * Block
+  private val MinCycles = 3
+  private val TracedOps = 2 * Block
 
   def setup(spark: SparkSession): Unit = {
     setupBatchMs = ingest.drain(spark, new Tracer(spark, 1, false))
     val t0 = System.nanoTime()
     KgPipeline.kg(spark, in)
     kgBuildMs = (System.nanoTime() - t0) / 1e6
+    keep = Caches.persistentIds(spark)
   }
 
   private def run(spark: SparkSession, t: Tracer, op: SearchOp): Array[Row] = {
@@ -171,18 +175,17 @@ final class Search(in: String, out: String) extends Workload {
         first.getOrElseUpdate(op.line, got) == got
     }
 
-    // Untimed warm-up: one op of each kind from the stream's last block,
-    // which timed runs never reach. It takes the JIT past the first-query
-    // cost of each op shape.
+    // Untimed warm-up: the ops of the stream's last block, one of each
+    // kind, which timed runs never reach. It takes the JIT past the
+    // first-query cost of each op shape.
     val w0 = System.nanoTime()
     val untraced = new Tracer(spark, 1, false)
-    ops.takeRight(Block).groupBy(_.kind).values.map(_.head).foreach(run(spark, untraced, _))
+    ops.takeRight(Block).foreach(run(spark, untraced, _))
     val warmUpS = (System.nanoTime() - w0) / 1e9
     // the ingest plane's per-layer values come from one traced drain
-    val ingestLayers = if (!t.on) Map.empty[String, Double] else {
-      val (_, rec) = t.op("drain", "kg_ingest")(ingest.drain(spark, t))
-      ingest.layers(rec)
-    }
+    val ingestLayers = if (t.on) ingest.tracedDrain(spark, t) else Map.empty[String, Double]
+    var layers = Map.empty[String, Double]
+    var heap = Double.NaN
     if (t.on) {
       // fixed op list: each op once traced and once untraced, alternating
       // which goes first, so counts repeat and overhead is paired
@@ -196,40 +199,31 @@ final class Search(in: String, out: String) extends Workload {
         }
       }
       t.on = true
+      // one sweep after the traced ops: what they left persisted
+      val (_, sweep) = t.op("sweep", "Caches.sweep")(Layers.sweep(spark, t, keep))
+      layers = Layers.kg(traced.filter(r => r.kind == "search" || r.kind == "facets").toSeq,
+        spark, in, kgBuildMs) ++ Layers.caches(Seq(sweep)) ++ ingestLayers
     } else {
       val deadline = System.nanoTime() + (seconds * 1e9).toLong
       var i = 0
-      while (i % Block != 0 || i < MinBlocks * Block || System.nanoTime() < deadline) {
+      while (i % Cycle != 0 || i < MinCycles * Cycle || System.nanoTime() < deadline) {
         timed(ops(i % ops.size), on = false).foreach(r => lat += r.wallMs)
         i += 1
+        // between ops, outside their timing
+        if (i == MinCycles * Cycle) heap = Jvm.liveHeapMb()
       }
     }
-    val heap = Jvm.liveHeapMb()
     attempted += 1
     if (!ingest.check(spark)) {
       System.err.println(s"KG store ${ingest.lastStore} differs from the reference extraction")
       failed += 1
     }
-    val kgRdds = KgPipeline.kg(spark, in).queryExecution.analyzed.collect {
-      case lr: LogicalRDD => lr.rdd.id
-    }.toSet
-    val kgBytes = spark.sparkContext.getRDDStorageInfo.filter(i => kgRdds(i.id))
-      .map(i => i.memSize + i.diskSize).sum
-    val kgOps = traced.filter(r => r.kind == "search" || r.kind == "facets")
-    val rebuilds = kgOps.count(_.counts.getOrElse("jobs_in_kg_call", 0.0) > 0)
     val checks = first.toSeq.map { case (line, rows) =>
       Map("op" -> line, "runs" -> runs(line), "rows" -> rows)
     }
     Files.writeString(Paths.get(out, "search_checks.json"), Json(checks))
     Measured(lat.toSeq, lat.size / (lat.sum / 1000.0), attempted, failed, traced.toSeq,
-      pairs.toSeq,
-      Map(
-        "queries.kg_calls" -> kgOps.size.toDouble,
-        "queries.kg_rebuilds" -> rebuilds.toDouble,
-        "queries.kg_hit_ratio" -> (if (kgOps.isEmpty) 0.0 else 1.0 - rebuilds.toDouble / kgOps.size),
-        "queries.kg_index_mb" -> kgBytes / 1048576.0,
-        "queries.kg_build_ms" -> kgBuildMs) ++ ingestLayers,
-      heap,
+      pairs.toSeq, layers, heap,
       Map("op_kinds" -> ops.groupBy(_.kind).view.mapValues(_.size).toMap, "warm_up_s" -> warmUpS,
         "setup_batch_ms" -> setupBatchMs))
   }

@@ -28,24 +28,20 @@ object Jvm {
 
   /** Heap in use right after a full collection (the live set), in MB.
     * Spark's ContextCleaner drops shuffle and broadcast state only after a
-    * collection finds it unreachable, so collect and pause until two
-    * readings agree.
+    * collection finds it unreachable, and a stopped session's threads let
+    * go of their state a while after `stop`. So collect and pause at least
+    * four times, until two readings agree, and take the smallest reading.
     */
   def liveHeapMb(): Double = {
     def reading(): Double = {
       System.gc()
-      Thread.sleep(300)
+      Thread.sleep(100)
       System.gc()
       ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
     }
-    var (prev, cur) = (reading(), reading())
-    var n = 0
-    while (math.abs(cur - prev) > 1.0 && n < 5) {
-      prev = cur
-      cur = reading()
-      n += 1
-    }
-    cur
+    val rs = ArrayBuffer(reading(), reading(), reading(), reading())
+    while (math.abs(rs.last - rs(rs.size - 2)) > 0.25 && rs.size < 10) rs += reading()
+    rs.min
   }
 }
 
@@ -111,12 +107,12 @@ final case class OpRecord(kind: String, name: String, spans: Seq[Span],
   * StreamingQueryListener that it registers. Everything stays in memory
   * until the run writes its detail file.
   *
-  * With `listen` false nothing is registered and ops are only timed: that
+  * With tracing off no listener is registered and ops are only timed: that
   * is the untraced mode the end-to-end metrics are measured in. A traced
-  * run may switch `on` off for single ops to measure tracing overhead.
+  * run switches `on` off for single ops to measure tracing overhead; that
+  * removes the listeners too.
   */
 final class Tracer(spark: SparkSession, val cores: Int, listen: Boolean) {
-  var on: Boolean = listen
 
   private val jobs = mutable.Map[Int, (Double, Double, Seq[Int])]()
   private val stageSpans = mutable.Map[Int, (Double, Double)]()
@@ -182,17 +178,28 @@ final class Tracer(spark: SparkSession, val cores: Int, listen: Boolean) {
       }
   }
 
-  if (listen) {
-    spark.sparkContext.addSparkListener(sparkListener)
-    spark.listenerManager.register(qeListener)
-    spark.streams.addListener(streamListener)
+  private var listening = false
+
+  def on: Boolean = listening
+
+  /** Register the three listeners, or drain the bus and remove them. */
+  def on_=(b: Boolean): Unit = if (b != listening) {
+    if (b) {
+      spark.sparkContext.addSparkListener(sparkListener)
+      spark.listenerManager.register(qeListener)
+      spark.streams.addListener(streamListener)
+    } else {
+      BenchBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(sparkListener)
+      spark.listenerManager.unregister(qeListener)
+      spark.streams.removeListener(streamListener)
+    }
+    listening = b
   }
 
-  def close(): Unit = if (listen) {
-    spark.sparkContext.removeSparkListener(sparkListener)
-    spark.listenerManager.unregister(qeListener)
-    spark.streams.removeListener(streamListener)
-  }
+  on = listen
+
+  def close(): Unit = on = false
 
   private val recorded = ArrayBuffer[Span]()
   private val extra = mutable.Map[String, Double]()
