@@ -114,6 +114,9 @@ object ScaleStress {
     */
   def replicate(spark: SparkSession, srcDir: String, outDir: String, copies: Int): Unit = {
     require(copies >= 1)
+    // the marker goes first and is written last: an interrupted run
+    // leaves no marker, so its partial replica is never reused
+    Files.deleteIfExists(replicaMarker(outDir))
     def raw(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")
 
     val custK = pow10Above(maxKey(raw("customer"), "c_custkey"))
@@ -203,6 +206,23 @@ object ScaleStress {
         else (0 until copies).map(fn).reduce(_ unionAll _)
       out.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     }
+    Files.writeString(replicaMarker(outDir), replicaStamp(srcDir, copies))
+  }
+
+  /** Completion marker of [[replicate]]: records the replica's source
+    * dir and copy count.
+    */
+  private def replicaMarker(outDir: String) = Paths.get(outDir, "_REPLICA")
+
+  private def replicaStamp(srcDir: String, copies: Int): String =
+    s"srcDir=${Paths.get(srcDir).toAbsolutePath.normalize}\ncopies=$copies\n"
+
+  /** True when `outDir` holds a finished [[replicate]] of `srcDir` at
+    * `copies`: its marker exists and records the same pair.
+    */
+  def replicaComplete(outDir: String, srcDir: String, copies: Int): Boolean = {
+    val m = replicaMarker(outDir)
+    Files.exists(m) && Files.readString(m) == replicaStamp(srcDir, copies)
   }
 
   /** One measured row: min-of-k noop-write wall seconds per dir, with
@@ -277,9 +297,10 @@ object ScaleStress {
 
     // SPARK_GRAFT_STRESS_REUSE=1 reuses an existing replica dir (the
     // replication is deterministic, and a 100× replica takes longer to
-    // write than the measurements it feeds) — local iteration aid.
+    // write than the measurements it feeds) — local iteration aid. Only
+    // a finished replica of this srcDir at this copy count is reused.
     if (sys.env.get("SPARK_GRAFT_STRESS_REUSE").isEmpty ||
-        !Files.exists(Paths.get(s"$outDir/lineitem.parquet")))
+        !replicaComplete(outDir, srcDir, copies))
       replicate(spark, srcDir, outDir, copies)
 
     // warm-up (Bench protocol): JVM/codegen + fs metadata + kernels

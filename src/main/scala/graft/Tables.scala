@@ -1,8 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -11,14 +16,70 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * warehouse path. Reads are plain parquet scans: column pruning and
   * predicate pushdown reach the scan via Catalyst (verified with
   * `.explain("formatted")` — see `PlanSpec`).
+  *
+  * Schema memo: inferring a parquet schema is a Spark job (a footer read
+  * per file), paid by every `spark.read.parquet` — at query-plane sizes
+  * it costs more than the query it feeds. [[apply]] infers once per
+  * table and reads with the remembered schema afterwards. The memo is
+  * keyed on the qualified path and stamped with a fingerprint of the
+  * files under it (names, sizes, mtimes) and with the SQL conf entries
+  * that change parquet inference: rewriting the table or changing that
+  * conf re-infers. The fingerprint comes from the file index Spark
+  * builds for the read, so checking it lists nothing twice.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private final case class Stamp(files: Seq[(String, Long, Long)], conf: Seq[(String, String)])
+
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** The distinct files `df`'s file scans read, as their file indexes
+    * listed them when the relations were built: looking them up lists
+    * nothing.
+    */
+  private[graft] def filesRead(df: DataFrame): Seq[FileStatus] =
+    df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation
+    }.collect {
+      case r: HadoopFsRelation => r.location
+    }.collect {
+      case i: PartitioningAwareFileIndex => i.allFiles()
+    }.flatten.distinct
+
+  /** A parquet read's stamp: the leaf files it reads and the session's
+    * parquet-inference conf.
+    */
+  private def stampOf(df: DataFrame): Stamp = {
+    val files = filesRead(df).map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    val conf = df.sparkSession.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+    Stamp(files.sorted, conf.sorted)
+  }
+
+  /** `path` read as parquet with its memoized schema, inferring it only
+    * when the memo has none or its stamp no longer matches the read's.
+    * A path that does not exist fails with Spark's own error.
+    */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val key = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
+    Option(schemas.get(key))
+      .map { case (stamp, schema) => (stamp, spark.read.schema(schema).parquet(path)) }
+      .collect { case (stamp, df) if stampOf(df) == stamp => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        schemas.put(key, (stampOf(df), df.schema))
+        df
+      }
+  }
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = read(spark, s"$dir/$name.parquet")
     // The driver's events table stores TIMESTAMP(NANOS), which Spark 4 only
     // reads as a long (spark.sql.legacy.parquet.nanosAsLong). Normalize to
     // TimestampType (µs, floor) so every operator sees a real timestamp.
@@ -58,8 +119,4 @@ object Tables {
   def sessionDefaults(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.session.timeZone", "UTC")
-
-  /** Register every table as a temp view (used by tests and the SQL path). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

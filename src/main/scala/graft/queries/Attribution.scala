@@ -85,8 +85,11 @@ object Attribution {
   private def let(e: Column)(f: Column => Column): Column =
     element_at(transform(array(e), x => f(x)), 1)
 
-  def markov(s: SparkSession, dir: String): DataFrame = {
-    val ed = journeyEdges(s, dir)
+  def markov(s: SparkSession, dir: String): DataFrame =
+    markovFromEdges(journeyEdges(s, dir))
+
+  /** [[markov]] over a given transition table (src, dst, cnt, outc). */
+  private[queries] def markovFromEdges(ed: DataFrame): DataFrame = {
     // r13: the whole post-edge computation is ALPHABET-BOUNDED — the
     // transition table is ≤(channels+2)² rows at ANY corpus size — yet
     // the r12 shape paid per MM round one eager checkpoint + one
@@ -114,12 +117,15 @@ object Attribution {
           transform(filter(eds, e => e.getField("src") === st), e =>
             struct(e.getField("dst").as("d"), e.getField("cnt").as("c"))).as("xs")))) { pe =>
         // v(dst) lookup: absorbing CONV/NULL are constants, else the
-        // state's slot in the current value array
+        // state's slot in the current value array. A dst that is never
+        // a src has no slot: it is worth 0, so its edge drops out of the
+        // sum (element_at would fail the query under ANSI, or null the
+        // state's fold without it).
         def look(vr: Column, d: Column): Column =
           when(d === lit("CONV"), lit(Scale))
             .when(d === lit("NULL"), lit(0L))
-            .otherwise(element_at(
-              filter(vr, y => y.getField("s") === d), 1).getField("v"))
+            .otherwise(coalesce(try_element_at(
+              filter(vr, y => y.getField("s") === d), lit(1)).getField("v"), lit(0L)))
         // K-round value iteration for knockout variant r → v_K(START)
         def vStart(r: Column): Column = {
           val v0 = transform(pe, e =>

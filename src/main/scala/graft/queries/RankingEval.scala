@@ -243,6 +243,11 @@ object RankingEval {
           (col("wab") + col("wba")).as("n"), col("wba").as("w")))).as("e"))
       .select(col("e.i").as("i"), col("e.j").as("j"),
         col("e.n").as("n"), col("e.w").as("w"))
+    btFold(ex, rounds)
+  }
+
+  /** [[evalBt]]'s MM rounds over the directed pair table (i, j, n, w). */
+  private[queries] def btFold(ex: DataFrame, rounds: Int): DataFrame = {
     // r13 (verdict #6): the MM loop runs on an ALPHABET-BOUNDED frame
     // (≤8 leagues by construction — suppkey mod 8 — so ≤56 directed
     // pairs at ANY corpus size), yet the r12 shape paid per round one
@@ -283,7 +288,12 @@ object RankingEval {
                     element_at(filter(p, y =>
                       y.getField("i") === x.getField("j")), 1).getField("p"))))
               .as("p")))
-        // unroll rounds as a let-chain (each round's array bound once)
+        // unroll rounds as a let-chain (each round's array bound once).
+        // Depth limit: every round nests one more lambda level, so the
+        // expression tree, and the recursion that analyses, optimizes,
+        // generates code for and evaluates it, deepens linearly with
+        // `rounds`. The fold is sized for the registry's 5 rounds; a
+        // much larger count belongs in a checkpointed loop instead.
         def chain(p: Column, k: Int): Column =
           if (k == 0)
             let(aggregate(p, lit(0.0), (a, y) => a + y.getField("p"))) { t =>
@@ -297,7 +307,9 @@ object RankingEval {
         chain(p0, rounds)
       }
     }
-    one.select(explode(rowsArr).as("r"))
+    // empty input: no pairs, no rows (the markov/hits guard)
+    one.filter(size(col("exs")) > 0)
+      .select(explode(rowsArr).as("r"))
       .select(col("r.model").as("model"), col("r.wins").as("wins"),
         col("r.games").as("games"), col("r.strength").as("strength"))
       .orderBy(col("strength").desc, col("model"))

@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.TextFunctions
 
 /** The structured-query plane (SURVEY §2.6, Q1–Q13): typed constraints →
@@ -18,9 +19,41 @@ import graft.functions.TextFunctions
   * Scale: constraints filter the KgValue table on (field, key) — both
   * pushed to the Parquet scan — then one groupBy(doc_id) shuffle scores
   * and enforces all-constraints-matched. Facets are per-field partial
-  * aggregations over the (small) hit set.
+  * aggregations over the (small) hit set. Small inputs take one task
+  * instead: when Catalyst's size estimate of an op's inputs is at most
+  * `spark.sql.autoBroadcastJoinThreshold`, every op narrow-coalesces
+  * those of them that read at most one file to one partition first
+  * ([[small]]). With single-partition leaves EnsureRequirements inserts
+  * no exchange, so the groupBys, the windows and the final sort run in
+  * the leaves' task rather than as one job per shuffle; only broadcasts
+  * (the joins' small sides, built concurrently) stay jobs of their own.
+  * Above the threshold, or with it at -1, the plan is the
+  * multi-partition shape described per op below, and so is the part
+  * of it fed by a multi-file input.
   */
 object QueryCompiler {
+
+  /** The small-input rule: when the summed size estimate of `inputs` is
+    * at most the session's broadcast threshold (the size it already
+    * ships whole to every task), each input that reads at most one file
+    * is narrow-coalesced to one partition; the rest, and every input
+    * above the threshold, are returned unchanged. Coalescing adds no
+    * shuffle, but it runs the input's per-row work up to the first
+    * exchange in one task: for a multi-file scan (a documents table of
+    * ten files, say) that would serialize the tokenizing the scan spreads
+    * over one task per file, and the measured ops got slower.
+    * The estimate is taken on the analyzed plans, which every DataFrame
+    * already has: an optimized plan would cost an optimizer pass per
+    * input (a whole search plan when facets gets its hits), and for
+    * these inputs (the KG index, table scans, a limit) both give the
+    * same size.
+    */
+  private def small(inputs: DataFrame*): Seq[DataFrame] = {
+    val limit = inputs.head.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val estimate = inputs.map(_.queryExecution.analyzed.stats.sizeInBytes).sum
+    if (limit < 0 || estimate > limit) inputs
+    else inputs.map(in => if (Tables.filesRead(in).size <= 1) in.coalesce(1) else in)
+  }
 
   /** Q1+Q5+Q6: a constraint type resolves to weighted field paths. */
   final case class TypeMapping(fields: Seq[(String, Double)])
@@ -89,8 +122,9 @@ object QueryCompiler {
     * combination = filter) and free-text token overlap added to the
     * score (Q13, filters-to-shoulds Q9).
     */
-  def search(kg: DataFrame, docs: DataFrame, docIdCol: String, textCol: String,
+  def search(kgIn: DataFrame, docsIn: DataFrame, docIdCol: String, textCol: String,
              spec: QuerySpec, catalog: Catalog): DataFrame = {
+    val Seq(kg, docs) = small(kgIn, docsIn)
     val perConstraint = spec.constraints.zipWithIndex.map { case (c, i) =>
       val tm = catalog.typeFieldMappings.getOrElse(c.ctype, TypeMapping(Seq(c.ctype -> 1.0)))
       val variants = catalog.expand(c.ctype, c.value)
@@ -135,7 +169,8 @@ object QueryCompiler {
   }
 
   /** A2/O4 facets over a hit set: top-k keys per facet field. */
-  def facets(kg: DataFrame, hits: DataFrame, fields: Seq[String], k: Int = 20): DataFrame = {
+  def facets(kgIn: DataFrame, hitsIn: DataFrame, fields: Seq[String], k: Int = 20): DataFrame = {
+    val Seq(kg, hits) = small(kgIn, hitsIn)
     kg.join(hits.select(col("doc_id")), "doc_id")
       .filter(col("field").isin(fields: _*))
       .groupBy(col("field"), col("key"))
@@ -225,8 +260,9 @@ object QueryCompiler {
     * else is broadcast. Scores are emitted rounded (4 decimals) so
     * cross-engine float comparison is stable.
     */
-  def bm25(docs: DataFrame, docIdCol: String, textCol: String, query: String,
+  def bm25(docsIn: DataFrame, docIdCol: String, textCol: String, query: String,
            k1: Double = 1.2, b: Double = 0.75, limit: Int = 50): DataFrame = {
+    val Seq(docs) = small(docsIn)
     val qTokens = "[a-z0-9]+".r
       .findAllIn(query.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
     val toks = docs.select(col(docIdCol).as("doc_id"),
@@ -260,9 +296,10 @@ object QueryCompiler {
     * to 4 decimals), identical scale shape: the only corpus-wide
     * shuffle is the (doc, term) tf groupBy.
     */
-  def bm25Weighted(docs: DataFrame, docIdCol: String, textCol: String,
-                   terms: DataFrame, k1: Double = 1.2, b: Double = 0.75,
+  def bm25Weighted(docsIn: DataFrame, docIdCol: String, textCol: String,
+                   termsIn: DataFrame, k1: Double = 1.2, b: Double = 0.75,
                    limit: Int = 50): DataFrame = {
+    val Seq(docs, terms) = small(docsIn, termsIn)
     val toks = docs.select(col(docIdCol).as("doc_id"),
       TextFunctions.tokens(col(textCol)).as("t"))
     val lens = toks.select(col("doc_id"), size(col("t")).cast("double").as("dl"))
@@ -312,9 +349,10 @@ object QueryCompiler {
     * Scale shape: identical to [[bm25]] — the only corpus-wide shuffle
     * is the (doc, term) tf groupBy; df and corpus stats broadcast.
     */
-  def bm25f(docs: DataFrame, docIdCol: String, textCol: String,
+  def bm25f(docsIn: DataFrame, docIdCol: String, textCol: String,
             query: String, headLen: Int = 10, wHead: Double = 2.0,
             k1: Double = 1.2, limit: Int = 50): DataFrame = {
+    val Seq(docs) = small(docsIn)
     val qTokens = "[a-z0-9]+".r
       .findAllIn(query.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
     val toks = docs.select(col(docIdCol).as("doc_id"),
@@ -377,8 +415,9 @@ object QueryCompiler {
     * final order is a top-k (TakeOrderedAndProject), never a global
     * sort.
     */
-  def qld(docs: DataFrame, docIdCol: String, textCol: String,
+  def qld(docsIn: DataFrame, docIdCol: String, textCol: String,
           query: String, mu: Double = 300.0, limit: Int = 50): DataFrame = {
+    val Seq(docs) = small(docsIn)
     val qTokens = "[a-z0-9]+".r
       .findAllIn(query.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
     val toks = docs.select(col(docIdCol).as("doc_id"),

@@ -15,6 +15,14 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Run `f` with the broadcast threshold at -1. That turns off the query
+    * compiler's small-input rule, so its ops plan their multi-partition
+    * shuffles, and it also turns off every broadcast: joins whose small
+    * side a large KG would still broadcast are planned as shuffled joins.
+    */
+  private def atScale[A](f: => A): A =
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(f)
+
   test("broadcast_dim: dimension filter pushed to scan, fact side broadcast-joined") {
     val p = plan(Relational.broadcastDim(spark, dir))
     assert(p.contains("BroadcastHashJoin"), "small dim must broadcast, not shuffle")
@@ -51,11 +59,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("kg_search: glossary extraction plane is shuffle-free up to scoring") {
-    val df = KgPipeline.kgSearch(spark, dir)
-    val exchanges = "Exchange".r.findAllIn(plan(df)).length
+    val p = atScale(plan(KgPipeline.kgSearch(spark, dir)))
+    val exchanges = "Exchange".r.findAllIn(p).length
     // one shuffle for the score groupBy, one for the freetext join side,
     // one for the final orderBy — the extraction map itself adds none
     assert(exchanges <= 6, s"extraction plane leaking shuffles: $exchanges exchanges")
+    assert(p.contains("Exchange hashpartitioning(doc_id"),
+      s"the scoring groupBy must shuffle by doc_id at scale:\n$p")
+  }
+
+  test("kg_search: a small KG runs as a single-partition plan without shuffles") {
+    val p = plan(KgPipeline.kgSearch(spark, dir))
+    assert("Exchange (hash|range|Single)".r.findFirstIn(p).isEmpty,
+      s"small inputs must add no shuffle:\n$p")
+    assert(p.contains("Coalesce 1"), p)
   }
 
   test("facet_topk: limit applied after partial aggregation, no global sort of input") {
@@ -260,9 +277,6 @@ class PlanSpec extends SparkSpec {
     val spec = graft.query.QueryCompiler.QuerySpec(
       constraints = Seq(graft.query.QueryCompiler.Constraint("op", "join")),
       freeText = None, limit = 50)
-    val df = graft.query.QueryCompiler.search(
-      kgStored, Tables(spark, dir, "documents"), "doc_id", "text",
-      spec, KgPipeline.DemoCatalog)
 
     // unwrap AQE (scans live under inputPlan before stage execution)
     def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
@@ -273,17 +287,27 @@ class PlanSpec extends SparkSpec {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }
     }
-    val scans = scansOf(df.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("kgstore")))
-    assert(scans.nonEmpty, "expected a file scan over the kg store")
-    val scan = scans.head
-    assert(scan.partitionFilters.exists(_.references.exists(_.name == "field")),
-      "field isin(...) must become a partition filter, not a data filter")
-    // the scan's own file index, under the scan's own partition filters:
-    // exactly ONE partition directory (field=op) may be selected
-    val selected = scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
-    assert(selected.size == 1,
-      s"one-constraint search must scan exactly the field=op partition, scanned ${selected.size}")
+    // both thresholds: the default, under which the documents side of
+    // this small query is coalesced (the store, one directory per field,
+    // reads several files and keeps its partitions), and -1, the
+    // multi-partition plan of a large store
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    for (threshold <- Seq(spark.conf.get(key), "-1")) withConf(key, threshold) {
+      val df = graft.query.QueryCompiler.search(
+        kgStored, Tables(spark, dir, "documents"), "doc_id", "text",
+        spec, KgPipeline.DemoCatalog)
+      val scans = scansOf(df.queryExecution.executedPlan)
+        .filter(_.relation.location.rootPaths.exists(_.toString.contains("kgstore")))
+      assert(scans.nonEmpty, s"threshold $threshold: expected a file scan over the kg store")
+      val scan = scans.head
+      assert(scan.partitionFilters.exists(_.references.exists(_.name == "field")),
+        s"threshold $threshold: field isin(...) must become a partition filter, not a data filter")
+      // the scan's own file index, under the scan's own partition filters:
+      // exactly ONE partition directory (field=op) may be selected
+      val selected = scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
+      assert(selected.size == 1, s"threshold $threshold: one-constraint search must scan " +
+        s"exactly the field=op partition, scanned ${selected.size}")
+    }
   }
 
   test("bloom_semi_join: bitset broadcasts; the probe side is a narrow map (no keyed shuffle)") {

@@ -37,6 +37,18 @@ class ScaleStressSpec extends AnyFunSuite {
     }
   }
 
+  test("a replica is reusable only with the marker of its own (srcDir, copies)") {
+    assume(Files.isDirectory(Paths.get(src)))
+    assert(ScaleStress.replicaComplete(out, src, copies = 2))
+    assert(!ScaleStress.replicaComplete(out, src, copies = 3))
+    val otherSrc = Files.createTempDirectory("graft_scale_src").toString
+    assert(!ScaleStress.replicaComplete(out, otherSrc, copies = 2))
+    // a replica without its marker (an interrupted run) is not reused
+    val partial = Files.createTempDirectory("graft_scale_partial")
+    Files.createDirectories(partial.resolve("lineitem.parquet"))
+    assert(!ScaleStress.replicaComplete(partial.toString, src, copies = 2))
+  }
+
   test("FK consistency: every replicated lineitem still joins its order") {
     val s = SparkSpec.session
     val orphans = Tables(s, out, "lineitem").as("l")

@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // shared session, never stopped per-suite
+
+  /** Run `f` with the session conf `key` set to `value`, then restore it. */
+  def withConf[A](key: String, value: String)(f: => A): A = {
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try f finally spark.conf.set(key, saved)
+  }
 }
 
 object SparkSpec {

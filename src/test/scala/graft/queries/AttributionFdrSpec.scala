@@ -77,6 +77,22 @@ class AttributionFdrSpec extends SparkSpec {
       assert(math.abs(got.map(_.getDouble(4)).sum - 1.0) < 1e-9)
   }
 
+  test("attribution_markov: a dst channel that is never a src is worth 0, not null") {
+    import spark.implicits._
+    // "ghost" is only ever a destination: its edge drops out of a's sum
+    val ed = Seq(
+      ("START", "a", 2L, 4L), ("START", "b", 2L, 4L),
+      ("a", "CONV", 1L, 2L), ("a", "ghost", 1L, 2L),
+      ("b", "CONV", 2L, 2L)).toDF("src", "dst", "cnt", "outc")
+    val got = Attribution.markovFromEdges(ed).collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3), r.getDouble(4)))
+    // v(a) = 1e6/2, v(b) = 1e6, v(START) = (2·v(a) + 2·v(b))/4 = 750000;
+    // knocking out a leaves 500000, knocking out b leaves 250000
+    assert(got.toSeq == Seq(
+      ("a", 0.75, 0.5, 333333L, 333333.0 / 999999.0),
+      ("b", 0.75, 0.25, 666666L, 666666.0 / 999999.0)))
+  }
+
   test("stats_fdr equals a plain-Scala Benjamini-Hochberg replay") {
     val ps = Inference.statsFisher(spark, dir)
       .select(col("nation"), col("p_value")).collect()

@@ -291,4 +291,10 @@ class Round11OpsSpec extends SparkSpec {
     assert(math.abs(got.map(_.getDouble(3)).sum - 1.0) < 1e-12, "normalized")
     assert(got.forall(_.getDouble(3) > 0.0), "all positive")
   }
+
+  test("eval_bt: an empty pair table yields no rows") {
+    import spark.implicits._
+    val ex = Seq.empty[(Long, Long, Long, Long)].toDF("i", "j", "n", "w")
+    assert(RankingEval.btFold(ex, rounds = 5).collect().isEmpty)
+  }
 }

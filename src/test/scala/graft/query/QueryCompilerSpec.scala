@@ -111,4 +111,78 @@ class QueryCompilerSpec extends SparkSpec {
     // rarer term outranks at equal tf: idf(spark) > idf(stream)
     assert(idfSpark > idfStream)
   }
+
+  // Small-input rule: at or below the broadcast threshold every op runs
+  // over single-partition inputs; -1 keeps the multi-partition plan.
+  /** The six query-plane ops over a 60-doc corpus of the demo glossaries'
+    * words and its KG (each doc's distinct glossary tokens).
+    */
+  private def sixOps(): Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    import graft.queries.KgPipeline
+    val glossary = Seq("op" -> KgPipeline.OpGlossary, "speed" -> KgPipeline.SpeedGlossary,
+      "size" -> KgPipeline.SizeGlossary)
+    val words = glossary.flatMap(_._2) ++ Seq("spark", "stream", "plan", "row")
+    val texts = (1 to 60).map { i =>
+      (i.toLong, (0 until 8).map(j => words((i * (j + 3) + j * j) % words.size)))
+    }
+    val docs = texts.map { case (id, t) => (id, t.mkString(" ")) }.toDF("doc_id", "text")
+    val kg = (for ((id, t) <- texts; tok <- t.distinct; (f, g) <- glossary if g.contains(tok))
+      yield (id.toString, f, tok, tok, "dict", "content", 1.0))
+      .toDF("doc_id", "field", "value", "key", "method", "segment", "confidence")
+    val cat = KgPipeline.DemoCatalog
+    val hits = QueryCompiler.search(kg, docs, "doc_id", "text", KgPipeline.DemoSpec, cat)
+    val terms = Seq("spark" -> 1.0, "stream" -> 1.0, "join" -> 0.4).toDF("tok", "w")
+    val q = "spark stream join"
+    Seq(
+      "search" -> hits,
+      "search, 1 constraint" -> QueryCompiler.search(kg, docs, "doc_id", "text",
+        QuerySpec(Seq(Constraint("op", "join"))), cat),
+      "facets" -> QueryCompiler.facets(kg, hits, Seq("op", "size"), k = 10),
+      "bm25" -> QueryCompiler.bm25(docs, "doc_id", "text", q),
+      "bm25Weighted" -> QueryCompiler.bm25Weighted(docs, "doc_id", "text", terms),
+      "bm25f" -> QueryCompiler.bm25f(docs, "doc_id", "text", q),
+      "qld" -> QueryCompiler.qld(docs, "doc_id", "text", q))
+  }
+
+  private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
+    "Exchange (hash|range|Single)".r.findAllIn(df.queryExecution.executedPlan.toString).size
+
+  test("small inputs: all six ops plan no shuffle and return the rows of the multi-partition plan") {
+    def run() = sixOps().map { case (name, df) =>
+      (name, shuffles(df), df.collect().map(_.toString).sorted.toSeq)
+    }
+    val small = run()
+    val wide = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run())
+    small.zip(wide).foreach { case ((name, s0, rows0), (_, s1, rows1)) =>
+      assert(s0 == 0, s"$name: the small-input plan has $s0 shuffles")
+      assert(s1 > 0, s"$name: with the threshold at -1 the plan must keep its shuffles")
+      assert(rows0.nonEmpty, name)
+      assert(rows0 == rows1, name)
+    }
+  }
+
+  test("small inputs: an input that reads several files keeps its partitions") {
+    val dir = java.nio.file.Files.createTempDirectory("qc-docs").toString
+    val docs = (1L to 30L).map(i => (i, s"spark stream join doc $i")).toDF("doc_id", "text")
+    docs.repartition(3).write.parquet(s"$dir/documents.parquet")
+    val multi = graft.Tables(spark, dir, "documents")
+    assert(graft.Tables.filesRead(multi).size == 3)
+    val bm = QueryCompiler.bm25(multi, "doc_id", "text", "spark stream")
+    val p = bm.queryExecution.executedPlan.toString
+    assert(!p.contains("Coalesce"), s"a multi-file scan must not be coalesced:\n$p")
+    assert(shuffles(bm) > 0, p)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(bm) == rows(QueryCompiler.bm25(docs, "doc_id", "text", "spark stream")))
+  }
+
+  test("small inputs: each op runs in a bounded number of jobs") {
+    // one job for the single-partition plan, plus one per broadcast
+    val bounds = Map("search" -> 2, "search, 1 constraint" -> 1, "facets" -> 3,
+      "bm25" -> 4, "bm25Weighted" -> 6, "bm25f" -> 4, "qld" -> 4)
+    for ((name, df) <- sixOps()) {
+      val jobs = graft.PlanBudget.withJobCount(spark)(df.collect())._2
+      info(s"$name: $jobs jobs")
+      assert(jobs <= bounds(name), s"$name launched $jobs jobs")
+    }
+  }
 }
