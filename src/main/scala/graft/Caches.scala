@@ -3,21 +3,19 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Storage-block hygiene for iterative plans and long-lived sessions.
+/** Storage-block hygiene for checkpointed plans and long-lived sessions.
   *
-  * `localCheckpoint(eager = true)` is the lineage barrier every iterative
-  * operator here uses (pagerank/BFS/SSSP/labelprop/clusters), but the
-  * blocks it pins live until the RDD is garbage-collected or the session
-  * ends — on a long-lived session (or a bench harness running 160+
-  * queries back to back) iteration-N blocks accrete without bound and
-  * evict genuinely hot data. Two remedies, both used:
+  * Iterative operators checkpoint every round through [[Iterate]], and
+  * the session-scoped indexes (kg_build, graph_build) are local
+  * checkpoints too. Their blocks live until the RDD is garbage-collected
+  * or the session ends — on a long-lived session (or a bench harness
+  * running 160+ queries back to back) dead rounds accrete without bound
+  * and evict genuinely hot data. Two remedies, both used:
   *
-  *   - inside a loop, [[free]] iteration N's blocks as soon as iteration
-  *     N+1 has materialized (the new checkpoint no longer references the
-  *     old one, so the blocks are dead weight);
+  *   - inside a loop, [[free]] round N's blocks as soon as round N+1 has
+  *     materialized ([[Iterate.fixpoint]] does this for its frames);
   *   - between independent units of work, [[sweep]] everything except a
-  *     caller-supplied keep-set (the session-scoped indexes: kg_build,
-  *     graph_build).
+  *     caller-supplied keep-set (the session-scoped indexes).
   */
 object Caches {
 
@@ -62,10 +60,14 @@ object Caches {
     * Row↔InternalRow hop per read — callers are loop frames bounded by
     * graph/alphabet size, never the corpus.
     */
-  def checkpointReset(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
+  def checkpointReset(df: DataFrame): DataFrame = resetStats(df.localCheckpoint(true))
+
+  /** Re-wrap a local checkpoint's RDD in a fresh LogicalRDD with
+    * default stats (the reset half of [[checkpointReset]]; also applied
+    * by [[Iterate.fixpoint]] after a lazy checkpoint has materialized).
+    */
+  private[graft] def resetStats(ck: DataFrame): DataFrame =
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
 
   /** Snapshot the ids of every currently-persisted RDD — call after
     * building session-scoped indexes to form the keep-set for [[sweep]].

@@ -1,8 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare (tools/compare.py), plus
+  * verify_status.json: per query its status ("ok"/"error"), error
+  * text, row count and seconds, so a query that throws is named in the
+  * artifact rather than inferred from a missing directory. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -23,17 +26,25 @@ object Verify {
     graft.queries.KgPipeline.kg(spark, sfDir)
     graft.queries.Relational.graphBuild(spark, sfDir).count()
     val keepRdds = Caches.persistentIds(spark)
-    SparkEntry.queries
+    val status = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val result = try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        val secs = (System.nanoTime() - t0) / 1e9
+        // the count reads the written files' footers, not the query
+        val rows = spark.read.parquet(s"$outDir/$name").count()
+        (name, "ok", None, Some(rows), secs)
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        (name, "error", Some(e.toString), None, (System.nanoTime() - t0) / 1e9)
       }
       // bound executor storage across the 160+ query run: free every
       // per-query cache/checkpoint, keep the two shared indexes
       Caches.sweep(spark, keepRdds)
+      result
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -50,6 +61,12 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val statusJson = status.map { case (name, st, err, rows, secs) =>
+      val seconds = String.format(java.util.Locale.ROOT, "%.3f", Double.box(secs))
+      s"""${q(name)}: {"status": ${q(st)}, "error": ${err.map(q).getOrElse("null")}, """ +
+        s""""rows": ${rows.getOrElse("null")}, "seconds": $seconds}"""
+    }.mkString("{\n", ",\n", "\n}\n")
+    Files.writeString(Paths.get(s"$outDir/verify_status.json"), statusJson)
     spark.stop()
   }
 }

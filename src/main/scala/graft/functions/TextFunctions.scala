@@ -85,13 +85,9 @@ object TextFunctions {
       when(q === "", lit("")).otherwise(concat(lit("?"), q)))
   }
 
-  /** Count of alphanumeric characters (for avg token length). */
+  /** Count of alphanumeric characters. */
   def alnumChars(c: Column): Column =
     length(regexp_replace(lower(c), "[^a-z0-9]", ""))
-
-  /** Exact average token length: int/int division done once in double. */
-  def avgTokenLen(c: Column): Column =
-    alnumChars(c).cast("double") / tokenCount(c).cast("double")
 
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "in", "to", "is")
 
@@ -103,18 +99,6 @@ object TextFunctions {
   def punctCount(c: Column): Column =
     size(regexp_extract_all(c, lit("[.!?,;:]"), lit(0)))
 
-  /** Quality score in [0,1]: length signal × (1 − stopword excess) ×
-    * (1 − punctuation density). Deterministic: integer counts, one
-    * double op per factor.
-    */
-  def qualityScore(c: Column): Column = {
-    val nTok = tokenCount(c).cast("double")
-    val lenSignal = least(nTok / lit(100.0), lit(1.0))
-    val stopRatio = stopwordCount(c).cast("double") / greatest(nTok, lit(1.0))
-    val punctRatio = punctCount(c).cast("double") / greatest(length(c).cast("double"), lit(1.0))
-    lenSignal * (lit(1.0) - stopRatio) * (lit(1.0) - punctRatio)
-  }
-
   /** Marker-word language-ID heuristic (n-gram style): count per-language
     * marker tokens, argmax with a fixed precedence for ties. Integer
     * scores → fully deterministic.
@@ -125,11 +109,6 @@ object TextFunctions {
     "es" -> Seq("el", "la", "los"),
     "fr" -> Seq("le", "les", "et"),
     "zh" -> Seq("de5", "shi4"))
-
-  def langScore(c: Column, markers: Seq[String]): Column = {
-    val m = markers.map(lit(_))
-    size(filter(tokens(c), t => t.isin(m: _*)))
-  }
 
   def langId(c: Column): Column = {
     // First language (in declaration order) whose score equals the max.
@@ -178,14 +157,12 @@ object TextFunctions {
   // ---- regex extractor battery (E4/E9/E10) -------------------------------
   val EmailRx = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   val Ipv4Rx = "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"
-  val UrlRx = "https?://[^\\s\"'<>]+"
   val HostRx = "https?://([^/\\s:]+)"
   val CveRx = "CVE-\\d{4}-\\d{4,7}"
   val HashRx = "\\b[a-f0-9]{32,64}\\b"
 
   def extractEmails(c: Column): Column = regexp_extract_all(c, lit(EmailRx), lit(0))
   def extractIps(c: Column): Column = regexp_extract_all(c, lit(Ipv4Rx), lit(0))
-  def extractUrls(c: Column): Column = regexp_extract_all(c, lit(UrlRx), lit(0))
   def hostname(c: Column): Column = regexp_extract(c, HostRx, 1)
   def extractCves(c: Column): Column = regexp_extract_all(c, lit(CveRx), lit(0))
 

@@ -22,8 +22,6 @@ final case class KgFieldDef(
 final case class KgSchema(rootName: String, fields: Seq[KgFieldDef]) {
   def field(name: String): Option[KgFieldDef] = fields.find(_.name == name)
 
-  def facetFields: Seq[String] = fields.filter(_.showInFacets).map(_.name)
-
   /** Spark type for a field (SURVEY §1.3 mapping). */
   def sparkType(f: KgFieldDef): DataType = f.fieldType match {
     case "date" => TimestampType

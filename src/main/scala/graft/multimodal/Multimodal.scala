@@ -24,12 +24,6 @@ object Multimodal {
   /** Typed metadata carried beside the opaque payload. */
   val MetaSchema = "struct<format:string,width:int,height:int,n_frames:int,sample_rate:int>"
 
-  /** Wrap a text/binary column as a media payload (binary + mime tag). */
-  def asMedia(payload: Column, mime: String): Column =
-    struct(
-      payload.cast("binary").as("bytes"),
-      lit(mime).as("mime"))
-
   /** REAL image metadata: header-only parse (PNG IHDR / JPEG SOF / GIF
     * / BMP) via the codegen'd [[ImageCodec.imageMeta]] expression —
     * reads a few header bytes, never inflates pixels, so a metadata

@@ -394,80 +394,43 @@ object Dedup {
     * Scale: each iteration is one join + one aggregate on the PAIR set
     * (candidates only, not the corpus); iterations ≤ diameter of the
     * largest cluster (near-dup clusters are shallow). The fixpoint test
-    * is a count — cheap relative to the join.
+    * is one aggregate — cheap relative to the join.
     */
   def clusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
     val edges = pairs.select(col("id_a"), col("id_b"))
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .distinct()
       .cache()
-    // localCheckpoint each round: an iterative plan referencing its own
-    // previous iteration grows exponentially otherwise (join + change
-    // test double the lineage every round → analyzer OOM by depth ~8).
-    // labels only ever DECREASE (min-propagation), so the decimal sum
-    // of all labels strictly decreases iff anything changed — the
-    // fixpoint test is one aggregate per round instead of a
-    // join + count against the previous iteration (measured ~25%
-    // of per-round wall time at sf0.1).
-    // r13 (the graph_mst relabelJump recipe): the checkpoint is LAZY
-    // and the fixpoint sum is the action that materializes its blocks
-    // — one job per round instead of two (the loop is scheduler-bound
-    // at small SF and the sum is a cheap block read at scale either
-    // way). Dataset.localCheckpoint(false) still returns a
-    // LogicalRDD-backed frame carrying origin stats, so planning is
-    // unchanged; the every-8th stats-reset wrapper is applied AFTER
-    // the sum has materialized the checkpoint.
-    def ckptWithSum(df: DataFrame, reset: Boolean): (DataFrame, java.math.BigDecimal) = {
-      val ck = df.localCheckpoint(false)
-      // sum over an EMPTY label table is null (no pairs → no nodes)
-      val s = Option(ck.agg(sum(col("cluster").cast("decimal(38,0)"))).first.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-      (if (reset) ck.sparkSession.createDataFrame(ck.rdd, ck.schema) else ck, s)
-    }
-    var (labels, prevSum) = ckptWithSum(
-      edges.select(col("id_a").as("id")).distinct()
-        .withColumn("cluster", col("id")), reset = false)
-    var iter = 0
-    var converged = false
-    // maxIter + 1: convergence needs a CONFIRMING no-change round, so
-    // a component whose last label change lands exactly on round
-    // maxIter is correct yet would throw if the confirming round never
-    // ran — one extra round makes the full advertised diameter usable,
-    // and it is a cheap no-change aggregate once converged
-    while (iter < maxIter + 1 && !converged) {
+    // labels only ever DECREASE (min-propagation), so the label sum is
+    // the fixpoint witness — one aggregate per round instead of a
+    // join + count against the previous round (measured ~25% of
+    // per-round wall time at sf0.1). maxIter + 1 rounds: a component
+    // whose last label change lands on round maxIter needs the
+    // confirming round. The checkpointed size stats double their digit
+    // count per round; a reset every 8th round bounds them without
+    // paying the wrapper's Row-conversion hop on every round.
+    // (r12 note: composing a pointer-jump after this propagate step —
+    // the graph_mst relabel recipe — was tried and measured a wash:
+    // these pair graphs converge in few rounds already, and the extra
+    // broadcast build plus the doubled in-plan propagate evaluation
+    // offset the rounds saved. Kept single-step.)
+    val fp = graft.Iterate.fixpoint(
+        edges.select(col("id_a").as("id")).distinct().withColumn("cluster", col("id")),
+        maxIter + 1, resetEvery = 8) { labels =>
       val neighborMin = edges
         .join(labels, edges("id_b") === labels("id"))
         .groupBy(edges("id_a").as("id"))
         .agg(min(col("cluster")).as("nmin"))
-      // checkpoint-preserved size stats DOUBLE their digit count per
-      // iteration (see Caches.checkpointReset for the measured hazard);
-      // a periodic reset keeps the estimate bounded without paying the
-      // wrapper's Row-conversion hop on every round
-      // (r12 note: composing a pointer-jump after this propagate step —
-      // the graph_mst relabel recipe — was tried and measured a wash:
-      // these pair graphs converge in few rounds already, and the extra
-      // broadcast build plus the doubled in-plan propagate evaluation
-      // offset the rounds saved. Kept single-step.)
-      val upd0 = labels.join(neighborMin, Seq("id"), "left")
+      labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
-      val (updated, curSum) = ckptWithSum(upd0, reset = iter % 8 == 7)
-      graft.Caches.free(labels) // round N-1 labels are dead once N lands
-      labels = updated
-      converged = curSum.compareTo(prevSum) == 0
-      prevSum = curSum
-      iter += 1
-    }
+    }(graft.Iterate.unchanged(graft.Iterate.labelSum("cluster")))
     // the returned labels are a checkpoint: the edge cache backs nothing
     // downstream and would otherwise pin storage for the session
     edges.unpersist(blocking = false)
-    // exiting via the iteration cap without the sum-fixpoint means the
-    // labels are NOT component minima — downstream "keep cluster == id"
-    // decisions would silently drop/keep the wrong rows, so fail loudly
-    if (!converged) throw new IllegalStateException(
-      s"Dedup.clusters: no fixpoint after $iter rounds (raise maxIter " +
-        s"beyond the cluster diameter; label sum $prevSum)")
-    labels
+    // capped labels are NOT component minima — downstream "keep
+    // cluster == id" decisions would silently keep the wrong rows
+    fp.orThrow("Dedup.clusters")
   }
 
   private val HexDigits = "0123456789abcdef"
@@ -513,29 +476,5 @@ object Dedup {
       array_repeat(lit(0), 64),
       (acc, h) => zip_with(acc, contribs(h), (a, b) => a + b))
     concat_ws("", transform(votes, v => when(v > 0, "1").otherwise("0")))
-  }
-
-  /** SimHash near-dup candidates: docs whose 16-bit simhash prefix chunk
-    * matches in any of the 4 chunks (banding over the bit string), with
-    * exact Hamming distance computed on candidates only.
-    */
-  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 8): DataFrame = {
-    val sigs = docs.select(col(idCol).as("id"), simhash64(col(textCol)).as("sig"))
-    val banded = sigs.select(col("id"), col("sig"),
-      posexplode(array((0 until 4).map(j => col("sig").substr(j * 16 + 1, 16)): _*))
-        .as(Seq("band_id", "chunk")))
-    val a = banded.select(col("band_id"), col("chunk"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = banded.select(col("band_id"), col("chunk"), col("id").as("id_b"), col("sig").as("sig_b"))
-    val hamming = aggregate(sequence(lit(0), lit(63)), lit(0), (acc, i) =>
-      acc + when(col("sig_a").substr(i + 1, lit(1)) =!= col("sig_b").substr(i + 1, lit(1)), 1)
-        .otherwise(0))
-    a.join(b, Seq("band_id", "chunk"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("sig_a"), col("sig_b"))
-      .distinct()
-      .withColumn("hamming", hamming)
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
   }
 }

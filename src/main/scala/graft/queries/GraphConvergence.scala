@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * because the DuckDB replay unrolls the same truncation. These
   * variants exist for the 100× regime where graph diameter and mixing
   * grow past the constants: the same per-round plans (one keyed join +
-  * aggregate on the edge set, localCheckpoint lineage barrier, previous
-  * round's blocks freed) driven by an explicit convergence test with a
+  * aggregate on the edge set) driven by [[graft.Iterate.fixpoint]] with
+  * eager per-round checkpoints, an explicit convergence test and a
   * hard cap — and the truncation made VISIBLE: every result carries
   * `rounds_run` and `converged` columns instead of silently reporting a
   * half-mixed state. The per-round convergence witness is always one
@@ -45,28 +45,25 @@ object GraphConvergence {
     def diff(a: DataFrame, b: DataFrame): Long =
       a.as("a").join(b.as("b"), col("a.node") === col("b.node"))
         .filter(col("a.lbl") =!= col("b.lbl")).count()
-    var prev: DataFrame = null
-    var lbl = e2.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint(true)
-    var rounds = 0
     var status = "capped"
-    while (rounds < maxRounds && status == "capped") {
-      val next = labelpropRound(e2, lbl).localCheckpoint(true)
-      if (diff(lbl, next) == 0L) status = "converged"
-      else if (prev != null && diff(prev, next) == 0L) status = "cycle"
-      if (prev != null) graft.Caches.free(prev)
-      prev = lbl
-      lbl = next
-      rounds += 1
+    // window 3: the cycle test compares with the state two rounds back
+    val fp = graft.Iterate.fixpoint(
+        e2.select(col("src").as("node")).distinct().withColumn("lbl", col("node")),
+        maxRounds, eager = true, window = 3)(labelpropRound(e2, _)) {
+      case next :: lbl :: older =>
+        if (diff(lbl, next) == 0L) status = "converged"
+        else if (older.nonEmpty && diff(older.head, next) == 0L) status = "cycle"
+        status != "capped"
+      case _ => false
     }
+    val lbl = fp.frame
     val sizes = lbl.groupBy(col("lbl")).agg(count(lit(1)).as("community_size"))
     val out = lbl.join(sizes, "lbl")
       .select(col("node"), col("lbl").as("community"), col("community_size"),
-        lit(rounds).as("rounds_run"), lit(status).as("status"))
+        lit(fp.rounds).as("rounds_run"), lit(status).as("status"))
       .orderBy(col("node"))
       .localCheckpoint(true)
     graft.Caches.free(e2)
-    if (prev != null) graft.Caches.free(prev)
     graft.Caches.free(lbl)
     out
   }
@@ -92,31 +89,17 @@ object GraphConvergence {
     val edges = Relational.graphBuild(s, dir)
     val sym = edges.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-    var alive = sym.select(col("src").as("node")).distinct()
-      .localCheckpoint(true)
-    var nAlive = alive.count()
-    var lastDeg: DataFrame = null
-    var rounds = 0
-    var converged = false
-    while (rounds < maxRounds && !converged) {
-      val deg = sym
+    val fp = graft.Iterate.fixpoint(sym.select(col("src").as("node")).distinct(),
+        maxRounds, eager = true) { alive =>
+      sym
         .join(alive.select(col("node").as("src")), "src")
         .join(alive.select(col("node").as("dst")), "dst")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val next = deg.filter(col("deg") >= k).select(col("node"), col("deg"))
-        .localCheckpoint(true)
-      val nNext = next.count()
-      graft.Caches.free(alive)
-      if (lastDeg != null) graft.Caches.free(lastDeg)
-      lastDeg = next
-      alive = next.select(col("node"))
-      rounds += 1
-      converged = nNext == nAlive
-      nAlive = nNext
-    }
-    lastDeg
-      .withColumn("rounds_run", lit(rounds))
-      .withColumn("converged", lit(converged))
+        .filter(col("deg") >= k).select(col("node"), col("deg"))
+    }(graft.Iterate.unchanged(_.count()))
+    fp.frame
+      .withColumn("rounds_run", lit(fp.rounds))
+      .withColumn("converged", lit(fp.converged))
       .orderBy(col("node"))
   }
 
@@ -134,33 +117,32 @@ object GraphConvergence {
     val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wt"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    var ranks = nodes.withColumn("r", lit(1000000L)).localCheckpoint(true)
-    var iters = 0
     var delta = Long.MaxValue
-    while (iters < maxIters && delta > tolUnits) {
+    val fp = graft.Iterate.fixpoint(nodes.withColumn("r", lit(1000000L)),
+        maxIters, eager = true) { ranks =>
       val contrib = e.join(wout, "src")
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst"), Relational.intdiv(col("r") * col("w"), col("wt")).as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("cs"))
-      val next = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+      nodes.join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (lit(150000L) + Relational.intdiv(lit(85L) * coalesce(col("cs"), lit(0L)),
             lit(100L))).as("r"))
-        .localCheckpoint(true)
-      delta = next.as("b").join(ranks.as("a"), col("a.node") === col("b.node"))
-        .agg(max(abs(col("b.r") - col("a.r")))).first().getLong(0)
-      graft.Caches.free(ranks)
-      ranks = next
-      iters += 1
+    } {
+      case next :: ranks :: _ =>
+        delta = next.as("b").join(ranks.as("a"), col("a.node") === col("b.node"))
+          .agg(max(abs(col("b.r") - col("a.r")))).first().getLong(0)
+        delta <= tolUnits
+      case _ => false
     }
-    val out = ranks
-      .withColumn("rounds_run", lit(iters))
-      .withColumn("converged", lit(delta <= tolUnits))
+    val out = fp.frame
+      .withColumn("rounds_run", lit(fp.rounds))
+      .withColumn("converged", lit(fp.converged))
       .withColumn("final_delta_units", lit(delta))
       .orderBy(col("node"))
       .localCheckpoint(true)
     graft.Caches.free(e)
-    graft.Caches.free(ranks)
+    graft.Caches.free(fp.frame)
     out
   }
 
@@ -180,36 +162,25 @@ object GraphConvergence {
     val edges = ev
       .select(col("event_type").as("a"), lead(col("event_type"), 1).over(w).as("b"))
       .filter(col("b").isNotNull).distinct()
-      .localCheckpoint(true)
-    val nodes = edges.select(col("a").as("node"))
-      .union(edges.select(col("b").as("node"))).distinct()
-    var clo = edges
-    var nPairs = clo.count()
-    var rounds = 0
-    var converged = false
-    while (rounds < maxRounds && !converged) {
-      val next = clo.union(
+    val fp = graft.Iterate.fixpoint(edges, maxRounds, eager = true) { clo =>
+      clo.union(
           clo.as("x").join(clo.as("y"), col("x.b") === col("y.a"))
             .select(col("x.a").as("a"), col("y.b").as("b")))
         .distinct()
-        .localCheckpoint(true)
-      val n = next.count()
-      converged = n == nPairs
-      nPairs = n
-      if (rounds > 0) graft.Caches.free(clo) // round 0 is `edges`, freed below
-      clo = next
-      rounds += 1
-    }
+    }(graft.Iterate.unchanged(_.count()))
+    val clo = fp.frame
+    // the closure keeps every edge, so its endpoints are the graph's nodes
+    val nodes = clo.select(col("a").as("node"))
+      .union(clo.select(col("b").as("node"))).distinct()
     val both = clo.as("f")
       .join(clo.as("r"), col("f.a") === col("r.b") && col("f.b") === col("r.a"))
       .select(col("f.a").as("v"), col("f.b").as("w"))
       .union(nodes.select(col("node").as("v"), col("node").as("w")))
     val out = both.groupBy(col("v").as("node")).agg(min(col("w")).as("scc_id"))
-      .withColumn("rounds_run", lit(rounds))
-      .withColumn("converged", lit(converged))
+      .withColumn("rounds_run", lit(fp.rounds))
+      .withColumn("converged", lit(fp.converged))
       .orderBy(col("node"))
       .localCheckpoint(true)
-    graft.Caches.free(edges)
     graft.Caches.free(clo)
     out
   }

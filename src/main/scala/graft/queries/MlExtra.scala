@@ -182,7 +182,7 @@ object MlExtra {
     val keys = Seq("q", "d")
     val cells = residCells(s, dir, keys)
     val b1 = cellStump(cells, "q")
-    val up1 = ckptCell(cellUpdate(cells, keys, "q", b1))
+    val up1 = graft.Caches.checkpointReset(cellUpdate(cells, keys, "q", b1).coalesce(1))
     val sse1 = cells.agg(sum(col("sr2")).as("sse_in1"))
       .crossJoin(up1.agg(sum(col("sr2")).as("sse_out1")))
     val b2 = cellStump(up1, "d")
@@ -250,27 +250,19 @@ object MlExtra {
     graft.Caches.checkpointReset(cells.coalesce(1))
   }
 
-  /** Checkpoint a tiny (≤550-row) intermediate frame to one partition
-    * so multi-round plans stay flat instead of compounding — every
-    * stump / updated cell table below is consumed 2–3×, and without
-    * the barrier Catalyst re-executes the shared subplan per consumer.
-    */
-  private def ckptCell(df: DataFrame): DataFrame =
-    graft.Caches.checkpointReset(df.coalesce(1))
-
   /** Best stump over the cell table on feature `f`: marginal histogram
     * (sums of cell counts/residual-sums), windowed integer cumsums,
     * the 5-op double gain chain, (gain DESC, threshold ASC) argmax —
     * value-identical to the pre-r9 per-row stump. The 1-row result is
     * checkpointed (it feeds both the output row and [[cellUpdate]]).
     */
-  private def cellStump(cells: DataFrame, f: String): DataFrame = ckptCell {
+  private def cellStump(cells: DataFrame, f: String): DataFrame = {
     val hist = cells.groupBy(col(f).as("t"))
       .agg(sum(col("n")).as("n"), sum(col("sr")).as("sr"))
     val w = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = hist.agg(sum(col("n")).as("nn"), sum(col("sr")).as("ss"))
-    hist
+    val best = hist
       .withColumn("nl", sum(col("n")).over(w))
       .withColumn("sl", sum(col("sr")).over(w))
       .crossJoin(broadcast(tot))
@@ -294,12 +286,15 @@ object MlExtra {
         truncDiv(col("sl"), col("nl")).as("leaf_left"),
         truncDiv(col("srr"), col("nr")).as("leaf_right"),
         col("gain"))
+    graft.Caches.checkpointReset(best.coalesce(1))
   }
 
   /** Subtract the fitted stump from the cell table's residual moments
     * — exact per cell, because the leaf is constant within a cell:
     * Σ(r−ℓ) = Σr − n·ℓ and Σ(r−ℓ)² = Σr² − 2ℓΣr + n·ℓ² (DECIMAL —
-    * n·ℓ² can exceed 2⁶³).
+    * n·ℓ² can exceed 2⁶³). Callers checkpoint-reset the result to one
+    * partition: each updated table is consumed 2–3×, and without the
+    * barrier Catalyst re-executes the shared subplan per consumer.
     */
   private def cellUpdate(cells: DataFrame, keys: Seq[String], f: String,
       b: DataFrame): DataFrame =
@@ -333,7 +328,7 @@ object MlExtra {
       ("t", "l_tax"))
     val rounds = feats.zipWithIndex.map { case ((fc, fname), i) =>
       val b = cellStump(cur, fc)
-      val next = ckptCell(cellUpdate(cur, keys, fc, b))
+      val next = graft.Caches.checkpointReset(cellUpdate(cur, keys, fc, b).coalesce(1))
       val sse = cur.agg(sum(col("sr2")).as("sb"))
         .crossJoin(next.agg(sum(col("sr2")).as("sa")))
       val row = b.crossJoin(sse).select(lit((i + 1).toLong).as("round"),
@@ -746,12 +741,12 @@ object MlExtra {
 
     val rootB = cellStump(cells, "q")
     val rootBc = broadcast(rootB.select(col("threshold").as("t0")))
-    val leftCells = ckptCell(cells.crossJoin(rootBc)
+    val leftCells = graft.Caches.checkpointReset(cells.crossJoin(rootBc)
       .filter(col("q") <= col("t0"))
-      .select(col("q"), col("d"), col("n"), col("sr"), col("sr2")))
-    val rightCells = ckptCell(cells.crossJoin(rootBc)
+      .select(col("q"), col("d"), col("n"), col("sr"), col("sr2")).coalesce(1))
+    val rightCells = graft.Caches.checkpointReset(cells.crossJoin(rootBc)
       .filter(col("q") > col("t0"))
-      .select(col("q"), col("d"), col("n"), col("sr"), col("sr2")))
+      .select(col("q"), col("d"), col("n"), col("sr"), col("sr2")).coalesce(1))
     nodeRow(rootB, cells, "q", "l_quantity", "root")
       .unionAll(nodeRow(cellStump(leftCells, "d"), leftCells, "d", "l_discount", "L"))
       .unionAll(nodeRow(cellStump(rightCells, "d"), rightCells, "d", "l_discount", "R"))

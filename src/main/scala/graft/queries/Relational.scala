@@ -1606,9 +1606,8 @@ object Relational {
     */
   def graphBetweenness(s: SparkSession, dir: String): DataFrame = {
     val edges = coSupplyEdges(s, dir)
-    // r13: LAZY checkpoints (the graph_bfs recipe) — fixed hop count,
-    // no per-round scalar; the eager `out` checkpoint below is the one
-    // materializing action, after which the frees are safe.
+    // the eager `out` checkpoint below is the one materializing action
+    // of the lazy chain, after which the frees are safe
     val sym = edges.select(col("u").as("s"), col("v").as("t"))
       .unionAll(edges.select(col("v").as("s"), col("u").as("t")))
       .localCheckpoint(false)
@@ -1617,23 +1616,18 @@ object Relational {
       .orderBy(md5(concat(lit("bc:"), col("node").cast("string"))), col("node"))
       .limit(BcSeeds)
       .select(col("node").as("s"))
-    var cur = sym.join(broadcast(seeds), "s")
-      .groupBy(col("s"), col("t")).agg(count(lit(1)).as("sigma"))
-      .withColumn("d", lit(1L))
-      .localCheckpoint(false)
-    var levels = List(cur)
     val edge = sym.select(col("s").as("mid"), col("t").as("w"))
-    (2 to BcHops).foreach { h =>
-      val visited = levels.reduce(_ unionByName _).select(col("s"), col("t"))
-      val next = cur.join(edge, cur("t") === edge("mid"))
+    val levels = graft.Iterate.rounds(sym.join(broadcast(seeds), "s")
+        .groupBy(col("s"), col("t")).agg(count(lit(1)).as("sigma"))
+        .withColumn("d", lit(1L)), BcHops - 1) { (built, r) =>
+      val cur = built.head
+      val visited = built.reduce(_ unionByName _).select(col("s"), col("t"))
+      cur.join(edge, cur("t") === edge("mid"))
         .filter(col("s") =!= col("w"))
         .groupBy(col("s"), col("w")).agg(sum(col("sigma")).as("sigma"))
         .withColumnRenamed("w", "t")
         .join(visited, Seq("s", "t"), "left_anti")
-        .withColumn("d", lit(h.toLong))
-        .localCheckpoint(false)
-      levels = next :: levels
-      cur = next
+        .withColumn("d", lit(r + 1L))
     }
     val ap = levels.reduce(_ unionByName _)
     val sv = ap.select(col("s"), col("t").as("node"), col("d").as("d1"),
@@ -1793,11 +1787,8 @@ object Relational {
   private def seededReachLevels(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, List[DataFrame]) = {
     val edges = coSupplyEdges(s, dir)
-    // r13: LAZY checkpoints throughout — the loop has a FIXED hop
-    // count and reads no per-round scalar, so nothing forces per-round
-    // jobs; each LogicalRDD still keeps the plans flat while the
-    // persists happen inside the caller's single materializing action
-    // (the graph_bfs recipe — the loop was scheduler-bound).
+    // lazy checkpoints throughout: the persists happen inside the
+    // caller's single materializing action
     val sym = edges.select(col("u").as("s"), col("v").as("t"))
       .unionAll(edges.select(col("v").as("s"), col("u").as("t")))
       .localCheckpoint(false)
@@ -1806,22 +1797,17 @@ object Relational {
       .orderBy(md5(concat(lit("bc:"), col("node").cast("string"))), col("node"))
       .limit(BcSeeds)
       .select(col("node").as("s"))
-    var cur = sym.join(broadcast(seeds), "s")
-      .select(col("s"), col("t")).distinct()
-      .withColumn("d", lit(1L))
-      .localCheckpoint(false)
-    var levels = List(cur)
     val edge = sym.select(col("s").as("mid"), col("t").as("w"))
-    (2 to BcHops).foreach { h =>
-      val visited = levels.reduce(_ unionByName _).select(col("s"), col("t"))
-      val next = cur.join(edge, cur("t") === edge("mid"))
+    val levels = graft.Iterate.rounds(sym.join(broadcast(seeds), "s")
+        .select(col("s"), col("t")).distinct()
+        .withColumn("d", lit(1L)), BcHops - 1) { (built, r) =>
+      val cur = built.head
+      val visited = built.reduce(_ unionByName _).select(col("s"), col("t"))
+      cur.join(edge, cur("t") === edge("mid"))
         .filter(col("s") =!= col("w"))
         .select(col("s"), col("w").as("t")).distinct()
         .join(visited, Seq("s", "t"), "left_anti")
-        .withColumn("d", lit(h.toLong))
-        .localCheckpoint(false)
-      levels = next :: levels
-      cur = next
+        .withColumn("d", lit(r + 1L))
     }
     (sym, nodes, seeds, levels)
   }
@@ -1946,21 +1932,12 @@ object Relational {
     // two), each block stored once (the union re-reads, never copies),
     // and the blocks ARE the result (freed by the caller's sweep, not
     // in-loop).
-    // r13: the checkpoints are LAZY — the loop has a FIXED round count
-    // and reads no per-round scalar, so nothing forces per-round jobs;
-    // each LogicalRDD still truncates the dataset-level lineage (flat
-    // plans) while the persist happens inside the single final action
-    // instead of 8 sequential construction jobs (the loop was
-    // scheduler-bound, not compute-bound).
-    var frontiers = List(src.localCheckpoint(false))
-    (1 to 6).foreach { h =>
-      val visited = frontiers.reduce(_ unionByName _)
-      val next = e2.join(frontiers.head.select(col("node").as("src")), "src")
+    val frontiers = graft.Iterate.rounds(src, 6) { (built, h) =>
+      val visited = built.reduce(_ unionByName _)
+      e2.join(built.head.select(col("node").as("src")), "src")
         .select(col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
         .withColumn("hop", lit(h.toLong))
-        .localCheckpoint(false)
-      frontiers = next :: frontiers
     }
     // e2's blocks are swept by the caller (freeing a LAZY checkpoint
     // before its first materialization would break it)
@@ -2153,27 +2130,15 @@ object Relational {
   /** Shared labelprop state: (undirected edge list, final label table). */
   private def labelpropState(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val edges = coSupplyEdges(s, dir)
-    // r13: LAZY checkpoints (the graph_bfs recipe) — fixed 3 rounds,
-    // no per-round scalar, so the whole chain materializes inside the
-    // consumer's single action instead of 5 construction jobs. The
-    // in-loop frees are gone with the eagerness (freeing a lazy
-    // checkpoint pre-materialization would break it); the node-sized
-    // blocks are swept by the caller's per-query sweep.
+    // the lazy chain materializes inside the consumer's single action;
+    // the node-sized blocks are swept by the caller's per-query sweep
     val e2 = edges.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(false)
-    var lbl = e2.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint(false)
-    (1 to 3).foreach { _ =>
-      val next = e2.join(lbl.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"), col("lbl")).agg(count(lit(1)).as("c"))
-        // argmax by (count desc, label asc): max of (c, -lbl) then negate
-        .groupBy(col("node"))
-        .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("best"))
-        .select(col("node"), (-col("best.nl")).as("lbl"))
-        .localCheckpoint(false)
-      lbl = next
-    }
+    val lbl = graft.Iterate.rounds(e2.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node")), 3) { (lbls, _) =>
+      GraphConvergence.labelpropRound(e2, lbls.head)
+    }.head
     (edges, lbl)
   }
 
@@ -2290,23 +2255,14 @@ object Relational {
     val edges = coSupplyEdges(s, dir)
     val sym = edges.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-    // r13: LAZY checkpoints (the graph_bfs recipe) — fixed 4 rounds,
-    // no per-round scalar; blocks swept by the caller's per-query
-    // sweep instead of in-loop frees.
-    var alive = sym.select(col("src").as("node")).distinct()
-      .localCheckpoint(false)
-    var lastDeg: DataFrame = null
-    for (_ <- 1 to 4) {
-      val deg = sym
-        .join(alive.select(col("node").as("src")), "src")
-        .join(alive.select(col("node").as("dst")), "dst")
+    // blocks swept by the caller's per-query sweep
+    graft.Iterate.rounds(sym.select(col("src").as("node")).distinct(), 4) { (alive, _) =>
+      sym
+        .join(alive.head.select(col("node").as("src")), "src")
+        .join(alive.head.select(col("node").as("dst")), "dst")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val next = deg.filter(col("deg") >= k).select(col("node"), col("deg"))
-        .localCheckpoint(false)
-      lastDeg = next
-      alive = next.select(col("node"))
-    }
-    lastDeg.orderBy(col("node"))
+        .filter(col("deg") >= k).select(col("node"), col("deg"))
+    }.head.orderBy(col("node"))
   }
 
   val graphKcoreSql: String = {
@@ -2407,23 +2363,6 @@ object Relational {
     * order, a completely different algorithm arriving at the same
     * rows. Edge weights are integers; no IEEE anywhere.
     */
-  /** Eager local checkpoint that ALSO resets Catalyst's size
-    * statistics. `localCheckpoint` preserves the origin plan's
-    * BigInt sizeInBytes, and an iterative loop whose per-round plan
-    * joins k copies of the previous round multiplies that number by
-    * k each round — the digits grow GEOMETRICALLY, and by round ~20
-    * the optimizer's SizeInBytesOnlyStatsPlanVisitor spends minutes
-    * inside BigInteger.multiplyToomCook3 (measured: graph_mst round 2
-    * hung >500 s in stats estimation with a 36-row frame; jstack
-    * pinned the main thread in BigInteger.multiply under visitJoin).
-    * Re-wrapping the checkpointed RDD in a fresh LogicalRDD drops the
-    * poisoned stats to the default, bounding every round's estimate.
-    * The wrapper's Row↔InternalRow hop is linear in the frame — all
-    * callers are alphabet/graph-bounded loop frames.
-    */
-  private def ckptReset(df: DataFrame): DataFrame =
-    graft.Caches.checkpointReset(df)
-
   /** Connected-component labels of a (id_a, id_b) pair set by
     * hash-min WITH pointer jumping: each iteration takes the min of
     * (own label, neighbors' labels, label-of-label), so long chains
@@ -2442,18 +2381,6 @@ object Relational {
     // so its own checkpoint bought nothing (one job per call removed).
     val eb = pairs.select(col("id_a").as("x"), col("id_b").as("y"))
       .unionAll(pairs.select(col("id_b").as("x"), col("id_a").as("y")))
-    // r13 (verdict #4): one job per materialization — the label frame
-    // is LAZILY local-checkpointed and the convergence sum computed by
-    // the SAME action that materializes the blocks (the r12 shape paid
-    // an eager-checkpoint job PLUS a labelSum job per iteration; the
-    // loop is scheduler-bound, not compute-bound). The wrapper rebuild
-    // is the ckptReset stats-reset, applied after materialization.
-    def ckptWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val ck = df.localCheckpoint(false)
-      val s = Option(ck.agg(sum(col("p").cast("decimal(38,0)"))).first.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-      (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), s)
-    }
     // one neighbor-min + pointer-jump step as a PLAN over the current
     // labels (r12 note: composing TWO steps per materialization was
     // tried and measured WORSE — the inner step's three in-plan
@@ -2477,30 +2404,17 @@ object Relational {
       nbrRows.unionAll(jmpRows).unionAll(selfRows)
         .groupBy(col("x")).agg(min(col("cand")).as("p"))
     }
-    var (p, prev) = ckptWithSum(
-      eb.groupBy(col("x")).agg(min(col("y")).as("my"))
-        .select(col("x"), least(col("x"), col("my")).as("p")))
-    var it = 0
-    var conv = false
-    // 20 + 1: the sum-fixpoint needs a CONFIRMING no-change round, so
-    // the full 20-round diameter budget stays usable even when the
-    // last label change lands exactly on round 20 (see Dedup.clusters)
-    while (it < 21 && !conv) {
-      val (upd, cur) = ckptWithSum(step(p))
-      graft.Caches.free(p)
-      p = upd
-      conv = cur.compareTo(prev) == 0
-      prev = cur
-      it += 1
-    }
-    // Pointer jumping converges in O(log diameter) rounds — 20 covers
-    // diameter ~2^20, far beyond the catalog-bounded graphs here. If
-    // the cap is ever hit without the sum-fixpoint, the labels are
-    // WRONG (components would merge under stale labels downstream),
-    // so fail loudly rather than emit a silently incorrect forest.
-    if (!conv) throw new IllegalStateException(
-      s"relabelJump: no fixpoint after $it rounds (label sum $prev)")
-    p.select(col("x").as("id"), col("p").as("cluster"))
+    // every frame is stats-reset (the cadence graph_mst's plans were
+    // certified with). 20 + 1 rounds: pointer jumping converges in
+    // O(log diameter) rounds, so 20 covers diameter ~2^20, plus the
+    // confirming round. Capped labels are WRONG (components would merge
+    // under stale labels downstream), so the cap throws.
+    graft.Iterate.fixpoint(
+        eb.groupBy(col("x")).agg(min(col("y")).as("my"))
+          .select(col("x"), least(col("x"), col("my")).as("p")),
+        21, resetEvery = 1)(step)(graft.Iterate.unchanged(graft.Iterate.labelSum("p")))
+      .orThrow("relabelJump")
+      .select(col("x").as("id"), col("p").as("cluster"))
   }
 
   def graphMst(s: SparkSession, dir: String): DataFrame = {
@@ -2521,12 +2435,12 @@ object Relational {
     // forest.
     // r12: accepted edges ACCUMULATE as the list of per-round picked
     // checkpoints and union once at the end — the old per-round
-    // `forest = ckptReset(forest union picked)` re-materialized the
+    // `forest = checkpointReset(forest union picked)` re-materialized the
     // whole growing forest every round (one job + one block rewrite per
     // round for rows already durably checkpointed in `picked`). The
     // picked frames stay alive until the caller's sweep.
-    var we = ckptReset(edges.select(col("u"), col("v"), col("shared"),
-      col("u").as("cu"), col("v").as("cv")))
+    var we = graft.Caches.checkpointReset(edges.select(col("u"), col("v"),
+      col("shared"), col("u").as("cu"), col("v").as("cv")))
     val forests = scala.collection.mutable.Buffer.empty[DataFrame]
     var done = false
     var round = 0
@@ -2535,7 +2449,7 @@ object Relational {
       else {
         val cand = struct((-col("shared")).as("neg"), col("u"), col("v"),
           col("cu"), col("cv"))
-        val picked = ckptReset(we
+        val picked = graft.Caches.checkpointReset(we
           .select(explode(array(col("cu"), col("cv"))).as("comp"), cand.as("e"))
           .groupBy(col("comp")).agg(min(col("e")).as("b"))
           .select(col("b.u").as("u"), col("b.v").as("v"),
@@ -2545,7 +2459,7 @@ object Relational {
         forests += picked.select(col("u"), col("v"), col("shared"))
         val relabel = relabelJump(
           picked.select(col("cu").as("id_a"), col("cv").as("id_b")))
-        val updated = ckptReset(we
+        val updated = graft.Caches.checkpointReset(we
           .join(broadcast(relabel.select(col("id").as("cu"),
             col("cluster").as("ncu"))), Seq("cu"), "left")
           .join(broadcast(relabel.select(col("id").as("cv"),
@@ -3264,18 +3178,14 @@ object Relational {
       .localCheckpoint(false)
     val src = edges.agg(min(col("u")).as("node"))
       .withColumn("dist", lit(0L))
-    // r13: LAZY checkpoints (the graph_bfs recipe) — fixed 4 rounds,
-    // no per-round scalar; blocks swept by the caller's sweep.
-    var dist = src.localCheckpoint(false)
-    (1 to 4).foreach { _ =>
-      val relaxed = e2.join(dist.withColumnRenamed("node", "src"), "src")
+    // blocks swept by the caller's sweep
+    graft.Iterate.rounds(src, 4) { (dists, _) =>
+      val dist = dists.head
+      e2.join(dist.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         .unionByName(dist)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      val next = relaxed.localCheckpoint(false)
-      dist = next
-    }
-    dist.orderBy(col("node"))
+    }.head.orderBy(col("node"))
   }
 
   val graphSsspSql: String = {

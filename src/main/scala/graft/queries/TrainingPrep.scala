@@ -601,8 +601,9 @@ object TrainingPrep {
     * Determinism: counts are exact integers; each excess is one
     * row-local ln of an exact rational; selection is a sign test;
     * sel_mass is the position-ordered fold (the [[mooreLewis]]
-    * discipline); sel_share an exact integer ratio; (share DESC,
-    * doc_id) total order.
+    * discipline), emitted rounded to 4 decimals like [[dsirSelect]]'s
+    * ln sums; sel_share an exact integer ratio; (share DESC, doc_id)
+    * total order.
     *
     * Scale shape: identical to [[mooreLewis]] — the token→vocabulary
     * joins are stats-driven (broadcast at fixture scale, shuffle
@@ -632,9 +633,9 @@ object TrainingPrep {
         count(lit(1)).as("n_tokens"))
       .withColumn("n_selected", aggregate(col("arr"), lit(0L),
         (a, x) => a + when(x.getField("ex") > 0.0, 1L).otherwise(0L)))
-      .withColumn("sel_mass", aggregate(col("arr"), lit(0.0),
+      .withColumn("sel_mass", round(aggregate(col("arr"), lit(0.0),
         (a, x) => a + when(x.getField("ex") > 0.0, x.getField("ex"))
-          .otherwise(lit(0.0))))
+          .otherwise(lit(0.0))), 4))
       .withColumn("sel_share",
         col("n_selected").cast("double") / col("n_tokens").cast("double"))
       .select(col("doc_id"), col("lang"), col("n_tokens"),
@@ -661,8 +662,8 @@ object TrainingPrep {
       |  CAST(SUM(CASE WHEN ex > 0.0e0 THEN 1 ELSE 0 END) AS BIGINT) AS n_selected,
       |  CAST(SUM(CASE WHEN ex > 0.0e0 THEN 1 ELSE 0 END) AS DOUBLE) /
       |    CAST(COUNT(*) AS DOUBLE) AS sel_share,
-      |  list_reduce(list(CASE WHEN ex > 0.0e0 THEN ex ELSE 0.0e0 END ORDER BY pos),
-      |    (x, y) -> x + y) AS sel_mass
+      |  round(list_reduce(list(CASE WHEN ex > 0.0e0 THEN ex ELSE 0.0e0 END ORDER BY pos),
+      |    (x, y) -> x + y), 4) AS sel_mass
       |FROM lp GROUP BY doc_id, lang ORDER BY sel_share DESC, doc_id LIMIT 25""".stripMargin
 
   /** DSIR data selection (Xie et al. 2023, "Data Selection for
@@ -686,7 +687,10 @@ object TrainingPrep {
     * ([[CurationQueries.textPerplexity]] discipline, position order
     * with bigrams indexed after unigrams); the Gumbel key is one
     * row-local double chain from a 48-bit md5 uniform (the
-    * [[ppsSample]] hash convention). (g DESC, doc_id) total order.
+    * [[ppsSample]] hash convention). log_w and g are emitted rounded
+    * to 4 decimals, the woe/pmi convention for ln outputs (the JVM's
+    * log and DuckDB's ln can differ in the last ulp), and the top-k
+    * order is (rounded g DESC, doc_id).
     *
     * Scale shape — the DSIR selling point reproduced: the two count
     * tables are ≤`buckets` rows by construction, so they BROADCAST
@@ -747,7 +751,8 @@ object TrainingPrep {
         count(lit(1)).as("n_feats"))
       .withColumn("log_w",
         aggregate(col("arr"), lit(0.0), (acc, x) => acc + x.getField("lp")))
-      .withColumn("gkey", col("log_w") + (-log(-log(u))))
+      .withColumn("gkey", round(col("log_w") + (-log(-log(u))), 4))
+      .withColumn("log_w", round(col("log_w"), 4))
       .select(col("doc_id"), col("lang"), col("n_feats"), col("log_w"), col("gkey"))
       .orderBy(col("gkey").desc, col("doc_id"))
       .limit(k)
@@ -776,10 +781,10 @@ object TrainingPrep {
       |w AS (SELECT doc_id, lang, COUNT(*) AS n_feats,
       |    list_reduce(list(lp ORDER BY pos), (x, y) -> x + y) AS log_w
       |  FROM lp GROUP BY doc_id, lang)
-      |SELECT doc_id, lang, n_feats, log_w,
-      |  log_w + (-ln(-ln(
+      |SELECT doc_id, lang, n_feats, round(log_w, 4) AS log_w,
+      |  round(log_w + (-ln(-ln(
       |    (CAST(concat('0x', substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 12))
-      |       AS BIGINT) + 0.5) / 281474976710656.0))) AS gkey
+      |       AS BIGINT) + 0.5) / 281474976710656.0))), 4) AS gkey
       |FROM w ORDER BY gkey DESC, doc_id LIMIT 25""".stripMargin
 
   /** Two-phase quality-annealed token schedule — the "mid-training

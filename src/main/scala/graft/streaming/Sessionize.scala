@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the stateless extraction plane (SURVEY ST7 notes the reference has
   * no event-time state; this is our documented extension).
   *
-  * Works identically on a bounded Dataset (tests) and a streaming one
-  * (with GroupStateTimeout for state cleanup).
+  * The state function also handles processing-time timeouts, so a
+  * streaming caller that configures GroupStateTimeout gets state
+  * cleanup; [[sessionsOf]] runs it over a bounded Dataset.
   */
 object Sessionize {
 
@@ -50,23 +51,13 @@ object Sessionize {
     cur.foreach { s =>
       state.update(s)
       // timeout registration is only legal under a configured
-      // GroupStateTimeout (the streaming entry point); the batch/test
-      // entry runs with NoTimeout where this throws — ignored there
+      // GroupStateTimeout (a streaming caller); the bounded entry runs
+      // with NoTimeout where this throws — ignored there
       try state.setTimeoutDuration(gapMs) catch {
         case _: UnsupportedOperationException => case _: IllegalStateException =>
       }
     }
     closed.iterator
-  }
-
-  /** Streaming entry: same state function with processing-time timeouts
-    * wired so idle users' open sessions close and state is reclaimed.
-    */
-  def sessionsStream(spark: SparkSession, ds: Dataset[Event], gapMs: Long): Dataset[Session] = {
-    import spark.implicits._
-    ds.groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(
-        updateSessions(gapMs))
   }
 
   /** Batch/testing entry: run the same state function over a bounded

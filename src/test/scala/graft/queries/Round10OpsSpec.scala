@@ -366,7 +366,10 @@ class Round10OpsSpec extends SparkSpec {
       }
       val u = (java.lang.Long.parseLong(md5hex(s"dsir:$id").take(12), 16)
         .toDouble + 0.5) / 281474976710656.0
-      (id, lang, bs.size.toLong, s, s + (-StrictMath.log(-StrictMath.log(u))))
+      // both outputs are rounded to 4 decimals (Spark's HALF_UP round)
+      def r4(x: Double): Double =
+        BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      (id, lang, bs.size.toLong, r4(s), r4(s + (-StrictMath.log(-StrictMath.log(u)))))
     }
     val expected = scored.sortBy(e => (-e._5, e._1)).take(25)
     val got = TrainingPrep.dsirSelect(spark, sf).collect()

@@ -153,8 +153,9 @@ class Round11OpsSpec extends SparkSpec {
       var mass = 0.0
       ex.foreach(e => if (e > 0.0) mass += e)
       val nSel = ex.count(_ > 0.0).toLong
-      (id, lang, tv.size.toLong, nSel,
-        nSel.toDouble / tv.size.toDouble, mass)
+      // sel_mass is emitted rounded to 4 decimals (Spark's HALF_UP round)
+      (id, lang, tv.size.toLong, nSel, nSel.toDouble / tv.size.toDouble,
+        BigDecimal(mass).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }
     val expected = scored.sortBy(e => (-e._5, e._1)).take(25)
     val got = TrainingPrep.pipelineRho(spark, sf).collect()
