@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -139,14 +140,25 @@ object Bench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
+    // Generated classes Spark compiled during each entry's timed runs
+    // (BENCH_FULL.json `compiles`): a class the JVM-wide codegen cache
+    // still holds is not compiled again, so a nonzero count is
+    // compile time inside the timing.
+    val compiles = scala.collection.mutable.LinkedHashMap[String, Long]().withDefaultValue(0L)
+    val byName = selected.toMap
+    def timedRuns(name: String): Double = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try (1 to k).map(_ => once(byName(name))).min
+      finally compiles(name) += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
     val firstPass: Seq[(String, Either[String, Double])] =
-      selected.zipWithIndex.map { case ((name, fn), idx) =>
+      selected.zipWithIndex.map { case ((name, _), idx) =>
         if (idx % canaryEvery == 0) { cleanerTick(); canaries += ((idx, canary())) }
         starts += ((name, offset()))
         // A query that throws must surface as an error entry, never as a
         // (tiny) timing — a broken query silently reading as "fast" would
         // corrupt the round-over-round signal.
-        try name -> Right((1 to k).map(_ => once(fn)).min)
+        try name -> Right(timedRuns(name))
         catch { case e: Throwable =>
           val msg = (e.getClass.getSimpleName + ": " +
             String.valueOf(e.getMessage))
@@ -162,7 +174,6 @@ object Bench {
     // under different machine state, restores the real time). Both
     // readings are emitted under "requeue" so the forensics are in the
     // artifact, not reconstructed from the next round's diff.
-    val byName = selected.toMap
     val requeue = scala.collection.mutable.ArrayBuffer[(String, Double, Double)]()
     val results: Seq[(String, Either[String, Double])] = firstPass.map {
       case (name, Right(t))
@@ -170,7 +181,7 @@ object Bench {
         cleanerTick()
         starts += ((name + "#rq", offset()))
         val again =
-          try Some((1 to k).map(_ => once(byName(name))).min)
+          try Some(timedRuns(name))
           catch { case _: Throwable => None } // keep the first reading
           finally Caches.sweep(spark, keepRdds)
         again.foreach(t2 => requeue += ((name, t, t2)))
@@ -205,6 +216,8 @@ object Bench {
       .mkString("{", ",", "}")
     val startsJson = starts.map { case (n, o) => "\"" + n + "\":" + fmt(o) }
       .mkString("{", ",", "}")
+    val compilesJson = compiles.map { case (n, c) => "\"" + n + "\":" + c }
+      .mkString("{", ",", "}")
     // Printed line = the DRIVER CONTRACT (r12 verdict item 1): short —
     // total first (head-capped excerpts), then k/n/errs/requeue, then the
     // `queries` map, sf, and the total again as value_tail so a
@@ -218,7 +231,7 @@ object Bench {
     // BENCH_FULL.json in the repo root is the complete, uncapped record
     // of the most recent bench run on this machine: the contract line's
     // fields plus the forensic series the printed line must not carry.
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","k":$k,"n_queries":${ok.size},"n_errs":${results.count(_._2.isLeft)},"n_requeued":${requeue.size},$canaryJson,"errs":$errs,"requeue":$rqJson,"queries":$qs,"t0_epoch":$t0Epoch,"starts":$startsJson,"sf":"$sfDir","value_tail":${fmt(total)}}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","k":$k,"n_queries":${ok.size},"n_errs":${results.count(_._2.isLeft)},"n_requeued":${requeue.size},$canaryJson,"errs":$errs,"requeue":$rqJson,"queries":$qs,"t0_epoch":$t0Epoch,"starts":$startsJson,"compiles":$compilesJson,"sf":"$sfDir","value_tail":${fmt(total)}}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_FULL.json"), full + "\n")
     catch { case _: Throwable => () } // read-only cwd must not fail the run

@@ -31,7 +31,9 @@ object Caches {
     * would evict ancestors shared with live frames (e.g. a lazy
     * localCheckpoint not yet materialized, or a cached RDD two frames
     * derive from), and checkpointed RDDs cannot recompute evicted
-    * blocks.
+    * blocks. "Not yet materialized" means its final stage: under AQE
+    * (the runtime default) building a lazy checkpoint already ran the
+    * shuffle and broadcast stages below it ([[Iterate.rounds]]).
     */
   def free(df: DataFrame): Unit = {
     import org.apache.spark.storage.StorageLevel

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions.{col, sum}
   *     newer one has landed and the test no longer looks at it, and the
   *     result carries `rounds` and `converged`.
   *   - [[rounds]]: a fixed number of steps as a chain of LAZY
-  *     checkpoints, materialized by the consumer's first action.
+  *     checkpoints, materialized by the consumer's first action (under
+  *     AQE each round's earlier stages run as it is built; see
+  *     [[rounds]]).
   *
   * A fixpoint whose frames join copies of themselves also resets
   * Catalyst's size statistics at a caller-chosen cadence
@@ -107,8 +109,16 @@ object Iterate {
       .map(BigDecimal(_)).getOrElse(BigDecimal(0))
 
   /** `n` steps from `init` as a chain of lazy local checkpoints: no
-    * round reads a scalar, so none launches a job of its own, while
-    * each LogicalRDD still keeps the next round's plan flat. `step`
+    * round reads a scalar, and each LogicalRDD keeps the next round's
+    * plan flat. Building a lazy checkpoint is still not free: with
+    * adaptive execution off it runs the round's broadcasts (a broadcast
+    * join builds its relation when its RDD is built), and under AQE
+    * (the runtime default) every non-final shuffle and broadcast stage
+    * of the round's plan. A 3-round groupBy + broadcast-join chain
+    * launched 6 jobs at construction under AQE against 3 with it off,
+    * and graph_labelprop 16 at construction and 6 in its action against
+    * 0 and 2 (seed-1 benchmark tables). Only the final stage waits for
+    * the consumer's action. `step`
     * sees the frames so far, newest first, and the round number
     * (1..n). Returns every frame, newest first. The frames are the
     * consumer's to free, and only after its action has run: freeing a

@@ -187,6 +187,12 @@ object PlanBudget {
     sb.append("per-stage job submission would make counts nondeterministic).\n")
     sb.append("`jobs` counts the Spark jobs launched at\n")
     sb.append("construction time (eager checkpoints / bounded driver samples) —\n")
+    sb.append("with AQE off, where a LAZY checkpoint runs only its broadcasts. Under\n")
+    sb.append("AQE (the runtime default) building a lazy checkpoint runs every\n")
+    sb.append("non-final shuffle and broadcast stage of its plan, so a lazy-round\n")
+    sb.append("query that reads `jobs 0` here launches jobs at construction at\n")
+    sb.append("runtime (graph_labelprop: 16 at construction and 6 in its action,\n")
+    sb.append("against 0 and 2 with AQE off). The column pins\n")
     sb.append("the cost of iterative queries whose staged rounds never appear in\n")
     sb.append("the returned static plan (eval_bt's five MM rounds, rec_als's four\n")
     sb.append("half-steps). Table schemas are inferred before the capture, so\n")

@@ -29,6 +29,10 @@ object Verify {
     val status = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
+      // begin/end lines on stderr, where Spark logs too: a warning the
+      // query's jobs raise (a BlockManager "already exists" on a block
+      // two tasks computed, say) lands between its query's two lines
+      System.err.println(s"[verify] begin $name")
       val t0 = System.nanoTime()
       val result = try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -44,6 +48,7 @@ object Verify {
       // bound executor storage across the 160+ query run: free every
       // per-query cache/checkpoint, keep the two shared indexes
       Caches.sweep(spark, keepRdds)
+      System.err.println(s"[verify] end $name ${result._2}")
       result
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,8 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes, UnaryExpression, BinaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes, InSet, LeafExpression, Literal, UnaryExpression, BinaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType}
@@ -867,4 +869,41 @@ object NativeExpressions {
   def hilbertIndex(x: Column, y: Column, bits: Int): Column =
     GraftColumnBridge.column(
       HilbertIndex(GraftColumnBridge.expression(x), GraftColumnBridge.expression(y), bits))
+
+  /** A query value that generated code reads from its `references`
+    * array. Whole-stage codegen writes a numeric literal into the Java
+    * source, so a plan that differs from a compiled one only in such a
+    * value compiles a new class; this leaf is not foldable, so
+    * ConstantFolding keeps it a reference and the code stays the same.
+    */
+  case class QueryValue(value: Any, dataType: DataType) extends LeafExpression {
+    override def foldable: Boolean = false
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = value
+    override def toString: String = s"value($value)"
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val javaType = CodeGenerator.javaType(dataType)
+      val ref = ctx.addReferenceObj("value", value, CodeGenerator.boxedType(dataType))
+      val read = if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${javaType}Value()" else ref
+      ev.copy(code = code"", isNull = FalseLiteral, value = JavaCode.expression(read, dataType))
+    }
+  }
+
+  /** `v` (not null) as a [[QueryValue]]: a number or flag the plan compares against. */
+  def queryValue(v: Any): Column = {
+    val l = Literal(v)
+    GraftColumnBridge.column(QueryValue(l.value, l.dataType))
+  }
+
+  /** `c IN values` as an `InSet`, whatever the number of values. Spark
+    * builds an `In` of literals for up to ten values, which generates
+    * one comparison per value; an `InSet` generates one lookup in a set
+    * passed by reference, and is pushed to a file scan as `In`. The set
+    * is a `HashSet` at every size: the code casts the reference to the
+    * set's class, and `toSet` picks a different class for one to four
+    * values.
+    */
+  def isInSet(c: Column, values: Iterable[String]): Column =
+    GraftColumnBridge.column(InSet(GraftColumnBridge.expression(c),
+      scala.collection.immutable.HashSet.from(values.iterator.map(v => UTF8String.fromString(v): Any))))
 }

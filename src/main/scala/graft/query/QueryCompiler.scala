@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions
+import graft.plans.NativeExpressions
 
 /** The structured-query plane (SURVEY §2.6, Q1–Q13): typed constraints →
   * field resolution → weighted relevance scoring + facets, compiled to
@@ -17,7 +18,8 @@ import graft.functions.TextFunctions
   * fallback (Q13), ranked + faceted execution (O1/A2).
   *
   * Scale: constraints filter the KgValue table on (field, key) — both
-  * pushed to the Parquet scan — then one groupBy(doc_id) shuffle scores
+  * pushed to the Parquet scan — and, unioned with one row per document
+  * carrying its free-text score, one groupBy(doc_id) shuffle scores
   * and enforces all-constraints-matched. Facets are per-field partial
   * aggregations over the (small) hit set. Small inputs take one task
   * instead: when Catalyst's size estimate of an op's inputs is at most
@@ -30,6 +32,19 @@ import graft.functions.TextFunctions
   * Above the threshold, or with it at -1, the plan is the
   * multi-partition shape described per op below, and so is the part
   * of it fed by a multi-file input.
+  *
+  * Codegen: the Java source Spark generates for an op depends on the
+  * op's kind only. Query values ride as references — strings and typed
+  * literal arrays and maps, key and token sets as `InSet`s, and numbers
+  * the plan compares against as [[NativeExpressions.queryValue]] —
+  * never as inlined literals, `In` lists of one comparison per value,
+  * constant `rlike` patterns or one union branch per constraint. So
+  * each op kind compiles once, and a stream of queries that differ in
+  * their values, or in how many constraints, variants or terms they
+  * carry, reuses the classes in Spark's JVM-wide codegen cache (100
+  * entries) instead of recompiling them. Model parameters (k1, b, μ,
+  * the bm25f head) and sizes (limit, facet k) stay literals: a new
+  * value of one of them compiles once more.
   */
 object QueryCompiler {
 
@@ -44,9 +59,8 @@ object QueryCompiler {
     * over one task per file, and the measured ops got slower.
     * The estimate is taken on the analyzed plans, which every DataFrame
     * already has: an optimized plan would cost an optimizer pass per
-    * input (a whole search plan when facets gets its hits), and for
-    * these inputs (the KG index, table scans, a limit) both give the
-    * same size.
+    * input, and for the KG index and table scans both give the same
+    * size.
     */
   private def small(inputs: DataFrame*): Seq[DataFrame] = {
     val limit = inputs.head.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
@@ -121,58 +135,81 @@ object QueryCompiler {
     * constraint satisfied on ≥1 field (Q4 AtLeastOneField, clause
     * combination = filter) and free-text token overlap added to the
     * score (Q13, filters-to-shoulds Q9).
+    *
+    * One plan for every query: the KG rows that satisfy some constraint
+    * (each tagged with the constraints it satisfies, looked up in a map
+    * literal) and one row per document (its free-text score) are
+    * grouped by doc_id. With constraints and no free text a filter
+    * drops the document rows before they are tokenized; their scan
+    * stays in the plan.
     */
   def search(kgIn: DataFrame, docsIn: DataFrame, docIdCol: String, textCol: String,
              spec: QuerySpec, catalog: Catalog): DataFrame = {
-    val Seq(kg, docs) = small(kgIn, docsIn)
-    val perConstraint = spec.constraints.zipWithIndex.map { case (c, i) =>
-      val tm = catalog.typeFieldMappings.getOrElse(c.ctype, TypeMapping(Seq(c.ctype -> 1.0)))
-      val variants = catalog.expand(c.ctype, c.value)
-      val fieldWeight = tm.fields
-        .map { case (f, w) => when(col("field") === f, lit(w)) }
-        .reduce((a, b) => coalesce(a, b))
-      kg.filter(col("field").isin(tm.fields.map(_._1): _*) &&
-          col("key").isin(variants: _*))
-        .select(col("doc_id"), lit(i).as("cid"), fieldWeight.as("w"))
+    // field -> key -> the (constraint, field weight) pairs that a KG row
+    // with that field and key satisfies; a field listed twice in one
+    // mapping keeps its first weight
+    val satisfies = (for {
+      (c, i) <- spec.constraints.zipWithIndex
+      (f, w) <- catalog.typeFieldMappings.getOrElse(c.ctype, TypeMapping(Seq(c.ctype -> 1.0)))
+        .fields.distinctBy(_._1)
+      v <- catalog.expand(c.ctype, c.value)
+    } yield (f, v, (i, w))).groupBy(_._1).map { case (f, xs) =>
+      f -> xs.groupBy(_._2).map { case (v, ys) => v -> ys.map(_._3) }
     }
-    // no constraints = the Q13 free-text-only mode: every doc matches
-    // with kg_score 0 (an empty reduce would throw before planning)
-    val matched =
-      if (perConstraint.isEmpty)
-        docs.select(col(docIdCol).cast("string").as("doc_id"),
-          lit(0L).as("matched"), lit(0.0).as("kg_score"))
-      else perConstraint.reduce(_.unionByName(_))
-        .groupBy(col("doc_id"))
-        .agg(countDistinct(col("cid")).as("matched"),
-          sum(col("w")).cast("double").as("kg_score"))
-        .filter(col("matched") === spec.constraints.length)
-
-    val scored = spec.freeText match {
-      case Some(q) =>
-        // tokenize the QUERY exactly like the documents ([a-z0-9]+):
-        // \W+ keeps underscores, which the doc tokenizer splits — an
-        // underscore-bearing query token could otherwise never match
-        val qTokens = "[a-z0-9]+".r
-          .findAllIn(q.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
-        val ftScore = size(array_intersect(
-          array_distinct(TextFunctions.tokens(col(textCol))),
-          array(qTokens.map(lit): _*))).cast("double")
-        matched.join(docs.select(col(docIdCol).cast("string").as("doc_id"),
-            ftScore.as("ft_score")), "doc_id")
-          .withColumn("score", col("kg_score") + col("ft_score"))
-      case None => matched.withColumn("score", col("kg_score"))
-    }
-    scored
-      .select(col("doc_id"), col("score"), col("matched"))
+    val kgRows = kgIn
+      .filter(NativeExpressions.isInSet(col("field"), satisfies.keys) &&
+        NativeExpressions.isInSet(col("key"), satisfies.values.flatMap(_.keys)))
+      .select(col("doc_id"),
+        explode(element_at(element_at(typedLit(satisfies), col("field")), col("key"))).as("m"))
+      .select(col("doc_id"), col("m._1").as("cid"), col("m._2").as("w"),
+        lit(null).cast("double").as("ft"), lit(null).cast("boolean").as("doc"))
+    // The documents take part when there is free text to score, or no
+    // constraint (the Q13 free-text-only mode: every doc matches with
+    // kg_score 0); otherwise a filter drops their rows before tokenizing.
+    val withDocs = spec.freeText.isDefined || spec.constraints.isEmpty
+    val docRows = docsIn
+      .filter(NativeExpressions.queryValue(withDocs))
+      .select(col(docIdCol).cast("string").as("doc_id"), lit(null).cast("int").as("cid"),
+        lit(0.0).as("w"),
+        size(array_intersect(array_distinct(TextFunctions.tokens(col(textCol))),
+          typedLit(queryTokens(spec.freeText.getOrElse(""))))).cast("double").as("ft"),
+        lit(true).as("doc"))
+    val Seq(rows) = small(kgRows.unionByName(docRows))
+    rows
+      .groupBy(col("doc_id"))
+      .agg(countDistinct(col("cid")).as("matched"), sum(col("w")).as("kg_score"),
+        max(col("ft")).as("ft_score"), max(col("doc")).as("doc"))
+      // every constraint satisfied, and a document row when documents take part
+      .filter(col("matched") === NativeExpressions.queryValue(spec.constraints.length.toLong) &&
+        (col("doc") || NativeExpressions.queryValue(!withDocs)))
+      .select(col("doc_id"),
+        (col("kg_score") + when(col("doc"), col("ft_score")).otherwise(0.0)).as("score"),
+        col("matched"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(spec.limit)
   }
 
-  /** A2/O4 facets over a hit set: top-k keys per facet field. */
-  def facets(kgIn: DataFrame, hitsIn: DataFrame, fields: Seq[String], k: Int = 20): DataFrame = {
-    val Seq(kg, hits) = small(kgIn, hitsIn)
-    kg.join(hits.select(col("doc_id")), "doc_id")
-      .filter(col("field").isin(fields: _*))
+  /** The distinct tokens of a query, tokenized exactly like the
+    * documents ([a-z0-9]+): \W+ keeps underscores, which the document
+    * tokenizer splits, so an underscore-bearing query token could never
+    * match.
+    */
+  private def queryTokens(q: String): Seq[String] =
+    "[a-z0-9]+".r.findAllIn(q.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
+
+  /** A2/O4 facets over a hit set: top-k keys per facet field.
+    *
+    * `hits` is a hit list (a search's top `limit` rows, say). It is
+    * collected here, and its doc_ids filter the KG as a set: the hits'
+    * plan runs once, as the plan it is (a search's hits reuse the
+    * classes a search compiled), the filter is pushed to a KG file
+    * scan, and the facet plan is the same for every hit list.
+    */
+  def facets(kgIn: DataFrame, hits: DataFrame, fields: Seq[String], k: Int = 20): DataFrame = {
+    val hitIds = hits.collect().flatMap(r => Option(r.getAs[Any]("doc_id")).map(_.toString))
+    val Seq(kg) = small(kgIn)
+    kg.filter(NativeExpressions.isInSet(col("doc_id"), hitIds) &&
+        NativeExpressions.isInSet(col("field"), fields))
       .groupBy(col("field"), col("key"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("rank",
@@ -228,7 +265,7 @@ object QueryCompiler {
   def phraseMatch(c: Column, phrase: String): Column = {
     val toks = phrase.toLowerCase.split("\\W+").filter(_.nonEmpty)
     val rx = toks.map(java.util.regex.Pattern.quote).mkString("(^|[^a-z0-9])", "[^a-z0-9]+", "($|[^a-z0-9])")
-    lower(c).rlike(rx)
+    regexp_instr(lower(c), lit(rx)) > 0
   }
 
   /** Q9 source projection: the compiler's include/exclude select-list
@@ -263,14 +300,13 @@ object QueryCompiler {
   def bm25(docsIn: DataFrame, docIdCol: String, textCol: String, query: String,
            k1: Double = 1.2, b: Double = 0.75, limit: Int = 50): DataFrame = {
     val Seq(docs) = small(docsIn)
-    val qTokens = "[a-z0-9]+".r
-      .findAllIn(query.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
+    val qTokens = queryTokens(query)
     val toks = docs.select(col(docIdCol).as("doc_id"),
       TextFunctions.tokens(col(textCol)).as("t"))
     val lens = toks.select(col("doc_id"), size(col("t")).cast("double").as("dl"))
     val stats = lens.agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
     val tf = toks.select(col("doc_id"), explode(col("t")).as("tok"))
-      .filter(col("tok").isin(qTokens: _*))
+      .filter(NativeExpressions.isInSet(col("tok"), qTokens))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).cast("double").as("tf"))
     val dfs = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
@@ -353,8 +389,7 @@ object QueryCompiler {
             query: String, headLen: Int = 10, wHead: Double = 2.0,
             k1: Double = 1.2, limit: Int = 50): DataFrame = {
     val Seq(docs) = small(docsIn)
-    val qTokens = "[a-z0-9]+".r
-      .findAllIn(query.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
+    val qTokens = queryTokens(query)
     val toks = docs.select(col(docIdCol).as("doc_id"),
       TextFunctions.tokens(col(textCol)).as("t"))
     val lens = toks.select(col("doc_id"),
@@ -364,7 +399,7 @@ object QueryCompiler {
       avg(col("lh")).as("avg_lh"), avg(col("lb")).as("avg_lb"))
     val tf = toks
       .select(col("doc_id"), posexplode(col("t")).as(Seq("pos", "tok")))
-      .filter(col("tok").isin(qTokens: _*))
+      .filter(NativeExpressions.isInSet(col("tok"), qTokens))
       .groupBy(col("doc_id"), col("tok"))
       .agg(sum(when(col("pos") < headLen, 1L).otherwise(0L)).as("tfh"),
         sum(when(col("pos") >= headLen, 1L).otherwise(0L)).as("tfb"))
@@ -418,16 +453,15 @@ object QueryCompiler {
   def qld(docsIn: DataFrame, docIdCol: String, textCol: String,
           query: String, mu: Double = 300.0, limit: Int = 50): DataFrame = {
     val Seq(docs) = small(docsIn)
-    val qTokens = "[a-z0-9]+".r
-      .findAllIn(query.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
+    val qTokens = queryTokens(query)
     val toks = docs.select(col(docIdCol).as("doc_id"),
       TextFunctions.tokens(col(textCol)).as("t"))
     val lens = toks.select(col("doc_id"), size(col("t")).cast("double").as("dl"))
     val ex = toks.select(col("doc_id"), explode(col("t")).as("tok"))
     val stats = ex.agg(count(lit(1)).cast("double").as("ctot"))
-    val cfs = ex.filter(col("tok").isin(qTokens: _*))
+    val cfs = ex.filter(NativeExpressions.isInSet(col("tok"), qTokens))
       .groupBy(col("tok")).agg(count(lit(1)).cast("double").as("cf"))
-    val tf = ex.filter(col("tok").isin(qTokens: _*))
+    val tf = ex.filter(NativeExpressions.isInSet(col("tok"), qTokens))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).cast("double").as("tf"))
     tf.join(broadcast(cfs), "tok")
@@ -437,7 +471,7 @@ object QueryCompiler {
       .agg(sum(col("s")).as("sm"), count(lit(1)).as("matched"))
       .join(lens, "doc_id")
       .withColumn("score",
-        round(col("sm") + lit(qTokens.size.toDouble) * log(lit(mu) / (col("dl") + lit(mu))), 4))
+        round(col("sm") + NativeExpressions.queryValue(qTokens.size.toDouble) * log(lit(mu) / (col("dl") + lit(mu))), 4))
       .select(col("doc_id"), col("score"), col("matched"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(limit)

@@ -119,16 +119,7 @@ class QueryCompilerSpec extends SparkSpec {
     */
   private def sixOps(): Seq[(String, org.apache.spark.sql.DataFrame)] = {
     import graft.queries.KgPipeline
-    val glossary = Seq("op" -> KgPipeline.OpGlossary, "speed" -> KgPipeline.SpeedGlossary,
-      "size" -> KgPipeline.SizeGlossary)
-    val words = glossary.flatMap(_._2) ++ Seq("spark", "stream", "plan", "row")
-    val texts = (1 to 60).map { i =>
-      (i.toLong, (0 until 8).map(j => words((i * (j + 3) + j * j) % words.size)))
-    }
-    val docs = texts.map { case (id, t) => (id, t.mkString(" ")) }.toDF("doc_id", "text")
-    val kg = (for ((id, t) <- texts; tok <- t.distinct; (f, g) <- glossary if g.contains(tok))
-      yield (id.toString, f, tok, tok, "dict", "content", 1.0))
-      .toDF("doc_id", "field", "value", "key", "method", "segment", "confidence")
+    val (_, docs, kg) = glossaryCorpus()
     val cat = KgPipeline.DemoCatalog
     val hits = QueryCompiler.search(kg, docs, "doc_id", "text", KgPipeline.DemoSpec, cat)
     val terms = Seq("spark" -> 1.0, "stream" -> 1.0, "join" -> 0.4).toDF("tok", "w")
@@ -142,6 +133,26 @@ class QueryCompilerSpec extends SparkSpec {
       "bm25Weighted" -> QueryCompiler.bm25Weighted(docs, "doc_id", "text", terms),
       "bm25f" -> QueryCompiler.bm25f(docs, "doc_id", "text", q),
       "qld" -> QueryCompiler.qld(docs, "doc_id", "text", q))
+  }
+
+  private val glossary = {
+    import graft.queries.KgPipeline
+    Seq("op" -> KgPipeline.OpGlossary, "speed" -> KgPipeline.SpeedGlossary,
+      "size" -> KgPipeline.SizeGlossary)
+  }
+
+  /** The 60 docs' words, the docs and their KG. */
+  private def glossaryCorpus()
+      : (Seq[(Long, Seq[String])], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val words = glossary.flatMap(_._2) ++ Seq("spark", "stream", "plan", "row")
+    val texts = (1 to 60).map { i =>
+      (i.toLong, (0 until 8).map(j => words((i * (j + 3) + j * j) % words.size)))
+    }
+    val docs = texts.map { case (id, t) => (id, t.mkString(" ")) }.toDF("doc_id", "text")
+    val kg = (for ((id, t) <- texts; tok <- t.distinct; (f, g) <- glossary if g.contains(tok))
+      yield (id.toString, f, tok, tok, "dict", "content", 1.0))
+      .toDF("doc_id", "field", "value", "key", "method", "segment", "confidence")
+    (texts, docs, kg)
   }
 
   private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
@@ -183,6 +194,57 @@ class QueryCompilerSpec extends SparkSpec {
       val jobs = graft.PlanBudget.withJobCount(spark)(df.collect())._2
       info(s"$name: $jobs jobs")
       assert(jobs <= bounds(name), s"$name launched $jobs jobs")
+    }
+  }
+
+  // Codegen reuse: the code Spark generates for an op depends on the op's
+  // kind only, not on its values or on how many constraints, variants or
+  // terms it has. Once an op of a shape has run, ops of that shape with
+  // other values find every class in Spark's codegen cache. Each shape is
+  // checked right after its warm-up, so the classes in use at a time are
+  // one shape's, far fewer than the cache's 100 entries.
+  test("codegen: ops that differ only in their values compile no new classes") {
+    import graft.queries.KgPipeline
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.col
+    val (texts, docsLocal, kgLocal) = glossaryCorpus()
+    // read back from parquet: over local rows the optimizer evaluates the
+    // ops' filters and projections itself, and the plans would not be the
+    // file-scan plans that queries run
+    val dir = java.nio.file.Files.createTempDirectory("qc-codegen").toString
+    docsLocal.coalesce(1).write.parquet(s"$dir/docs")
+    kgLocal.coalesce(1).write.parquet(s"$dir/kg")
+    val (docs, kg) = (spark.read.parquet(s"$dir/docs"), spark.read.parquet(s"$dir/kg"))
+    // the values of pass p come from a doc that holds a word of every
+    // glossary, so each search, facet, ranking and phrase has hits
+    val full = texts.map(_._2).filter(t => glossary.forall(g => t.exists(g._2.contains)))
+    def ops(p: Int): Seq[(String, org.apache.spark.sql.DataFrame)] = {
+      val t = full(p * 5 % full.size)
+      // each pass starts the constraints at another type: other fields and weights
+      val cs = (glossary.drop(p) ++ glossary.take(p))
+        .map { case (f, g) => Constraint(f, t.find(g.contains).get) }
+      def search(n: Int, text: Option[String]) = QueryCompiler.search(kg, docs, "doc_id", "text",
+        QuerySpec(cs.take(n), text, limit = 10 + p), KgPipeline.DemoCatalog)
+      val q = t.drop(p % 3).take(2 + p).mkString(" ")
+      val terms = t.distinct.take(2 + p).map(_ -> 1.0).toDF("tok", "w")
+      Seq(1, 2, 3).flatMap(n => Seq(
+        s"search, $n constraints" -> search(n, None),
+        s"search, $n constraints and free text" -> search(n, Some(t.takeRight(1 + p).mkString(" "))))) ++
+      Seq(
+        "facets" -> QueryCompiler.facets(kg, search(1 + p % 3, None), Seq("op", "size"), k = 10),
+        "bm25" -> QueryCompiler.bm25(docs, "doc_id", "text", q),
+        "bm25Weighted" -> QueryCompiler.bm25Weighted(docs, "doc_id", "text", terms),
+        "bm25f" -> QueryCompiler.bm25f(docs, "doc_id", "text", q),
+        "qld" -> QueryCompiler.qld(docs, "doc_id", "text", q),
+        "phraseMatch" -> docs.filter(QueryCompiler.phraseMatch(col("text"), t.slice(p, p + 2).mkString(" "))))
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val passes = (0 to 2).map(ops)
+    for (shape <- passes.head.indices; p <- passes.indices) {
+      val (name, df) = passes(p)(shape)
+      val before = compiles
+      assert(df.collect().nonEmpty, name)
+      if (p > 0) assert(compiles == before, s"pass $p, $name: compiled ${compiles - before} new classes")
     }
   }
 }
