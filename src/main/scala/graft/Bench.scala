@@ -1,21 +1,17 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.sessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: JVM/codegen + file-system metadata, so the first measured
-    // query doesn't pay session init.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = Harness.session(Harness.cpus)
+    // Every timed run is tagged with a job group; the listener's records
+    // are read once after the run (BENCH_FULL.json `exec`).
+    val listener = Harness.listener(spark)
+    // Warm-up before anything is measured, so the first measured query
+    // doesn't pay session init or a one-time kernel cost.
+    Harness.warmUp(spark, sfDir)
     // Contention canary: the same fixed probe re-timed before the run,
     // every `canaryEvery` entries, and after the run. The probe is
     // constant work (range→sum, no IO, no shuffle), so its timing series
@@ -24,12 +20,8 @@ object Bench {
     // 5× a regression or a noisy container?"; the series in
     // BENCH_FULL.json lets any reader normalize per-query times against
     // measured drift instead of arguing. min-of-3 like the queries.
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def canary(): Double = (1 to 3).map(_ => canaryOnce()).min
+    def canary(): Double = (1 to 3).map(_ =>
+      Harness.seconds(spark.range(1000000L).selectExpr("sum(id)").collect())).min
     val canaryEvery = 25
     val canaries = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     // Periodic driver GC at the canary points: Spark's ContextCleaner
@@ -64,26 +56,6 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } else Map.empty
     } catch { case _: Throwable => Map.empty }
-    Tables.names.foreach(n => Tables(spark, sfDir, n).count())
-    // Library warm-up on the same JVM (local mode = executor JVM):
-    // Breeze/LAPACK class init + the fit path's JIT — one-time costs a
-    // long-lived executor amortizes, ~4s if paid inside the first
-    // measured trend query instead.
-    graft.ts.TrendFit.fitSeries(
-      (0 until 30).map(_.toDouble).toArray,
-      (0 until 30).map(i => math.sin(i.toDouble)).toArray)
-    // Shingle/tokenize kernel warm-up: codegen + JIT of the HOF chain
-    // (regexp tokenize -> zip_with shingles -> array_distinct) is a
-    // one-time JVM cost (~1.5s) otherwise billed to whichever shingle
-    // query the map ordering runs first (measured via dedup_jaccard).
-    locally {
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      (1 to 512).map(i => s"warm up the shingle kernel number $i of many")
-        .toDF("text")
-        .select(array_distinct(graft.functions.TextFunctions.shingles($"text")))
-        .write.format("noop").mode("overwrite").save()
-    }
     // Run clock: every measured entry records its wall-clock START
     // offset (seconds since runT0) so a per-query regression can be
     // correlated with the canary series — "entry 92 read 26×" becomes
@@ -93,63 +65,47 @@ object Bench {
     val t0Epoch = System.currentTimeMillis() / 1000
     def offset(): Double = (System.nanoTime() - runT0) / 1e9
     val starts = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    // KG construction is index-build work (the reference's ES indexing
-    // phase), not query-plane work: time it as its own `kg_build` entry
-    // so kg_search/kg_facets measure the query, not the one-time build
-    // it used to absorb (r2 verdict #6).
-    starts += (("kg_build", offset()))
-    val tKg = System.nanoTime()
-    graft.queries.KgPipeline.kg(spark, sfDir)
-    val kgBuild = "kg_build" -> (System.nanoTime() - tKg) / 1e9
-    // Same treatment for the co-supply graph index shared by the six
-    // graph_* queries: build once, itemized, so each query's time is
-    // query-plane work, not a rebuild of the same edge list.
-    starts += (("graph_build", offset()))
-    val tG = System.nanoTime()
-    graft.queries.Relational.graphBuild(spark, sfDir).count()
-    val graphBuild = "graph_build" -> (System.nanoTime() - tG) / 1e9
-    // Keep-set: the two session-scoped indexes built above (kg_build,
-    // graph_build) live as localCheckpoint blocks. EVERYTHING else
-    // persisted during a query — per-query `.cache()` barriers, loop
-    // checkpoints — is swept between entries; r4 showed the alternative
-    // (join_denorm read 21 s under eviction pressure from ~40 queries of
-    // accreted blocks vs 1.1 s standalone).
-    val keepRdds = Caches.persistentIds(spark)
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the run (local iteration aid;
-    // the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    // The session-scoped indexes (kg_build: the reference's ES indexing
+    // phase; graph_build: the co-supply graph the graph_* queries share)
+    // are index-build work, not query-plane work: each is timed as its
+    // own entry (r2 verdict #6). Its blocks stay in the keep-set:
+    // everything else persisted during a query — per-query `.cache()`
+    // barriers, loop checkpoints — is swept between entries; r4 showed
+    // the alternative (join_denorm read 21 s under eviction pressure
+    // from ~40 queries of accreted blocks vs 1.1 s standalone).
+    val builds = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+    val keepRdds = Harness.indexes(spark, sfDir, (name, build) => {
+      starts += ((name, offset()))
+      builds += name -> Harness.seconds(build())
+    })
     // name-sorted: Map iteration order reshuffles whenever a query is
     // added, which moves JIT/codegen warm-up costs to different queries
-    // each round and makes per-query times incomparable across rounds
-    val selected = (only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
+    // each round and makes per-query times incomparable across rounds.
+    // SPARK_GRAFT_ONLY=q1,q2 restricts the run (local iteration and
+    // profiling aid; the driver never sets it).
+    val selected = SparkEntry.queries.toSeq
+      .filter { case (name, _) => Harness.only.forall(_.contains(name)) }
+      .sortBy(_._1)
     // min-of-k per query: a single-pass timing cannot distinguish a code
     // regression from one noisy neighbor in a shared sandbox (a 1.9s query
     // can read 23s under CPU contention). The min over k runs is robust to
     // transient contention while still charging real per-query cost.
     val k = sys.env.getOrElse("SPARK_GRAFT_BENCH_K", "3").toInt.max(1)
-    // noop write: materializes every output column (a bare count()
-    // would let Catalyst prune the expressions under measurement)
-    // without the per-row InternalRow->Row decode that .rdd.count()
-    // added to the measurement — harness overhead, not query work.
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     // Generated classes Spark compiled during each entry's timed runs
     // (BENCH_FULL.json `compiles`): a class the JVM-wide codegen cache
     // still holds is not compiled again, so a nonzero count is
     // compile time inside the timing.
     val compiles = scala.collection.mutable.LinkedHashMap[String, Long]().withDefaultValue(0L)
+    // the job group of each entry's kept (min) run: its `exec` record
+    val keptGroup = scala.collection.mutable.Map[String, (Double, String)]()
     val byName = selected.toMap
-    def timedRuns(name: String): Double = {
+    def timedRuns(name: String, tag: String): Double = {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      try (1 to k).map(_ => once(byName(name))).min
-      finally compiles(name) += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      try {
+        val (t, group) = Harness.minOf(spark, sfDir, byName(name), k, keepRdds, tag)
+        if (keptGroup.get(name).forall(_._1 > t)) keptGroup(name) = (t, group)
+        t
+      } finally compiles(name) += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
     }
     val firstPass: Seq[(String, Either[String, Double])] =
       selected.zipWithIndex.map { case ((name, _), idx) =>
@@ -158,13 +114,13 @@ object Bench {
         // A query that throws must surface as an error entry, never as a
         // (tiny) timing — a broken query silently reading as "fast" would
         // corrupt the round-over-round signal.
-        try name -> Right(timedRuns(name))
+        try name -> Right(timedRuns(name, name))
         catch { case e: Throwable =>
           val msg = (e.getClass.getSimpleName + ": " +
             String.valueOf(e.getMessage))
             .replaceAll("[\\\\\"\\n\\r\\t]", " ").take(120)
           name -> Left(msg)
-        } finally Caches.sweep(spark, keepRdds)
+        }
       }
     // Re-queue pass: any entry whose min-of-k exceeded 3× its prior-run
     // time (and isn't sub-second noise) is re-measured ONCE after the
@@ -181,9 +137,8 @@ object Bench {
         cleanerTick()
         starts += ((name + "#rq", offset()))
         val again =
-          try Some(timedRuns(name))
+          try Some(timedRuns(name, name + "#rq"))
           catch { case _: Throwable => None } // keep the first reading
-          finally Caches.sweep(spark, keepRdds)
         again.foreach(t2 => requeue += ((name, t, t2)))
         name -> Right(math.min(t, again.getOrElse(t)))
       case other => other
@@ -193,8 +148,7 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     val errs = results.collect { case (n, Left(m)) => s""""$n":"$m"""" }
       .mkString("{", ",", "}")
-    val ok = results.collect { case (n, Right(t)) => n -> t } :+
-      kgBuild :+ graphBuild
+    val ok = results.collect { case (n, Right(t)) => n -> t } ++ builds
     val total = ok.map(_._2).sum
     val qs = ok.map { case (q, v) => "\"" + q + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -218,6 +172,14 @@ object Bench {
       .mkString("{", ",", "}")
     val compilesJson = compiles.map { case (n, c) => "\"" + n + "\":" + c }
       .mkString("{", ",", "}")
+    // Each entry's kept run as the listener saw it (jobs, stages, tasks,
+    // shuffle bytes, spill, the slowest stages with their call sites),
+    // read behind one drain for the whole run, so no entry pays a wait.
+    listener.drain()
+    val kept = keptGroup.map { case (n, (_, group)) => n -> group }.toMap ++
+      builds.map { case (n, _) => n -> n }
+    val execJson = ok.map { case (n, _) => "\"" + n + "\":" + listener.take(kept(n)).json }
+      .mkString("{", ",", "}")
     // Printed line = the DRIVER CONTRACT (r12 verdict item 1): short —
     // total first (head-capped excerpts), then k/n/errs/requeue, then the
     // `queries` map, sf, and the total again as value_tail so a
@@ -231,7 +193,7 @@ object Bench {
     // BENCH_FULL.json in the repo root is the complete, uncapped record
     // of the most recent bench run on this machine: the contract line's
     // fields plus the forensic series the printed line must not carry.
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","k":$k,"n_queries":${ok.size},"n_errs":${results.count(_._2.isLeft)},"n_requeued":${requeue.size},$canaryJson,"errs":$errs,"requeue":$rqJson,"queries":$qs,"t0_epoch":$t0Epoch,"starts":$startsJson,"compiles":$compilesJson,"sf":"$sfDir","value_tail":${fmt(total)}}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","k":$k,"n_queries":${ok.size},"n_errs":${results.count(_._2.isLeft)},"n_requeued":${requeue.size},$canaryJson,"errs":$errs,"requeue":$rqJson,"queries":$qs,"t0_epoch":$t0Epoch,"starts":$startsJson,"compiles":$compilesJson,"exec":$execJson,"sf":"$sfDir","value_tail":${fmt(total)}}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_FULL.json"), full + "\n")
     catch { case _: Throwable => () } // read-only cwd must not fail the run

@@ -62,54 +62,6 @@ object PlanBudget {
       jobs = jobs)
   }
 
-  /** Run `body` with a listener counting the Spark jobs it submits.
-    * Every construction-time action (eager localCheckpoint, collect)
-    * BLOCKS until its job completes, so by the time `body` returns all
-    * jobs have been submitted; only the listener-bus delivery is
-    * async. Two defenses keep the count exact (the first cut drifted
-    * ±1 between generator and spec: a late-delivered event from
-    * capture N landed in capture N+1's window):
-    *  - ATTRIBUTION: each capture runs under a unique job group, and
-    *    only events carrying that group id are counted — a leaked
-    *    late event from the previous capture can never pollute this
-    *    one;
-    *  - QUIESCENCE: the drain requires the count to hold still across
-    *    5 consecutive 40 ms polls (the bus is idle once `body` has
-    *    returned, so 200 ms of silence bounds delivery lag without
-    *    slowing the 345-query sweep meaningfully).
-    * The count is deterministic for a fixed session shape — the
-    * generator and the spec both run local[4] with 4 shuffle
-    * partitions.
-    */
-  private[graft] def withJobCount[A](spark: SparkSession)(body: => A): (A, Int) = {
-    val tag = "planbudget-" + java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        if (g.contains(tag)) { n.incrementAndGet(); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(tag, "PlanBudget construction capture")
-    try {
-      val a = body
-      var stable = 0
-      var last = n.get()
-      while (stable < 5) {
-        Thread.sleep(40)
-        val cur = n.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      (a, last)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
-  }
-
   /** Hermetic capture (r8 VERDICT #2): a query that `.cache()`s an
     * intermediate (rec_als's ratings) plans differently depending on
     * whether an EARLIER query already materialized that cache — a
@@ -147,8 +99,7 @@ object PlanBudget {
     // pays its schema-inference job, and which query that is depends on
     // registry order.
     Tables.names.foreach(Tables(spark, dir, _))
-    graft.queries.KgPipeline.kg(spark, dir)
-    graft.queries.Relational.graphBuild(spark, dir)
+    Harness.indexes(spark, dir)
     spark.catalog.clearCache()
     // AQE off for the capture only: under AQE one construction action
     // (an eager checkpoint) submits one job PER MATERIALIZED QUERY
@@ -161,7 +112,7 @@ object PlanBudget {
     val saved = spark.conf.get(key)
     spark.conf.set(key, "false")
     try {
-      val (df, jobs) = withJobCount(spark)(fn(spark, dir))
+      val (df, jobs) = Harness.countJobs(spark)(fn(spark, dir))
       counts(df, jobs)
     } finally spark.conf.set(key, saved)
   }
@@ -218,12 +169,9 @@ object PlanBudget {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Tables.sessionDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed 4 cores, the shape PlanBudgetSpec's session has: the job
+    // column is deterministic only for a fixed session shape
+    val spark = Harness.session(4)
     val rows = table(spark, dir)
     Files.writeString(Paths.get("PLAN_BUDGETS.md"), render(rows))
     println(s"wrote PLAN_BUDGETS.md (${rows.size} queries)")

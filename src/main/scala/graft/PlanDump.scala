@@ -15,12 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = Tables.sessionDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed 4 cores: the committed dumps pin plans at 4 shuffle partitions
+    val spark = Harness.session(4)
     args match {
       case Array(dir) => plansMd(spark, dir)
       case Array(dir, outDir, tag, names) => dumpSome(spark, dir, outDir, tag, names)

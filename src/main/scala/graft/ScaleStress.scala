@@ -230,25 +230,17 @@ object ScaleStress {
     */
   final case class Row(name: String, t1: Double, tN: Double, exponent: Double)
 
-  def measure(spark: SparkSession, dir: String, names: Seq[String], k: Int,
-              keepRdds: => Set[Int]): Seq[(String, Double)] = {
-    // Pre-existing session state (memoized indexes built by EARLIER
-    // callers) is always protected, whatever keep-set the caller
-    // passes — sweeping a shared index's blocks out from under its
-    // still-live cache entry poisons every later consumer (the
-    // full-suite CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND lesson). The sweep
-    // still frees everything the measured queries themselves create.
-    val protect = Caches.persistentIds(spark) ++ keepRdds
-    names.map { name =>
-      val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      try name -> (1 to k).map(_ => once()).min
-      finally Caches.sweep(spark, protect)
-    }
+  def measure(spark: SparkSession, dir: String, names: Seq[String],
+              k: Int): Seq[(String, Double)] = {
+    // Session state that exists before the first query (the indexes,
+    // and memoized state of EARLIER callers) is always protected —
+    // sweeping a shared index's blocks out from under its still-live
+    // cache entry poisons every later consumer (the full-suite
+    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND lesson). The sweep still frees
+    // everything the measured queries themselves create.
+    val keep = Caches.persistentIds(spark)
+    names.map(name =>
+      name -> Harness.minOf(spark, dir, SparkEntry.queries(name), k, keep, name)._1)
   }
 
   def exponents(base: Seq[(String, Double)], big: Seq[(String, Double)],
@@ -286,14 +278,8 @@ object ScaleStress {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val k = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = s"/tmp/graft_scale_${copies}x"
-    val spark = Tables.sessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
 
     // SPARK_GRAFT_STRESS_REUSE=1 reuses an existing replica dir (the
     // replication is deterministic, and a 100× replica takes longer to
@@ -303,45 +289,25 @@ object ScaleStress {
         !replicaComplete(outDir, srcDir, copies))
       replicate(spark, srcDir, outDir, copies)
 
-    // warm-up (Bench protocol): JVM/codegen + fs metadata + kernels
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.names.foreach(n => Tables(spark, srcDir, n).count())
-    Tables.names.foreach(n => Tables(spark, outDir, n).count())
-    locally {
-      import spark.implicits._
-      (1 to 512).map(i => s"warm up the shingle kernel number $i of many")
-        .toDF("text")
-        .select(array_distinct(graft.functions.TextFunctions.shingles($"text")))
-        .write.format("noop").mode("overwrite").save()
-    }
+    Harness.warmUp(spark, srcDir, outDir)
 
-    // SPARK_GRAFT_STRESS_PANEL runs a restricted panel into its OWN
-    // marker section (scale-stress-<copies>x) — the deep-replication
-    // probes (e.g. the 100× legs of the highest-exponent rows) must
-    // not clobber the full default table the way SPARK_GRAFT_ONLY
-    // would (that var is the local-iteration aid and rewrites the
-    // main section with whatever subset it ran).
-    val panelEnv = sys.env.get("SPARK_GRAFT_STRESS_PANEL")
-      .map(_.split(",").map(_.trim).toSeq)
-    val panel = panelEnv.orElse(sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSeq)).getOrElse(DefaultPanel)
+    // SPARK_GRAFT_ONLY runs a restricted panel into its OWN marker
+    // section (scale-stress-<copies>x), so a subset (the 100× legs of
+    // the highest-exponent rows, say) never clobbers the full default
+    // table.
+    val panel = Harness.only.getOrElse(DefaultPanel)
     val markerId =
-      if (panelEnv.isDefined) s"scale-stress-${copies}x" else "scale-stress"
+      if (Harness.only.isDefined) s"scale-stress-${copies}x" else "scale-stress"
 
-    // graph index builds are their own measured entries (the Bench
-    // itemization), then stay in the keep-set so graph_* rows measure
-    // query-plane work at both scales
-    def buildGraph(dir: String): Double = {
-      val t0 = System.nanoTime()
-      graft.queries.Relational.graphBuild(spark, dir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val g1 = "graph_build" -> buildGraph(srcDir)
-    val gN = "graph_build" -> buildGraph(outDir)
-    lazy val keep = Caches.persistentIds(spark)
+    // the index builds are their own measured entries (the Bench
+    // itemization), then stay protected so kg_* and graph_* rows
+    // measure query-plane work at both scales
+    val builds1, buildsN = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+    Harness.indexes(spark, srcDir, (name, build) => builds1 += name -> Harness.seconds(build()))
+    Harness.indexes(spark, outDir, (name, build) => buildsN += name -> Harness.seconds(build()))
 
-    val base = measure(spark, srcDir, panel, k, keep) :+ g1
-    val big = measure(spark, outDir, panel, k, keep) :+ gN
+    val base = measure(spark, srcDir, panel, k) ++ builds1
+    val big = measure(spark, outDir, panel, k) ++ buildsN
     val rows = exponents(base, big, copies)
     val table = render(rows, copies, srcDir, alertAt = 1.3)
 
@@ -350,7 +316,7 @@ object ScaleStress {
     val end = s"<!-- $markerId:end -->"
     val path = Paths.get("SCALING.md")
     val section = s"$begin\n\n## Empirical scaling exponents " +
-      s"(${copies}× salted replication of $srcDir, min-of-$k, local[$cpus])\n\n" +
+      s"(${copies}× salted replication of $srcDir, min-of-$k, local[${Harness.cpus}])\n\n" +
       "Generated by `graft.ScaleStress`. exponent = " +
       s"log_$copies(t_${copies}x / t_1x); alert line 1.3; " +
       "sub-second 1× rows are noise-dominated (fixed plan/submit " +

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json for the DuckDB compare (tools/compare.py), plus
@@ -9,25 +8,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.sessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
-    // local-iteration subset (comma-separated names); unset → full run
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     // Session-scoped indexes (kg/graph) build inside the first query
-    // that needs them; snapshotting the keep-set BEFORE any query runs
-    // means the sweep below would free them — so build both up front.
-    graft.queries.KgPipeline.kg(spark, sfDir)
-    graft.queries.Relational.graphBuild(spark, sfDir).count()
-    val keepRdds = Caches.persistentIds(spark)
+    // that needs them; a keep-set snapshotted BEFORE any query runs
+    // would let the sweep below free them — so build both up front.
+    val keepRdds = Harness.indexes(spark, sfDir)
     val status = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => Harness.only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       // begin/end lines on stderr, where Spark logs too: a warning the
       // query's jobs raise (a BlockManager "already exists" on a block
@@ -51,18 +39,7 @@ object Verify {
       System.err.println(s"[verify] end $name ${result._2}")
       result
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = Harness.jsonString(s)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -273,13 +273,15 @@ object Extractors {
     regexp_extract_all(c, lit(BtcRx), lit(0))
 
   /** E13 location compound: one segment fans out to 4 fields
-    * (generate_mydig_config.py:301-305).
+    * (generate_mydig_config.py:301-305): location (any of the three
+    * glossaries), country, city_name and state.
     */
-  def locationCompound(c: Column, countries: Seq[String], cities: Seq[String])
-      : Seq[(String, Column)] = Seq(
-    "location" -> glossary(c, countries ++ cities),
+  def locationCompound(c: Column, countries: Seq[String], cities: Seq[String],
+                       states: Seq[String] = Nil): Seq[(String, Column)] = Seq(
+    "location" -> glossary(c, countries ++ cities ++ states),
     "country" -> glossary(c, countries),
-    "city_name" -> glossary(c, cities))
+    "city_name" -> glossary(c, cities),
+    "state" -> glossary(c, states))
 
   /** KG long-format builder: (field → array<value>) extraction columns
     * exploded into KgValue rows (SURVEY §1.2 exploded long-format

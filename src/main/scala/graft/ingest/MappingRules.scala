@@ -202,12 +202,17 @@ object MappingRules {
     // Per-file slice semantics (content_start_row is a position within
     // ONE uploaded file, dig_tabular_import.py:76-90) — partitioning by
     // input_file_name() keeps each file's sort local to its partition.
-    val w = Window.partitionBy(perFile: _*).orderBy(orderBy: _*)
+    // The file keys are projected once over the scan: input_file_name()
+    // reads "" above a shuffle, so evaluated again by the second window
+    // it would merge every file into one partition.
+    val keys = perFile.indices.map(i => s"__file$i")
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(orderBy: _*)
     val stringCols = df.schema.fields.filter(_.dataType.typeName == "string").map(_.name)
     val allBlank =
       if (stringCols.isEmpty) lit(false)
       else stringCols.map(c => length(trim(coalesce(col(c), lit("")))) === 0).reduce(_ && _)
     var out = df
+      .select(col("*") +: perFile.zip(keys).map { case (c, k) => c.as(k) }: _*)
       .withColumn("__rn", row_number().over(w))
       .withColumn("__blank", allBlank)
     if (blankRowEndsContent) {
@@ -219,7 +224,7 @@ object MappingRules {
     }
     out = out.filter(col("__rn") >= startRow)
     endRow.foreach(e => out = out.filter(col("__rn") <= e))
-    out.drop("__rn", "__blank")
+    out.drop("__rn" +: "__blank" +: keys: _*)
   }
 
   /** P3 positional column slice: columns [from, until) renamed "1".."n"

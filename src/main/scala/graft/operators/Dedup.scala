@@ -50,11 +50,11 @@ object Dedup {
     * min of the affine universal hash (a_i*h + b_i) mod p. Pure integer
     * arithmetic — bit-identical across engines by construction.
     *
-    * Measured note (history): with the old k×md5 scheme the HOF
-    * formulation beat the native one-pass expression (md5 kernel
-    * dominated; NativeExpressions.MinHashSig kept as the parity-tested
-    * record of that A/B). Universal hashing removes the md5 bottleneck
-    * outright — one digest per shingle, then k cheap integer maps.
+    * Measured note (history): the retired scheme took the min of
+    * md5("i:"+s) per seed, k digests per shingle, and its md5 kernel
+    * dominated whether it ran as composed HOFs or as one native
+    * expression. Universal hashing removes the md5 bottleneck outright
+    * — one digest per shingle, then k cheap integer maps.
     */
   def minhashSigAffine(hashArr: Column, k: Int): Column =
     array((0 until k).map(i =>
@@ -70,13 +70,6 @@ object Dedup {
     */
   def minhashSig(shingleArr: Column, k: Int): Column =
     minhashSigAffine(shingleHashes(shingleArr), k)
-
-  /** The original k×md5 formulation (min of md5("i:"+s) hex strings) —
-    * retained for the native-expression parity spec.
-    */
-  def minhashSigHof(shingleArr: Column, k: Int): Column =
-    array((0 until k).map(i =>
-      array_min(transform(shingleArr, s => md5(concat(lit(s"$i:"), s))))): _*)
 
   /** LSH band keys: b bands of r signature rows, digested to fixed width. */
   def bandKeys(sigArr: Column, bands: Int, rows: Int): Column =

@@ -42,13 +42,6 @@ object GraftExtensions {
     (FunctionIdentifier("dot_product_f"),
       info("dot_product_f", "dot_product_f(a, b) - sequential-fold dot product of float arrays"),
       (args: Seq[Expression]) => NativeExpressions.DotProductF(args(0), args(1))),
-    (FunctionIdentifier("minhash_sig"),
-      info("minhash_sig",
-        "minhash_sig(shingles, k) - k min-hashes of a string array (LEGACY k-digest " +
-          "scheme, parity-tested vs Dedup.minhashSigHof; the dedup pipeline now uses " +
-          "the affine universal-hash scheme, Dedup.minhashSig)"),
-      (args: Seq[Expression]) => NativeExpressions.MinHashSig(args(0),
-        litInt("minhash_sig", "k", args(1)))),
     (FunctionIdentifier("text_stats"),
       info("text_stats",
         "text_stats(text) - struct(n_tok, n_stop, n_punct, n_alnum) in one pass"),

@@ -153,60 +153,6 @@ object NativeExpressions {
   def textStats(c: Column): Column =
     GraftColumnBridge.column(TextStats(GraftColumnBridge.expression(c)))
 
-  /** All k min-hashes in one pass over the shingle array: for each
-    * shingle, md5("i:"+s) per seed, tracking the minimum hex digest
-    * lexicographically — identical to k× array_min(transform(...)).
-    */
-  def minhashCompute(shingles: ArrayData, k: Int): ArrayData = {
-    val mins = new Array[String](k)
-    val md = Md5.get()
-    val n = shingles.numElements()
-    var j = 0
-    while (j < n) {
-      // null elements skip, matching the HOF reference: md5(null) is
-      // null and array_min ignores nulls (was an NPE here)
-      if (!shingles.isNullAt(j)) {
-        val s = shingles.getUTF8String(j).toString
-        var i = 0
-        while (i < k) {
-          val d = md.digest((i + ":" + s).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          val hex = toHex(d)
-          if (mins(i) == null || hex.compareTo(mins(i)) < 0) mins(i) = hex
-          i += 1
-        }
-      }
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      mins.map(m => if (m == null) null else UTF8String.fromString(m))
-        .asInstanceOf[Array[Any]])
-  }
-
-  private def toHex(bytes: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(32)
-    var i = 0
-    while (i < bytes.length) {
-      sb.append(Character.forDigit((bytes(i) >> 4) & 0xf, 16))
-      sb.append(Character.forDigit(bytes(i) & 0xf, 16))
-      i += 1
-    }
-    sb.toString
-  }
-
-  case class MinHashSig(child: Expression, k: Int) extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = true)
-    override def prettyName: String = "minhash_sig"
-    override protected def nullSafeEval(input: Any): Any =
-      minhashCompute(input.asInstanceOf[ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"graft.plans.NativeExpressions.minhashCompute($c, $k)")
-    override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-      copy(child = newChild)
-  }
-
   case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[DataType] = Seq(StringType)
     override def dataType: DataType = StringType
@@ -856,8 +802,6 @@ object NativeExpressions {
   /** Column-API entry points (Spark 4 classic Column↔Expression bridge). */
   def simhash64(c: Column): Column =
     GraftColumnBridge.column(SimHash64(GraftColumnBridge.expression(c)))
-  def minhashSig(c: Column, k: Int): Column =
-    GraftColumnBridge.column(MinHashSig(GraftColumnBridge.expression(c), k))
   def dotF(a: Column, b: Column): Column =
     GraftColumnBridge.column(
       DotProductF(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))

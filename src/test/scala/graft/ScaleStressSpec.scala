@@ -126,8 +126,8 @@ class ScaleStressSpec extends AnyFunSuite {
   test("measure -> exponents produces finite rows and the renderer flags only real alerts") {
     val s = SparkSpec.session
     val panel = Seq("window_quota", "agg_pricing")
-    val base = ScaleStress.measure(s, src, panel, k = 1, Set.empty)
-    val big = ScaleStress.measure(s, out, panel, k = 1, Set.empty)
+    val base = ScaleStress.measure(s, src, panel, k = 1)
+    val big = ScaleStress.measure(s, out, panel, k = 1)
     val rows = ScaleStress.exponents(base, big, copies = 2)
     assert(rows.size == 2 && rows.forall(r => !r.exponent.isNaN && !r.exponent.isInfinite))
     val md = ScaleStress.render(rows, copies = 2, src, alertAt = 1.3)

@@ -18,11 +18,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = Tables.sessionDefaults(
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  // fixed 4 cores: the plan-shape and job-count pins assume 4 partitions
+  lazy val session: SparkSession = Harness.session(4)
 }

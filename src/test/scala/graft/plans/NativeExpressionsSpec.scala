@@ -26,15 +26,6 @@ class NativeExpressionsSpec extends SparkSpec {
     assert(both.filter($"hof" =!= $"native").count() == 0)
   }
 
-  test("native minhash signature matches the k-pass HOF formulation") {
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents").limit(100)
-    val sh = array_distinct(graft.functions.TextFunctions.shingles($"text"))
-    val both = docs.select(
-      Dedup.minhashSigHof(sh, 8).as("hof"),
-      NativeExpressions.minhashSig(sh, 8).as("native"))
-    assert(both.filter(to_json($"hof") =!= to_json($"native")).count() == 0)
-  }
-
   test("native TextStats matches the composed regex counters") {
     import graft.functions.TextFunctions._
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")

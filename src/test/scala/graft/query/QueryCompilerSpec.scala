@@ -191,7 +191,7 @@ class QueryCompilerSpec extends SparkSpec {
     val bounds = Map("search" -> 2, "search, 1 constraint" -> 1, "facets" -> 3,
       "bm25" -> 4, "bm25Weighted" -> 6, "bm25f" -> 4, "qld" -> 4)
     for ((name, df) <- sixOps()) {
-      val jobs = graft.PlanBudget.withJobCount(spark)(df.collect())._2
+      val jobs = graft.Harness.countJobs(spark)(df.collect())._2
       info(s"$name: $jobs jobs")
       assert(jobs <= bounds(name), s"$name launched $jobs jobs")
     }

@@ -10,7 +10,7 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{PlanBudget, SparkSpec, Tables}
+import graft.{Harness, SparkSpec, Tables}
 
 /** `Tables.apply` infers a table's parquet schema once and reads with the
   * remembered schema afterwards. The memo must never serve a schema the
@@ -25,7 +25,7 @@ class TablesSchemaMemoSpec extends SparkSpec {
     dir.getAbsolutePath
   }
 
-  private def jobs(body: => Any): Int = PlanBudget.withJobCount(spark)(body)._2
+  private def jobs(body: => Any): Int = Harness.countJobs(spark)(body)._2
 
   test("a second read of an unchanged path launches no job") {
     val dir = tableDir()
