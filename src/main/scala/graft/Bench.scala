@@ -3,6 +3,23 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 
 object Bench {
+  /** The per-entry seconds of a prior run's BENCH_FULL.json, when that run
+    * measured the same scale directory `sf` on the same `cpus`: an sf0.01
+    * or 8-core time is no reference for an sf0.1 or 32-core run (a file
+    * that records no core count is none either).
+    */
+  def prior(json: String, sf: String, cpus: Int): Map[String, Double] = {
+    val sfOf = """"sf":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
+    val cpusOf = """"cpus":([0-9]+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
+    if (!sfOf.contains(sf) || !cpusOf.contains(cpus)) Map.empty
+    else {
+      val body = """"queries":\{([^}]*)\}""".r
+        .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
+      """"([A-Za-z0-9_]+)":([0-9.Ee+\-]+)""".r.findAllMatchIn(body)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(Harness.cpus)
@@ -48,13 +65,9 @@ object Bench {
     // reference → no re-queue for that entry.
     val prior: Map[String, Double] = try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")
-      if (java.nio.file.Files.exists(p)) {
-        val s = java.nio.file.Files.readString(p)
-        val body = """"queries":\{([^}]*)\}""".r
-          .findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-        """"([A-Za-z0-9_]+)":([0-9.Ee+\-]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
+      if (java.nio.file.Files.exists(p))
+        Bench.prior(java.nio.file.Files.readString(p), sfDir, Harness.cpus)
+      else Map.empty
     } catch { case _: Throwable => Map.empty }
     // Run clock: every measured entry records its wall-clock START
     // offset (seconds since runT0) so a per-query regression can be
@@ -193,7 +206,7 @@ object Bench {
     // BENCH_FULL.json in the repo root is the complete, uncapped record
     // of the most recent bench run on this machine: the contract line's
     // fields plus the forensic series the printed line must not carry.
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","k":$k,"n_queries":${ok.size},"n_errs":${results.count(_._2.isLeft)},"n_requeued":${requeue.size},$canaryJson,"errs":$errs,"requeue":$rqJson,"queries":$qs,"t0_epoch":$t0Epoch,"starts":$startsJson,"compiles":$compilesJson,"exec":$execJson,"sf":"$sfDir","value_tail":${fmt(total)}}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","k":$k,"n_queries":${ok.size},"n_errs":${results.count(_._2.isLeft)},"n_requeued":${requeue.size},"cpus":${Harness.cpus},$canaryJson,"errs":$errs,"requeue":$rqJson,"queries":$qs,"t0_epoch":$t0Epoch,"starts":$startsJson,"compiles":$compilesJson,"exec":$execJson,"sf":"$sfDir","value_tail":${fmt(total)}}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_FULL.json"), full + "\n")
     catch { case _: Throwable => () } // read-only cwd must not fail the run

@@ -71,6 +71,19 @@ object Caches {
   private[graft] def resetStats(ck: DataFrame): DataFrame =
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
 
+  /** Whether `df`'s checkpoint blocks still exist: a session-scoped
+    * index is only servable while they do. An external [[sweep]] (a
+    * bench or stress harness, a multi-tenant janitor) can free them
+    * without touching the index's memo, and the stale frame would fail
+    * every later consumer with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Cheap
+    * driver-side check: every LogicalRDD id in the analyzed plan must
+    * still be registered as persistent.
+    */
+  def alive(df: DataFrame): Boolean = {
+    val persisted = df.sparkSession.sparkContext.getPersistentRDDs.keySet
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.forall(persisted.contains)
+  }
+
   /** Snapshot the ids of every currently-persisted RDD — call after
     * building session-scoped indexes to form the keep-set for [[sweep]].
     */

@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Caches, Tables}
 import graft.extract.Extractors
-import graft.query.QueryCompiler
+import graft.functions.TextFunctions
+import graft.query.{Postings, QueryCompiler}
 import graft.query.QueryCompiler.{Catalog, Constraint, QuerySpec, TypeMapping}
 
 /** End-to-end KG pipeline demo (SURVEY §3: ingest → extract → KG →
@@ -30,48 +31,50 @@ object KgPipeline {
       "size" -> TypeMapping(Seq("size" -> 5.0))))
 
   /** Build the long-format KG table from the corpus (E2 glossary
-    * extraction, §1.2 exploded KgValue layout). Memoized + cached per
-    * (session, dir): the KG is the materialized artifact the query
-    * plane reads (the reference's ES index) — deriving it once and
-    * caching mirrors that architecture and removes re-extraction from
-    * every search/facet query.
+    * extraction, §1.2 exploded KgValue layout), and next to it the
+    * corpus's [[Postings]] index. Memoized per (session, dir): the KG and
+    * the postings are the materialized artifacts the query plane reads
+    * (the reference's ES index) — deriving them once removes
+    * re-extraction and re-tokenizing from every search, facet and
+    * ranking query.
     */
   private val kgCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, Postings.Index)]
 
   def kg(s: SparkSession, dir: String): DataFrame = kgCache.synchronized {
     // Self-healing (the graphBuild discipline): an external sweep can
     // free the checkpoint blocks without touching this map — serving
-    // the stale frame fails every later consumer.
-    kgCache.get((s, dir)).foreach { hit =>
-      if (!Relational.blocksAlive(s, hit)) kgCache.remove((s, dir))
+    // the stale frames fails every later consumer.
+    kgCache.get((s, dir)).foreach { case (hit, ix) =>
+      if (!Caches.alive(hit) || !Caches.alive(ix.rows)) kgCache.remove((s, dir))
     }
     kgCache.getOrElseUpdate((s, dir), {
       val docs = Tables(s, dir, "documents")
-      // Tokenize ONCE behind a cache barrier: three glossary fields read
-      // the same token array instead of CollapseProject inlining three
-      // full regex scans of the text into the extraction projection
-      // (the "resource loaded once per worker" architecture of the
+      // Tokenize ONCE behind a cache barrier: three glossary fields and
+      // the postings read the same token array instead of CollapseProject
+      // inlining a full regex scan of the text into each consumer (the
+      // "resource loaded once per worker" architecture of the
       // reference's extractor init, docs/index.md:116).
-      val tokenized = docs.select(col("doc_id"),
-        regexp_extract_all(lower(col("text")), lit("[A-Za-z0-9]+"), lit(0)).as("__toks"))
+      val tokenized = docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("__toks"))
         .cache()
-      // localCheckpoint(eager), not .cache(): the KG is a session-scoped
-      // INDEX (the reference's ES index) — checkpoint blocks survive the
+      // localCheckpoint, not .cache(): the KG is a session-scoped INDEX
+      // (the reference's ES index) — checkpoint blocks survive the
       // per-query cache sweep (`Caches.sweep` protects them via the
       // keep-set) where a cache-manager entry would be cleared and force
       // a silent re-extraction inside the next search query's timing.
-      // Eager, so the intermediate token cache can be released
-      // immediately — it would otherwise pin executor storage for the
-      // session with no remaining reference.
+      // The postings build materializes it in its own job, so the
+      // intermediate token cache can be released right after — it would
+      // otherwise pin executor storage for the session with no
+      // remaining reference.
       val built = Extractors.toKgValues(tokenized, "doc_id", Seq(
         ("op", Extractors.glossaryFromTokens(col("__toks"), OpGlossary), "extract_using_dictionary", "content"),
         ("speed", Extractors.glossaryFromTokens(col("__toks"), SpeedGlossary), "extract_using_dictionary", "content"),
         ("size", Extractors.glossaryFromTokens(col("__toks"), SizeGlossary), "extract_using_dictionary", "content")))
-        .localCheckpoint(true)
+        .localCheckpoint(false)
+      val postings = Postings.build(docs, "doc_id", "text", tokenized, built)
       tokenized.unpersist()
-      built
-    })
+      (built, postings)
+    })._1
   }
 
   /** Q8 index routing made physical (type_index_mappings.json:1 — the

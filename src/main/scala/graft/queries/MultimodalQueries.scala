@@ -68,7 +68,10 @@ object MultimodalQueries {
   def mediaDecode(s: SparkSession, dir: String): DataFrame = {
     val media = withSynth(s, dir)
       .withColumn("bytes", synthImage(col("w"), col("h"), col("gray"), col("fmt_idx")))
-      .cache() // see mediaVideo: one synthesis, two branch reads
+      // one synthesis, two branch reads: computed before the branches, as
+      // AQE runs the join's two sides as concurrent stages, and both would
+      // compute the same partition of a lazy .cache()
+      .localCheckpoint(true)
     val sniffed = media.select(
       col("doc_id"), ImageCodec.imageMeta(col("bytes")).getField("format").as("format"))
     val feats = Multimodal.decodeBatched(media, "doc_id", "bytes")
@@ -101,7 +104,7 @@ object MultimodalQueries {
     val media = withSynth(s, dir)
       .withColumn("bytes", synthImage(col("w"), col("h"), col("gray"), lit(0)))
     val resized = Multimodal.resizeImages(media, "doc_id", "bytes", w = 16, h = 12)
-      .cache() // one resize pass, two branch reads (meta + pixel stats)
+      .localCheckpoint(true) // one resize pass before the two branch reads (see mediaDecode)
     val feats = Multimodal.decodeBatched(resized, "doc_id", "resized")
     resized.select(
         col("doc_id"),

@@ -1416,21 +1416,6 @@ object Relational {
   private[queries] def edgeCacheSize: Int =
     edgeCache.synchronized(edgeCache.size())
 
-  /** A cached index is only servable while its checkpoint blocks still
-    * exist — an external `Caches.sweep` (a bench/stress harness, a
-    * multi-tenant janitor) can free the blocks without touching this
-    * map, and handing out the stale frame fails every later consumer
-    * with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Cheap driver-side check:
-    * every LogicalRDD id in the analyzed plan must still be registered
-    * as persistent.
-    */
-  private[queries] def blocksAlive(s: SparkSession, df: DataFrame): Boolean = {
-    val persisted = s.sparkContext.getPersistentRDDs.keySet
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.forall(persisted.contains)
-  }
-
   /** Force-build (or reuse) the memoized edge index; returns it.
     * Self-healing: a hit whose blocks were swept rebuilds in place.
     */
@@ -1438,7 +1423,7 @@ object Relational {
     edgeCache.synchronized {
       val key = System.identityHashCode(s) + "|" + dir
       val hit = edgeCache.get(key)
-      if (hit != null && blocksAlive(s, hit)) hit
+      if (hit != null && graft.Caches.alive(hit)) hit
       else {
         val built = buildCoSupplyEdges(s, dir)
         edgeCache.put(key, built)

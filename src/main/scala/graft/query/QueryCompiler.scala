@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.TextFunctions
 import graft.plans.NativeExpressions
 
 /** The structured-query plane (SURVEY §2.6, Q1–Q13): typed constraints →
@@ -62,7 +61,7 @@ object QueryCompiler {
     * input, and for the KG index and table scans both give the same
     * size.
     */
-  private def small(inputs: DataFrame*): Seq[DataFrame] = {
+  private[query] def small(inputs: DataFrame*): Seq[DataFrame] = {
     val limit = inputs.head.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val estimate = inputs.map(_.queryExecution.analyzed.stats.sizeInBytes).sum
     if (limit < 0 || estimate > limit) inputs
@@ -117,7 +116,7 @@ object QueryCompiler {
 
     /** Q2+Q3+Q11: normalize, then expand to synonym + format variants. */
     def expand(ctype: String, value: String): Seq[String] = {
-      val norm = value.toLowerCase.trim
+      val norm = value.toLowerCase(java.util.Locale.ROOT).trim
       val syn = synonyms.getOrElse(ctype, Map.empty).getOrElse(norm, Nil)
       val exp = expanders.get(ctype).map(_(value)).getOrElse(Nil)
       (norm +: (syn ++ exp)).distinct
@@ -138,9 +137,9 @@ object QueryCompiler {
     *
     * One plan for every query: the KG rows that satisfy some constraint
     * (each tagged with the constraints it satisfies, looked up in a map
-    * literal) and one row per document (its free-text score) are
-    * grouped by doc_id. With constraints and no free text a filter
-    * drops the document rows before they are tokenized; their scan
+    * literal) and the documents' [[Postings]] rows (every document, and
+    * the query tokens' postings) are grouped by doc_id. With constraints
+    * and no free text a filter drops the postings rows; their source
     * stays in the plan.
     */
   def search(kgIn: DataFrame, docsIn: DataFrame, docIdCol: String, textCol: String,
@@ -165,20 +164,23 @@ object QueryCompiler {
         lit(null).cast("double").as("ft"), lit(null).cast("boolean").as("doc"))
     // The documents take part when there is free text to score, or no
     // constraint (the Q13 free-text-only mode: every doc matches with
-    // kg_score 0); otherwise a filter drops their rows before tokenizing.
+    // kg_score 0); otherwise a filter drops them before their postings
+    // are read or derived. Each document's free-text score is the number
+    // of query tokens whose postings list it: one row per document from
+    // the all-documents row, one per (query token, document) posting.
     val withDocs = spec.freeText.isDefined || spec.constraints.isEmpty
-    val docRows = docsIn
-      .filter(NativeExpressions.queryValue(withDocs))
-      .select(col(docIdCol).cast("string").as("doc_id"), lit(null).cast("int").as("cid"),
-        lit(0.0).as("w"),
-        size(array_intersect(array_distinct(TextFunctions.tokens(col(textCol))),
-          typedLit(queryTokens(spec.freeText.getOrElse(""))))).cast("double").as("ft"),
-        lit(true).as("doc"))
+    val qTokens = queryTokens(spec.freeText.getOrElse(""))
+    val docRows = Postings.source(docsIn, docIdCol, textCol, Some(qTokens),
+        where = NativeExpressions.queryValue(withDocs)).rows
+      .filter(col("tok").isNull || NativeExpressions.isInSet(col("tok"), qTokens))
+      .select(col("tok").isNull.as("doc"), explode(col("doc_ids")).as("doc_id"))
+      .select(col("doc_id").cast("string").as("doc_id"), lit(null).cast("int").as("cid"),
+        lit(0.0).as("w"), when(col("doc"), 0.0).otherwise(1.0).as("ft"), col("doc"))
     val Seq(rows) = small(kgRows.unionByName(docRows))
     rows
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("cid")).as("matched"), sum(col("w")).as("kg_score"),
-        max(col("ft")).as("ft_score"), max(col("doc")).as("doc"))
+        sum(col("ft")).as("ft_score"), max(col("doc")).as("doc"))
       // every constraint satisfied, and a document row when documents take part
       .filter(col("matched") === NativeExpressions.queryValue(spec.constraints.length.toLong) &&
         (col("doc") || NativeExpressions.queryValue(!withDocs)))
@@ -263,7 +265,7 @@ object QueryCompiler {
     * tokens must appear adjacently (any non-alnum glue between them).
     */
   def phraseMatch(c: Column, phrase: String): Column = {
-    val toks = phrase.toLowerCase.split("\\W+").filter(_.nonEmpty)
+    val toks = phrase.toLowerCase(java.util.Locale.ROOT).split("\\W+").filter(_.nonEmpty)
     val rx = toks.map(java.util.regex.Pattern.quote).mkString("(^|[^a-z0-9])", "[^a-z0-9]+", "($|[^a-z0-9])")
     regexp_instr(lower(c), lit(rx)) > 0
   }
@@ -290,74 +292,59 @@ object QueryCompiler {
     *   score(q,d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·|d|/avgdl))
     *   idf(t)     = ln( (N − df + 0.5)/(df + 0.5) + 1 )      (BM25+, ES form)
     *
-    * Fully in-plan, no driver actions: corpus stats (N, avgdl) are a
-    * 1-row aggregate cross-joined in; per-term document frequencies
-    * are a ≤|q|-row broadcast. Scale shape: the only corpus-wide
-    * shuffle is the (doc, term) tf groupBy, keyed by id — everything
-    * else is broadcast. Scores are emitted rounded (4 decimals) so
-    * cross-engine float comparison is stable.
+    * All four scorers are expressions over one source, the query
+    * tokens' [[Postings]]: one row per (token, document) with its tf,
+    * head tf, document length, df and cf, plus the corpus stats — read
+    * from the session's index, or derived in-plan for any other input.
+    * Fully in-plan, no driver actions. Scale shape: the postings lists
+    * of the query tokens only; the one corpus-wide pass is an in-plan
+    * derivation's, and its stats are a broadcast one-row aggregate.
+    * Scores are emitted rounded (4 decimals) so cross-engine float
+    * comparison is stable.
     */
   def bm25(docsIn: DataFrame, docIdCol: String, textCol: String, query: String,
-           k1: Double = 1.2, b: Double = 0.75, limit: Int = 50): DataFrame = {
-    val Seq(docs) = small(docsIn)
-    val qTokens = queryTokens(query)
-    val toks = docs.select(col(docIdCol).as("doc_id"),
-      TextFunctions.tokens(col(textCol)).as("t"))
-    val lens = toks.select(col("doc_id"), size(col("t")).cast("double").as("dl"))
-    val stats = lens.agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
-    val tf = toks.select(col("doc_id"), explode(col("t")).as("tok"))
-      .filter(NativeExpressions.isInSet(col("tok"), qTokens))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val dfs = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
-    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    val tfNorm = col("tf") * (k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
-    tf.join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .join(lens, "doc_id")
-      .withColumn("s", idf * tfNorm)
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(limit)
+           k1: Double = 1.2, b: Double = 0.75, limit: Int = 50): DataFrame =
+    rank(tokenPostings(docsIn, docIdCol, textCol, query).withColumn("s", idf * tfNorm(k1, b)),
+      limit, round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"))
+
+  /** The postings of `query`'s tokens in `docsIn` ([[Postings.postings]]). */
+  private def tokenPostings(docsIn: DataFrame, docIdCol: String, textCol: String, query: String,
+      headLen: Int = Postings.Head): DataFrame = {
+    val q = queryTokens(query)
+    Postings.postings(Postings.source(docsIn, docIdCol, textCol, Some(q), headLen),
+      _.filter(NativeExpressions.isInSet(col("tok"), q)))
   }
 
-  /** [[bm25]] over a DYNAMIC weighted term table instead of a literal
-    * query string — the scoring core pseudo-relevance feedback needs
-    * (the expansion terms are data-derived, so the tf filter is a
-    * broadcast equi-join on `terms(tok, w)` rather than an `isin`
-    * literal; per-term score contributions are scaled by `w`).
-    * Identical math, identical determinism discipline (scores rounded
-    * to 4 decimals), identical scale shape: the only corpus-wide
-    * shuffle is the (doc, term) tf groupBy.
+  private val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+
+  private def tfNorm(k1: Double, b: Double) = col("tf") * (k1 + 1.0) /
+    (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
+
+  /** Per-document `aggs` of the scored postings, top `limit` by (score
+    * DESC, doc_id).
+    */
+  private def rank(scored: DataFrame, limit: Int, aggs: Column*): DataFrame =
+    scored.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+      .orderBy(col("score").desc, col("doc_id"))
+      .limit(limit)
+
+  /** [[bm25]] over a DYNAMIC weighted term table `terms(tok, w)`, one row
+    * per term, instead of a literal query string — the scoring core
+    * pseudo-relevance feedback needs (the expansion terms are
+    * data-derived, so the postings are selected by a broadcast
+    * equi-join on `tok` rather than a token set; per-term score
+    * contributions are scaled by `w`). Identical math, identical
+    * determinism discipline (scores rounded to 4 decimals).
     */
   def bm25Weighted(docsIn: DataFrame, docIdCol: String, textCol: String,
                    termsIn: DataFrame, k1: Double = 1.2, b: Double = 0.75,
                    limit: Int = 50): DataFrame = {
-    val Seq(docs, terms) = small(docsIn, termsIn)
-    val toks = docs.select(col(docIdCol).as("doc_id"),
-      TextFunctions.tokens(col(textCol)).as("t"))
-    val lens = toks.select(col("doc_id"), size(col("t")).cast("double").as("dl"))
-    val stats = lens.agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
-    val tf = toks.select(col("doc_id"), explode(col("t")).as("tok"))
-      .join(broadcast(terms.select(col("tok"))), "tok")
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val dfs = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
-    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    val tfNorm = col("tf") * (k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
-    tf.join(broadcast(terms), "tok")
-      .join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .join(lens, "doc_id")
-      .withColumn("s", col("w") * idf * tfNorm)
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"),
-        sum(when(col("w") === 1.0, 1L).otherwise(0L)).as("matched_orig"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(limit)
+    val Seq(terms) = small(termsIn)
+    val scored = Postings.postings(Postings.source(docsIn, docIdCol, textCol, None),
+        _.join(broadcast(terms), "tok"))
+      .withColumn("s", col("w") * idf * tfNorm(k1, b))
+    rank(scored, limit, round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"),
+      sum(when(col("w") === 1.0, 1L).otherwise(0L)).as("matched_orig"))
   }
 
   /** BM25F (Robertson & Zaragoza 2009 §"The Probabilistic Relevance
@@ -374,55 +361,32 @@ object QueryCompiler {
     * contribution sub-linear across fields.) Fields here are positional
     * — the first `headLen` tokens form the "head" field (title-weight
     * w=2, gentle b=0.5), the remainder the "body" (w=1, b=0.75) — so
-    * the oracle can re-derive the exact same split from raw text.
+    * the oracle can re-derive the exact same split from raw text. The
+    * index counts heads of [[Postings.Head]] tokens; another `headLen`
+    * derives its postings in-plan.
     *
     * Determinism: per-field tf/length are exact integers; avglen is an
     * exact-integer sum ÷ count; each tf̃ is a fixed two-term IEEE chain
     * (constants 0.5/0.25/0.75/2.0 are exact binary; k1 written as the
     * same literal both engines); scores rounded to 4 decimals before
     * the cross-engine compare, the [[bm25]] convention.
-    *
-    * Scale shape: identical to [[bm25]] — the only corpus-wide shuffle
-    * is the (doc, term) tf groupBy; df and corpus stats broadcast.
     */
   def bm25f(docsIn: DataFrame, docIdCol: String, textCol: String,
             query: String, headLen: Int = 10, wHead: Double = 2.0,
             k1: Double = 1.2, limit: Int = 50): DataFrame = {
-    val Seq(docs) = small(docsIn)
-    val qTokens = queryTokens(query)
-    val toks = docs.select(col(docIdCol).as("doc_id"),
-      TextFunctions.tokens(col(textCol)).as("t"))
-    val lens = toks.select(col("doc_id"),
-      least(size(col("t")), lit(headLen)).cast("double").as("lh"),
-      greatest(size(col("t")) - headLen, lit(0)).cast("double").as("lb"))
-    val stats = lens.agg(count(lit(1)).cast("double").as("n"),
-      avg(col("lh")).as("avg_lh"), avg(col("lb")).as("avg_lb"))
-    val tf = toks
-      .select(col("doc_id"), posexplode(col("t")).as(Seq("pos", "tok")))
-      .filter(NativeExpressions.isInSet(col("tok"), qTokens))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(sum(when(col("pos") < headLen, 1L).otherwise(0L)).as("tfh"),
-        sum(when(col("pos") >= headLen, 1L).otherwise(0L)).as("tfb"))
-    val dfs = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
-    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+    val lh = least(col("dl"), lit(headLen.toDouble))
+    val lb = greatest(col("dl") - headLen, lit(0.0))
+    val tfb = col("tf") - col("tf_head")
     // two-term pseudo-frequency; the body term is gated on avg_lb > 0
     // (an all-short corpus has tfb = 0 everywhere, but 0/NaN ≠ 0)
     val tfTilde =
-      lit(wHead) * col("tfh").cast("double") /
-        (lit(0.5) + lit(0.5) * col("lh") / col("avg_lh")) +
-      when(col("avg_lb") > 0.0,
-        col("tfb").cast("double") /
-          (lit(0.25) + lit(0.75) * col("lb") / col("avg_lb")))
+      lit(wHead) * col("tf_head") / (lit(0.5) + lit(0.5) * lh / col("avg_lh")) +
+      when(col("avg_lb") > 0.0, tfb / (lit(0.25) + lit(0.75) * lb / col("avg_lb")))
         .otherwise(lit(0.0))
-    tf.join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .join(lens, "doc_id")
-      .withColumn("s", idf * tfTilde / (lit(k1) + tfTilde))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"),
-        sum(col("tfh")).as("tf_head"), sum(col("tfb")).as("tf_body"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(limit)
+    rank(tokenPostings(docsIn, docIdCol, textCol, query, headLen)
+        .withColumn("s", idf * tfTilde / (lit(k1) + tfTilde)),
+      limit, round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"),
+      sum(col("tf_head").cast("long")).as("tf_head"), sum(tfb.cast("long")).as("tf_body"))
   }
 
   /** Dirichlet-smoothed query-likelihood retrieval (Zhai & Lafferty
@@ -444,36 +408,13 @@ object QueryCompiler {
     * total score rounded to 4 decimals (the [[bm25]] convention);
     * (score DESC, doc_id) total order. cf/|C| are exact integers cast
     * once; μ is the same literal on both engines.
-    *
-    * Scale shape ≡ [[bm25]]: the only corpus-wide shuffle is the
-    * (doc, term) tf groupBy; cf (≤|q| rows) and |C| (1 row) broadcast;
-    * final order is a top-k (TakeOrderedAndProject), never a global
-    * sort.
     */
   def qld(docsIn: DataFrame, docIdCol: String, textCol: String,
           query: String, mu: Double = 300.0, limit: Int = 50): DataFrame = {
-    val Seq(docs) = small(docsIn)
-    val qTokens = queryTokens(query)
-    val toks = docs.select(col(docIdCol).as("doc_id"),
-      TextFunctions.tokens(col(textCol)).as("t"))
-    val lens = toks.select(col("doc_id"), size(col("t")).cast("double").as("dl"))
-    val ex = toks.select(col("doc_id"), explode(col("t")).as("tok"))
-    val stats = ex.agg(count(lit(1)).cast("double").as("ctot"))
-    val cfs = ex.filter(NativeExpressions.isInSet(col("tok"), qTokens))
-      .groupBy(col("tok")).agg(count(lit(1)).cast("double").as("cf"))
-    val tf = ex.filter(NativeExpressions.isInSet(col("tok"), qTokens))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-    tf.join(broadcast(cfs), "tok")
-      .crossJoin(broadcast(stats))
-      .withColumn("s", log(lit(1.0) + col("tf") * col("ctot") / (lit(mu) * col("cf"))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("s")).as("sm"), count(lit(1)).as("matched"))
-      .join(lens, "doc_id")
-      .withColumn("score",
-        round(col("sm") + NativeExpressions.queryValue(qTokens.size.toDouble) * log(lit(mu) / (col("dl") + lit(mu))), 4))
-      .select(col("doc_id"), col("score"), col("matched"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(limit)
+    val prior = NativeExpressions.queryValue(queryTokens(query).size.toDouble) *
+      log(lit(mu) / (max(col("dl")) + lit(mu)))
+    rank(tokenPostings(docsIn, docIdCol, textCol, query)
+        .withColumn("s", log(lit(1.0) + col("tf") * col("ctot") / (lit(mu) * col("cf")))),
+      limit, round(sum(col("s")) + prior, 4).as("score"), count(lit(1)).as("matched"))
   }
 }

@@ -84,6 +84,23 @@ class QueryCompilerSpec extends SparkSpec {
     assert(rows.toSeq == Seq(("d1", 10.0), ("d2", 2.0))) // strict zone outranks
   }
 
+  test("constraint values and phrases lowercase the same under a Turkish default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      // under "tr", "JOIN".toLowerCase is "joın" (dotless ı): no KG key
+      // and no lowered text would ever match it
+      val opKg = Seq(("d1", "op", "join", "join", "dict", "content", 1.0))
+        .toDF("doc_id", "field", "value", "key", "method", "segment", "confidence")
+      val opDocs = Seq(("d1", "a hash JOIN here"), ("d2", "no match")).toDF("doc_id", "text")
+      val hits = QueryCompiler.search(opKg, opDocs, "doc_id", "text",
+        QuerySpec(Seq(Constraint("op", "JOIN"))), Catalog(Map("op" -> TypeMapping(Seq("op" -> 1.0)))))
+      assert(hits.select("doc_id").as[String].collect().toSeq == Seq("d1"))
+      val phrased = opDocs.filter(QueryCompiler.phraseMatch($"text", "HASH JOIN"))
+      assert(phrased.select("doc_id").as[String].collect().toSeq == Seq("d1"))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("Q9 highlight extracts fragment around the term") {
     val frag = docs.select(QueryCompiler.highlight($"text", "lagos", 8).as("h"))
       .as[String].collect()
