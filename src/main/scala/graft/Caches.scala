@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Storage-block hygiene for checkpointed plans and long-lived sessions.
@@ -76,12 +77,17 @@ object Caches {
     * bench or stress harness, a multi-tenant janitor) can free them
     * without touching the index's memo, and the stale frame would fail
     * every later consumer with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Cheap
-    * driver-side check: every LogicalRDD id in the analyzed plan must
-    * still be registered as persistent.
+    * driver-side check: every LogicalRDD id in the analyzed plan (a
+    * prepared op's bound tree included) must still be registered as
+    * persistent.
     */
-  def alive(df: DataFrame): Boolean = {
-    val persisted = df.sparkSession.sparkContext.getPersistentRDDs.keySet
-    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.forall(persisted.contains)
+  def alive(df: DataFrame): Boolean =
+    alive(df.sparkSession, graft.query.Prepared.unfold(df.queryExecution.analyzed))
+
+  /** Whether every checkpoint `plan` reads still exists in `spark`. */
+  def alive(spark: SparkSession, plan: LogicalPlan): Boolean = {
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    plan.collect { case lr: LogicalRDD => lr.rdd.id }.forall(persisted.contains)
   }
 
   /** Snapshot the ids of every currently-persisted RDD — call after

@@ -3,8 +3,11 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** What every `main` (and the test session) shares: the local session,
   * the warm-up, the session-scoped indexes, the min-of-k timing and one
@@ -141,7 +144,8 @@ object Harness {
 
   /** A completed stage: wall ms from submission to completion, and its
     * call site (Spark's stage name: "localCheckpoint at RecSys.scala:106";
-    * a stage AQE submits from its own thread names that thread's frame).
+    * for a stage AQE submits from its own thread, the description of its
+    * SQL execution).
     */
   final case class Stage(ms: Long, tasks: Int, shuffleRead: Long,
       shuffleWrite: Long, spill: Long, callsite: String)
@@ -172,31 +176,44 @@ object Harness {
 
   /** Records, per job group, the jobs and completed stages run under it.
     * Jobs outside any group are ignored. A stage belongs to the group of
-    * the first job that submitted it.
+    * the first job that submitted it. A stage AQE submits from its pool
+    * thread has that thread's frame as its call site; it is named by the
+    * description of the SQL execution it ran in instead.
     */
   final class GroupListener extends SparkListener {
     private val groups = mutable.Map[String, Exec]()
-    private val stageGroup = mutable.Map[Int, String]()
+    private val stageGroup = mutable.Map[Int, (String, Option[Long])]()
+    private val executions = mutable.Map[Long, String]()
     private var events = 0L
 
     override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
-      Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+      val props = Option(js.properties)
+      props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
         events += 1
         val e = groups.getOrElse(g, Exec.empty)
         groups(g) = e.copy(jobs = e.jobs + 1)
-        js.stageIds.foreach(id => if (!stageGroup.contains(id)) stageGroup(id) = g)
+        val execution = props.flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+        js.stageIds.foreach(id => if (!stageGroup.contains(id)) stageGroup(id) = (g, execution))
       }
+    }
+
+    override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+      case e: SparkListenerSQLExecutionStart => synchronized(executions(e.executionId) = e.description)
+      case e: SparkListenerSQLExecutionEnd => synchronized(executions.remove(e.executionId))
+      case _ => ()
     }
 
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
       val i = sc.stageInfo
-      stageGroup.remove(i.stageId).foreach { g =>
+      stageGroup.remove(i.stageId).foreach { case (g, execution) =>
         events += 1
         val m = i.taskMetrics
         val ms = (for (s <- i.submissionTime; c <- i.completionTime) yield c - s).getOrElse(0L)
+        val pooled = i.name.contains("withThreadLocalCaptured") || i.name.contains("CompletableFuture")
+        val name = execution.filter(_ => pooled).flatMap(executions.get).getOrElse(i.name)
         groups(g) = groups.getOrElse(g, Exec.empty).add(Stage(ms, i.numTasks,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-          m.memoryBytesSpilled + m.diskBytesSpilled, i.name))
+          m.memoryBytesSpilled + m.diskBytesSpilled, name))
       }
     }
 

@@ -2,11 +2,12 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -25,7 +26,8 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * files under it (names, sizes, mtimes) and with the SQL conf entries
   * that change parquet inference: rewriting the table or changing that
   * conf re-infers. The fingerprint comes from the file index Spark
-  * builds for the read, so checking it lists nothing twice.
+  * builds for the read, so checking it lists nothing twice. Within a
+  * session the resolved relation itself is memoized too ([[read]]).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -36,12 +38,14 @@ object Tables {
 
   private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
 
-  /** The distinct files `df`'s file scans read, as their file indexes
-    * listed them when the relations were built: looking them up lists
-    * nothing.
+  private val relations = new SessionMemo[String, (Stamp, BaseRelation)]
+
+  /** The distinct files `df`'s file scans read (a prepared op's bound
+    * tree included), as their file indexes listed them when the relations
+    * were built: looking them up lists nothing.
     */
   private[graft] def filesRead(df: DataFrame): Seq[FileStatus] =
-    df.queryExecution.analyzed.collect {
+    graft.query.Prepared.unfold(df.queryExecution.analyzed).collect {
       case l: LogicalRelation => l.relation
     }.collect {
       case r: HadoopFsRelation => r.location
@@ -49,33 +53,60 @@ object Tables {
       case i: PartitioningAwareFileIndex => i.allFiles()
     }.flatten.distinct
 
-  /** A parquet read's stamp: the leaf files it reads and the session's
-    * parquet-inference conf.
-    */
-  private def stampOf(df: DataFrame): Stamp = {
-    val files = filesRead(df).map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-    val conf = df.sparkSession.conf.getAll.toSeq.filter { case (k, _) =>
+  /** The session's parquet-inference conf. */
+  private def parquetConf(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
         k == "spark.sql.caseSensitive"
-    }
-    Stamp(files.sorted, conf.sorted)
+    }.sorted
+
+  private def stamp(files: Seq[FileStatus], spark: SparkSession): Stamp =
+    Stamp(files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted, parquetConf(spark))
+
+  /** The data files under `p`, listed as a parquet read lists them: names
+    * starting with `.`, or with `_` outside a `k=v` partition directory,
+    * are not data.
+    */
+  private def listing(fs: FileSystem, p: Path): Seq[FileStatus] = {
+    def hidden(name: String) = name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    walk(fs.getFileStatus(p))
   }
 
-  /** `path` read as parquet with its memoized schema, inferring it only
-    * when the memo has none or its stamp no longer matches the read's.
-    * A path that does not exist fails with Spark's own error.
+  /** `path` read as parquet. In a session, a path read before whose files
+    * and conf are unchanged is served from the relation resolved then,
+    * with fresh attribute ids (two reads still self-join): resolving a
+    * data source costs more than the query-plane op it feeds. Otherwise
+    * it is resolved with the memoized schema, inferring it only when the
+    * memo has none or its stamp no longer matches the read's. The
+    * listing is taken before resolving, so a table rewritten meanwhile
+    * misses on the next read. A path that does not exist fails with
+    * Spark's own error.
     */
   private def read(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
-    val key = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
-    Option(schemas.get(key))
-      .map { case (stamp, schema) => (stamp, spark.read.schema(schema).parquet(path)) }
-      .collect { case (stamp, df) if stampOf(df) == stamp => df }
-      .getOrElse {
-        val df = spark.read.parquet(path)
-        schemas.put(key, (stampOf(df), df.schema))
-        df
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(p).toString
+    val listed = scala.util.Try(stamp(listing(fs, p), spark)).toOption
+    relations.get(spark, key).collect {
+      case (st, rel) if listed.contains(st) => spark.baseRelationToDataFrame(rel)
+    }.getOrElse {
+      val df = Option(schemas.get(key))
+        .map { case (st, schema) => (st, spark.read.schema(schema).parquet(path)) }
+        .collect { case (st, df) if stamp(filesRead(df), spark) == st => df }
+        .getOrElse {
+          val df = spark.read.parquet(path)
+          schemas.put(key, (stamp(filesRead(df), spark), df.schema))
+          df
+        }
+      df.queryExecution.analyzed match {
+        case l: LogicalRelation => listed.foreach(st => relations.put(spark, key, (st, l.relation)))
+        case _ => ()
       }
+      df
+    }
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -1398,35 +1398,26 @@ object Relational {
     * session scanning many directories would otherwise accrete one
     * checkpointed edge index per dir without bound. Beyond
     * [[EdgeCacheMax]] entries the least-recently-USED index is evicted
-    * and its storage blocks freed (access-ordered map; eviction runs
-    * under the same lock as lookup). Evicting a checkpointed index is
-    * safe for cached-index consumers: the next graphBuild for that key
-    * simply rebuilds.
+    * and its storage blocks freed (eviction runs under the same lock as
+    * lookup). Evicting a checkpointed index is safe for cached-index
+    * consumers: the next graphBuild for that key simply rebuilds. A
+    * stopped session's entries are dropped ([[graft.SessionMemo]]).
     */
   private val EdgeCacheMax = 4
   private val edgeCache =
-    new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        if (size() > EdgeCacheMax) { graft.Caches.free(e.getValue); true }
-        else false
-    }
+    new graft.SessionMemo[String, DataFrame](EdgeCacheMax, graft.Caches.free)
 
   /** Current number of memoized edge indexes (spec hook). */
-  private[queries] def edgeCacheSize: Int =
-    edgeCache.synchronized(edgeCache.size())
+  private[queries] def edgeCacheSize: Int = edgeCache.size
 
   /** Force-build (or reuse) the memoized edge index; returns it.
     * Self-healing: a hit whose blocks were swept rebuilds in place.
     */
   def graphBuild(s: SparkSession, dir: String): DataFrame =
     edgeCache.synchronized {
-      val key = System.identityHashCode(s) + "|" + dir
-      val hit = edgeCache.get(key)
-      if (hit != null && graft.Caches.alive(hit)) hit
-      else {
+      edgeCache.get(s, dir).filter(graft.Caches.alive).getOrElse {
         val built = buildCoSupplyEdges(s, dir)
-        edgeCache.put(key, built)
+        edgeCache.put(s, dir, built)
         built
       }
     }

@@ -2,7 +2,7 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -45,13 +45,14 @@ object Postings {
 
   private type Stamp = Seq[(String, Long, Long)]
 
-  /** A built index: its rows, what it was built over and its corpus
-    * counts: documents, tokens, and tokens in the documents' heads.
+  /** A built index: its rows, what it was built over, its corpus
+    * counts (documents, tokens, and tokens in the documents' heads) and
+    * the frames built in its job (the KG).
     */
   final case class Index(rows: DataFrame, idCol: String, textCol: String,
-      idType: DataType, stamp: Stamp, n: Long, ctot: Long, heads: Long)
+      idType: DataType, stamp: Stamp, n: Long, ctot: Long, heads: Long, alongside: Seq[DataFrame])
 
-  private val built = scala.collection.concurrent.TrieMap.empty[(SparkSession, Seq[String]), Index]
+  private val built = new graft.SessionMemo[Seq[String], Index]
 
   /** A scan's files, for an input whose analyzed plan is a bare file scan. */
   private def bareScan(docs: DataFrame): Option[Stamp] = docs.queryExecution.analyzed match {
@@ -81,9 +82,8 @@ object Postings {
     val drained = alongside.map(_.queryExecution.toRdd.map(_ => Seq(0L, 0L, 0L)))
     val Seq(n, ctot, heads) = docs.sparkSession.sparkContext.union(counts +: drained)
       .fold(Seq(0L, 0L, 0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
-    val ix = Index(rows, idCol, textCol, docs.schema(idCol).dataType, stamp, n, ctot, heads)
-    built.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    built.put((docs.sparkSession, stamp.map(_._1)), ix)
+    val ix = Index(rows, idCol, textCol, docs.schema(idCol).dataType, stamp, n, ctot, heads, alongside)
+    built.put(docs.sparkSession, stamp.map(_._1), ix)
     ix
   }
 
@@ -91,10 +91,16 @@ object Postings {
   def lookup(docs: DataFrame, idCol: String, textCol: String, headLen: Int): Option[Index] =
     for {
       stamp <- bareScan(docs)
-      ix <- built.get((docs.sparkSession, stamp.map(_._1)))
+      ix <- built.get(docs.sparkSession, stamp.map(_._1))
       if ix.stamp == stamp && ix.idCol == idCol && ix.textCol == textCol && headLen == Head &&
         docs.schema(idCol).dataType == ix.idType && Caches.alive(ix.rows)
     } yield ix
+
+  /** Whether `df` itself is a live frame built alongside an index (the
+    * memoized KG): an index of the session, by identity.
+    */
+  def isIndex(df: DataFrame): Boolean =
+    built.of(df.sparkSession).exists { case (_, ix) => ix.alongside.exists(_ eq df) } && Caches.alive(df)
 
   /** The layout rows of `toks(doc_id, t)`, one partition at a time; with
     * `keep`, only those tokens' rows (and the all-documents row). A null

@@ -1,6 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, ScalaReflection}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -44,6 +46,13 @@ import graft.plans.NativeExpressions
   * entries) instead of recompiling them. Model parameters (k1, b, μ,
   * the bm25f head) and sizes (limit, facet k) stay literals: a new
   * value of one of them compiles once more.
+  *
+  * Preparation: over the session's indexes (the memoized KG and the
+  * postings index) search, facets' facet plan, bm25, bm25f and qld are
+  * built, analyzed and optimized once per kind, index and literals, and
+  * each call binds its values into that plan ([[Prepared]]). Each op is
+  * written once, as the code that builds its plan from one column per
+  * value; any other input runs that code over the values themselves.
   */
 object QueryCompiler {
 
@@ -61,7 +70,7 @@ object QueryCompiler {
     * input, and for the KG index and table scans both give the same
     * size.
     */
-  private[query] def small(inputs: DataFrame*): Seq[DataFrame] = {
+  private[graft] def small(inputs: DataFrame*): Seq[DataFrame] = {
     val limit = inputs.head.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val estimate = inputs.map(_.queryExecution.analyzed.stats.sizeInBytes).sum
     if (limit < 0 || estimate > limit) inputs
@@ -143,7 +152,18 @@ object QueryCompiler {
     * stays in the plan.
     */
   def search(kgIn: DataFrame, docsIn: DataFrame, docIdCol: String, textCol: String,
-             spec: QuerySpec, catalog: Catalog): DataFrame = {
+             spec: QuerySpec, catalog: Catalog): DataFrame =
+    Prepared(searchOp(kgIn, docsIn, docIdCol, textCol, spec, catalog))
+
+  /** The type `typedLit` gives [[search]]'s constraint map, and its
+    * converter, derived once: reflecting them per call cost more than the
+    * rest of a prepared search's construction.
+    */
+  private val SatisfiesType = ScalaReflection.schemaFor[Map[String, Map[String, Seq[(Int, Double)]]]].dataType
+  private val toSatisfies = CatalystTypeConverters.createToCatalystConverter(SatisfiesType)
+
+  private[query] def searchOp(kgIn: DataFrame, docsIn: DataFrame, docIdCol: String, textCol: String,
+      spec: QuerySpec, catalog: Catalog): Prepared.Op = {
     // field -> key -> the (constraint, field weight) pairs that a KG row
     // with that field and key satisfies; a field listed twice in one
     // mapping keeps its first weight
@@ -155,40 +175,50 @@ object QueryCompiler {
     } yield (f, v, (i, w))).groupBy(_._1).map { case (f, xs) =>
       f -> xs.groupBy(_._2).map { case (v, ys) => v -> ys.map(_._3) }
     }
-    val kgRows = kgIn
-      .filter(NativeExpressions.isInSet(col("field"), satisfies.keys) &&
-        NativeExpressions.isInSet(col("key"), satisfies.values.flatMap(_.keys)))
-      .select(col("doc_id"),
-        explode(element_at(element_at(typedLit(satisfies), col("field")), col("key"))).as("m"))
-      .select(col("doc_id"), col("m._1").as("cid"), col("m._2").as("w"),
-        lit(null).cast("double").as("ft"), lit(null).cast("boolean").as("doc"))
     // The documents take part when there is free text to score, or no
     // constraint (the Q13 free-text-only mode: every doc matches with
     // kg_score 0); otherwise a filter drops them before their postings
-    // are read or derived. Each document's free-text score is the number
-    // of query tokens whose postings list it: one row per document from
-    // the all-documents row, one per (query token, document) posting.
+    // are read or derived.
     val withDocs = spec.freeText.isDefined || spec.constraints.isEmpty
     val qTokens = queryTokens(spec.freeText.getOrElse(""))
-    val docRows = Postings.source(docsIn, docIdCol, textCol, Some(qTokens),
-        where = NativeExpressions.queryValue(withDocs)).rows
-      .filter(col("tok").isNull || NativeExpressions.isInSet(col("tok"), qTokens))
-      .select(col("tok").isNull.as("doc"), explode(col("doc_ids")).as("doc_id"))
-      .select(col("doc_id").cast("string").as("doc_id"), lit(null).cast("int").as("cid"),
-        lit(0.0).as("w"), when(col("doc"), 0.0).otherwise(1.0).as("ft"), col("doc"))
-    val Seq(rows) = small(kgRows.unionByName(docRows))
-    rows
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("cid")).as("matched"), sum(col("w")).as("kg_score"),
-        sum(col("ft")).as("ft_score"), max(col("doc")).as("doc"))
-      // every constraint satisfied, and a document row when documents take part
-      .filter(col("matched") === NativeExpressions.queryValue(spec.constraints.length.toLong) &&
-        (col("doc") || NativeExpressions.queryValue(!withDocs)))
-      .select(col("doc_id"),
-        (col("kg_score") + when(col("doc"), col("ft_score")).otherwise(0.0)).as("score"),
-        col("matched"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(spec.limit)
+    val sources = for {
+      ix <- Postings.lookup(docsIn, docIdCol, textCol, Postings.Head) if Postings.isIndex(kgIn)
+    } yield Seq(kgIn, ix.rows)
+    Prepared.Op("search", sources, Seq(spec.limit, docIdCol, textCol), Vector(
+        NativeExpressions.isInSet(col("field"), satisfies.keys),
+        NativeExpressions.isInSet(col("key"), satisfies.values.flatMap(_.keys)),
+        GraftColumnBridge.column(Literal(toSatisfies(satisfies), SatisfiesType)),
+        NativeExpressions.queryValue(withDocs),
+        NativeExpressions.isInSet(col("tok"), qTokens),
+        NativeExpressions.queryValue(spec.constraints.length.toLong),
+        NativeExpressions.queryValue(!withDocs)),
+      { case Seq(inFields, inKeys, satisfied, docsTakePart, inTokens, constraints, noDocs) =>
+        val kgRows = kgIn
+          .filter(inFields && inKeys)
+          .select(col("doc_id"), explode(element_at(element_at(satisfied, col("field")), col("key"))).as("m"))
+          .select(col("doc_id"), col("m._1").as("cid"), col("m._2").as("w"),
+            lit(null).cast("double").as("ft"), lit(null).cast("boolean").as("doc"))
+        // Each document's free-text score is the number of query tokens
+        // whose postings list it: one row per document from the
+        // all-documents row, one per (query token, document) posting.
+        val docRows = Postings.source(docsIn, docIdCol, textCol, Some(qTokens), where = docsTakePart).rows
+          .filter(col("tok").isNull || inTokens)
+          .select(col("tok").isNull.as("doc"), explode(col("doc_ids")).as("doc_id"))
+          .select(col("doc_id").cast("string").as("doc_id"), lit(null).cast("int").as("cid"),
+            lit(0.0).as("w"), when(col("doc"), 0.0).otherwise(1.0).as("ft"), col("doc"))
+        val Seq(rows) = small(kgRows.unionByName(docRows))
+        rows
+          .groupBy(col("doc_id"))
+          .agg(countDistinct(col("cid")).as("matched"), sum(col("w")).as("kg_score"),
+            sum(col("ft")).as("ft_score"), max(col("doc")).as("doc"))
+          // every constraint satisfied, and a document row when documents take part
+          .filter(col("matched") === constraints && (col("doc") || noDocs))
+          .select(col("doc_id"),
+            (col("kg_score") + when(col("doc"), col("ft_score")).otherwise(0.0)).as("score"),
+            col("matched"))
+          .orderBy(col("score").desc, col("doc_id"))
+          .limit(spec.limit)
+      })
   }
 
   /** The distinct tokens of a query, tokenized exactly like the
@@ -207,18 +237,24 @@ object QueryCompiler {
     * classes a search compiled), the filter is pushed to a KG file
     * scan, and the facet plan is the same for every hit list.
     */
-  def facets(kgIn: DataFrame, hits: DataFrame, fields: Seq[String], k: Int = 20): DataFrame = {
+  def facets(kgIn: DataFrame, hits: DataFrame, fields: Seq[String], k: Int = 20): DataFrame =
+    Prepared(facetsOp(kgIn, hits, fields, k))
+
+  private[query] def facetsOp(kgIn: DataFrame, hits: DataFrame, fields: Seq[String], k: Int): Prepared.Op = {
     val hitIds = hits.collect().flatMap(r => Option(r.getAs[Any]("doc_id")).map(_.toString))
-    val Seq(kg) = small(kgIn)
-    kg.filter(NativeExpressions.isInSet(col("doc_id"), hitIds) &&
-        NativeExpressions.isInSet(col("field"), fields))
-      .groupBy(col("field"), col("key"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("field")).orderBy(col("cnt").desc, col("key"))))
-      .filter(col("rank") <= k)
-      .select(col("field"), col("key"), col("cnt"), col("rank"))
+    Prepared.Op("facets", Some(Seq(kgIn)).filter(_ => Postings.isIndex(kgIn)), Seq(k), Vector(
+        NativeExpressions.isInSet(col("doc_id"), hitIds), NativeExpressions.isInSet(col("field"), fields)),
+      { case Seq(inHits, inFields) =>
+        val Seq(kg) = small(kgIn)
+        kg.filter(inHits && inFields)
+          .groupBy(col("field"), col("key"))
+          .agg(count(lit(1)).as("cnt"))
+          .withColumn("rank",
+            row_number().over(org.apache.spark.sql.expressions.Window
+              .partitionBy(col("field")).orderBy(col("cnt").desc, col("key"))))
+          .filter(col("rank") <= k)
+          .select(col("field"), col("key"), col("cnt"), col("rank"))
+      })
   }
 
   /** Q10 execution with timeout (config/etk/config.json:45, 180s): run
@@ -304,15 +340,30 @@ object QueryCompiler {
     */
   def bm25(docsIn: DataFrame, docIdCol: String, textCol: String, query: String,
            k1: Double = 1.2, b: Double = 0.75, limit: Int = 50): DataFrame =
-    rank(tokenPostings(docsIn, docIdCol, textCol, query).withColumn("s", idf * tfNorm(k1, b)),
-      limit, round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"))
+    Prepared(bm25Op(docsIn, docIdCol, textCol, query, k1, b, limit))
 
-  /** The postings of `query`'s tokens in `docsIn` ([[Postings.postings]]). */
-  private def tokenPostings(docsIn: DataFrame, docIdCol: String, textCol: String, query: String,
-      headLen: Int = Postings.Head): DataFrame = {
+  private[query] def bm25Op(docsIn: DataFrame, docIdCol: String, textCol: String, query: String,
+      k1: Double, b: Double, limit: Int): Prepared.Op =
+    tokenOp("bm25", docsIn, docIdCol, textCol, query, Postings.Head, Seq(k1, b, limit)) { (postings, _) =>
+      rank(postings.withColumn("s", idf * tfNorm(k1, b)),
+        limit, round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"))
+    }
+
+  /** An op over the postings of `query`'s tokens in `docsIn`
+    * ([[Postings.postings]]): `scored` ranks them, given too the column
+    * holding the number of query tokens. It is prepared over the
+    * session's postings index of `docsIn`, if there is one.
+    */
+  private def tokenOp(kind: String, docsIn: DataFrame, docIdCol: String, textCol: String,
+      query: String, headLen: Int, literals: Seq[Any])(scored: (DataFrame, Column) => DataFrame): Prepared.Op = {
     val q = queryTokens(query)
-    Postings.postings(Postings.source(docsIn, docIdCol, textCol, Some(q), headLen),
-      _.filter(NativeExpressions.isInSet(col("tok"), q)))
+    Prepared.Op(kind, Postings.lookup(docsIn, docIdCol, textCol, headLen).map(ix => Seq(ix.rows)),
+      Seq(docIdCol, textCol, headLen) ++ literals,
+      Vector(NativeExpressions.isInSet(col("tok"), q), NativeExpressions.queryValue(q.size.toDouble)),
+      { case Seq(inQuery, terms) =>
+        scored(Postings.postings(Postings.source(docsIn, docIdCol, textCol, Some(q), headLen), _.filter(inQuery)),
+          terms)
+      })
   }
 
   private val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
@@ -373,7 +424,11 @@ object QueryCompiler {
     */
   def bm25f(docsIn: DataFrame, docIdCol: String, textCol: String,
             query: String, headLen: Int = 10, wHead: Double = 2.0,
-            k1: Double = 1.2, limit: Int = 50): DataFrame = {
+            k1: Double = 1.2, limit: Int = 50): DataFrame =
+    Prepared(bm25fOp(docsIn, docIdCol, textCol, query, headLen, wHead, k1, limit))
+
+  private[query] def bm25fOp(docsIn: DataFrame, docIdCol: String, textCol: String,
+      query: String, headLen: Int, wHead: Double, k1: Double, limit: Int): Prepared.Op = {
     val lh = least(col("dl"), lit(headLen.toDouble))
     val lb = greatest(col("dl") - headLen, lit(0.0))
     val tfb = col("tf") - col("tf_head")
@@ -383,10 +438,11 @@ object QueryCompiler {
       lit(wHead) * col("tf_head") / (lit(0.5) + lit(0.5) * lh / col("avg_lh")) +
       when(col("avg_lb") > 0.0, tfb / (lit(0.25) + lit(0.75) * lb / col("avg_lb")))
         .otherwise(lit(0.0))
-    rank(tokenPostings(docsIn, docIdCol, textCol, query, headLen)
-        .withColumn("s", idf * tfTilde / (lit(k1) + tfTilde)),
-      limit, round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"),
-      sum(col("tf_head").cast("long")).as("tf_head"), sum(tfb.cast("long")).as("tf_body"))
+    tokenOp("bm25f", docsIn, docIdCol, textCol, query, headLen, Seq(wHead, k1, limit)) { (postings, _) =>
+      rank(postings.withColumn("s", idf * tfTilde / (lit(k1) + tfTilde)),
+        limit, round(sum(col("s")), 4).as("score"), count(lit(1)).as("matched"),
+        sum(col("tf_head").cast("long")).as("tf_head"), sum(tfb.cast("long")).as("tf_body"))
+    }
   }
 
   /** Dirichlet-smoothed query-likelihood retrieval (Zhai & Lafferty
@@ -410,11 +466,14 @@ object QueryCompiler {
     * once; μ is the same literal on both engines.
     */
   def qld(docsIn: DataFrame, docIdCol: String, textCol: String,
-          query: String, mu: Double = 300.0, limit: Int = 50): DataFrame = {
-    val prior = NativeExpressions.queryValue(queryTokens(query).size.toDouble) *
-      log(lit(mu) / (max(col("dl")) + lit(mu)))
-    rank(tokenPostings(docsIn, docIdCol, textCol, query)
-        .withColumn("s", log(lit(1.0) + col("tf") * col("ctot") / (lit(mu) * col("cf")))),
-      limit, round(sum(col("s")) + prior, 4).as("score"), count(lit(1)).as("matched"))
-  }
+          query: String, mu: Double = 300.0, limit: Int = 50): DataFrame =
+    Prepared(qldOp(docsIn, docIdCol, textCol, query, mu, limit))
+
+  private[query] def qldOp(docsIn: DataFrame, docIdCol: String, textCol: String,
+      query: String, mu: Double, limit: Int): Prepared.Op =
+    tokenOp("qld", docsIn, docIdCol, textCol, query, Postings.Head, Seq(mu, limit)) { (postings, terms) =>
+      val prior = terms * log(lit(mu) / (max(col("dl")) + lit(mu)))
+      rank(postings.withColumn("s", log(lit(1.0) + col("tf") * col("ctot") / (lit(mu) * col("cf")))),
+        limit, round(sum(col("s")) + prior, 4).as("score"), count(lit(1)).as("matched"))
+    }
 }

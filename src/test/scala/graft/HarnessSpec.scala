@@ -40,6 +40,19 @@ class HarnessSpec extends SparkSpec {
     assert(e.slowest.size == 2 && e.slowest.map(_.ms) == e.slowest.map(_.ms).sorted.reverse)
   }
 
+  test("a shuffle stage AQE submits is named by its SQL execution, not by AQE's pool thread") {
+    val group = "harness-spec-aqe"
+    withConf("spark.sql.adaptive.enabled", "true") {
+      Harness.inGroup(spark, group)(
+        spark.range(0, 1000, 1, 4).groupBy(col("id") % 5).count().collect())
+    }
+    val l = Harness.listener(spark)
+    l.drain()
+    val e = l.take(group)
+    assert(e.stages >= 2)
+    assert(e.slowest.forall(s => !s.callsite.contains("CompletableFuture")), e.slowest.map(_.callsite))
+  }
+
   test("indexes returns a keep-set that a sweep leaves kg and graphBuild readable under") {
     val keep = Harness.indexes(spark, dir)
     val kg = graft.queries.KgPipeline.kg(spark, dir)

@@ -48,6 +48,24 @@ class TablesSchemaMemoSpec extends SparkSpec {
     assert(df.as[(Long, Double, Boolean)].collect().toSeq == Seq((7L, 2.5, true)))
   }
 
+  test("a repeat read serves the resolved relation with fresh attributes, so two reads self-join") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def relation(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.asInstanceOf[LogicalRelation]
+    val dir = tableDir()
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
+    val (a, b) = (Tables(spark, dir, "t"), Tables(spark, dir, "t"))
+    assert(relation(a).relation eq relation(b).relation, "the second read resolved a new data source")
+    assert(relation(a).output.map(_.exprId).intersect(relation(b).output.map(_.exprId)).isEmpty)
+    val joined = a.as("x").join(b.as("y"), $"x.id" === $"y.id" + 1)
+    assert(joined.select($"x.s", $"y.s").as[(String, String)].collect().toSeq == Seq(("b", "a")))
+    // a rewrite is a new relation
+    Seq((3L, "c")).toDF("id", "s").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val c = Tables(spark, dir, "t")
+    assert(!(relation(c).relation eq relation(a).relation))
+    assert(c.as[(Long, String)].collect().toSeq == Seq((3L, "c")))
+  }
+
   test("the type of ts follows spark.sql.legacy.parquet.nanosAsLong") {
     // parquet TIMESTAMP(NANOS), the encoding of the early events tables;
     // Spark cannot write it, so it is written with parquet-mr
