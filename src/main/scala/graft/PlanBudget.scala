@@ -4,18 +4,24 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-query physical-plan budgets (r5 VERDICT #7): the shuffle /
-  * broadcast / sort / cartesian counts of every headline plan,
-  * summarized from the same `explain("formatted")` trees PLANS.md
-  * dumps in full, written to `PLAN_BUDGETS.md` and machine-checked by
-  * `PlanBudgetSpec` — an edit that adds an exchange to any headline
-  * query fails the suite loudly instead of shipping a silent extra
-  * shuffle to the 100 TB cluster.
+/** The pinned physical plans (r5 VERDICT #7), the one plan generator.
+  * One hermetic capture per registered query yields its operator tree
+  * (the tree block of `explain("formatted")`) and the shuffle /
+  * broadcast / sort / cartesian / job counts read from that tree. One
+  * pass writes both artifacts: `PLAN_BUDGETS.md` (the counts table) and
+  * `PLANS.md` (one tree section per query). `PlanBudgetSpec` checks both
+  * against a fresh capture, so an edit that adds an exchange to any
+  * query, or otherwise reshapes its plan, fails the suite loudly instead
+  * of shipping a silent extra shuffle to the 100 TB cluster.
   *
-  * Counting is static (the pre-AQE plan at sf0.001, the same fixture
-  * PlanSpec pins against), so the numbers are deterministic: AQE can
+  * Capture is static (the pre-AQE plan at sf0.001, the same fixture
+  * PlanSpec pins against), so both artifacts are deterministic: AQE can
   * only REMOVE exchanges at runtime, never add them, which makes the
-  * static count the upper bound that matters for budget drift.
+  * static count the upper bound that matters for budget drift. Only the
+  * tree block is kept: the per-node detail sections carry expression
+  * ids, lambda names and projection orders that differ between two runs
+  * of one commit. A before/after plan comparison across commits is a
+  * `git diff` of `PLANS.md` regenerated at each.
   */
 object PlanBudget {
 
@@ -30,9 +36,10 @@ object PlanBudget {
     * checkpoint) moves the number and fails PlanBudgetSpec loudly.
     */
   final case class Counts(shuffles: Int, broadcasts: Int, sorts: Int,
-      cartesians: Int, jobs: Int) {
-    def tsv: String = s"$shuffles\t$broadcasts\t$sorts\t$cartesians\t$jobs"
-  }
+      cartesians: Int, jobs: Int)
+
+  /** One query's capture: its operator tree and the counts read from it. */
+  final case class Capture(tree: String, counts: Counts)
 
   /** The operator-tree block of a formatted explain (everything before
     * the per-node detail sections).
@@ -46,13 +53,13 @@ object PlanBudget {
 
   private val NodeRx = """(?m)^[\s+:*-]*([A-Za-z][A-Za-z0-9]*)[^\n]*\(\d+\)$""".r
 
-  /** Count plan nodes by name from the tree block. `Exchange` in
-    * formatted mode is always a shuffle (broadcasts print as
-    * `BroadcastExchange`); reused subtrees (`ReusedExchange`) are NOT
-    * counted — the work happens once.
+  /** Count plan nodes by name in a tree block. `Exchange` in formatted
+    * mode is always a shuffle (broadcasts print as `BroadcastExchange`);
+    * reused subtrees (`ReusedExchange`) are NOT counted — the work
+    * happens once.
     */
-  private[graft] def counts(df: DataFrame, jobs: Int = 0): Counts = {
-    val names = NodeRx.findAllMatchIn(tree(df)).map(_.group(1)).toSeq
+  private def counts(tree: String, jobs: Int): Counts = {
+    val names = NodeRx.findAllMatchIn(tree).map(_.group(1)).toSeq
     Counts(
       shuffles = names.count(_ == "Exchange"),
       broadcasts = names.count(_ == "BroadcastExchange"),
@@ -66,7 +73,7 @@ object PlanBudget {
     * intermediate (rec_als's ratings) plans differently depending on
     * whether an EARLIER query already materialized that cache — a
     * materialized InMemoryRelation carries real (small) stats and
-    * Catalyst flips SMJ→BHJ, so the captured counts were suite-order-
+    * Catalyst flips SMJ→BHJ, so the captured plan was suite-order-
     * dependent. Clearing the cache manager immediately before each
     * capture makes every `.cache()` register fresh (unmaterialized,
     * default stats) so the pin is the cold-session plan regardless of
@@ -81,11 +88,11 @@ object PlanBudget {
     * order-dependent pins, and Caches.sweep-with-keep-set still
     * drops the same cache-manager entries (hermeticity REQUIRES
     * that). The cost — a few eager-cache constructions (rec_als)
-    * re-materializing per capture — is ~seconds across the 330-row
+    * re-materializing per capture — is ~seconds across the 345-query
     * generator run, paid only in dev tooling, never in a query path.
     */
-  def hermeticCounts(spark: SparkSession,
-      fn: (SparkSession, String) => DataFrame, dir: String): Counts = {
+  def capture(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String): Capture = {
     // Pre-build the two session-scoped indexes OUTSIDE the job-count
     // window: whichever query happens to be the first kg/graph consumer
     // in registry order would otherwise absorb the index build's jobs
@@ -113,28 +120,28 @@ object PlanBudget {
     spark.conf.set(key, "false")
     try {
       val (df, jobs) = Harness.countJobs(spark)(fn(spark, dir))
-      counts(df, jobs)
+      val t = tree(df)
+      Capture(t, counts(t, jobs))
     } finally spark.conf.set(key, saved)
   }
 
-  /** Every registered query, budget-counted against `dir`. Queries
-    * whose construction cannot run here (missing fixture) are skipped
-    * with a note — the spec separately asserts none are skipped.
-    */
-  def table(spark: SparkSession, dir: String): Seq[(String, Counts)] =
+  /** Every registered query, captured against `dir`, in name order. */
+  def table(spark: SparkSession, dir: String): Seq[(String, Capture)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> hermeticCounts(spark, fn, dir)
+      name -> capture(spark, fn, dir)
     }
 
-  def render(rows: Seq[(String, Counts)]): String = {
+  private val Command = "`sbt \"runMain graft.PlanBudget /root/testdata/sf0.001\"`"
+
+  def render(rows: Seq[(String, Capture)]): String = {
     val sb = new StringBuilder
     sb.append("# PLAN_BUDGETS — machine-checked per-query plan-shape budgets\n\n")
-    sb.append("Generated by `sbt \"runMain graft.PlanBudget /root/testdata/sf0.001\"`;\n")
+    sb.append(s"Generated, together with `PLANS.md`, by $Command;\n")
     sb.append("asserted row-for-row by `PlanBudgetSpec`. Columns: static counts of\n")
     sb.append("shuffle `Exchange`, `BroadcastExchange`, `Sort`(+SortAggregate), and\n")
     sb.append("cartesian (`CartesianProduct`/`BroadcastNestedLoopJoin`) nodes in the\n")
-    sb.append("formatted plan at sf0.001, captured with AQE disabled (pre-AQE: the\n")
-    sb.append("static upper bound — at runtime AQE only removes exchanges, and its\n")
+    sb.append("operator tree `PLANS.md` pins (sf0.001, captured with AQE disabled;\n")
+    sb.append("pre-AQE is the static upper bound — at runtime AQE only removes exchanges, and its\n")
     sb.append("per-stage job submission would make counts nondeterministic).\n")
     sb.append("`jobs` counts the Spark jobs launched at\n")
     sb.append("construction time (eager checkpoints / bounded driver samples) —\n")
@@ -148,13 +155,29 @@ object PlanBudget {
     sb.append("the returned static plan (eval_bt's five MM rounds, rec_als's four\n")
     sb.append("half-steps). Table schemas are inferred before the capture, so\n")
     sb.append("schema-inference jobs are not counted. An intentional plan change\n")
-    sb.append("regenerates this file;\n")
+    sb.append("regenerates this file and `PLANS.md`;\n")
     sb.append("an unintentional one fails the suite with the diff.\n\n")
     sb.append("| query | shuffles | broadcasts | sorts | cartesians | jobs |\n")
     sb.append("|---|---|---|---|---|---|\n")
-    rows.foreach { case (n, c) =>
+    rows.foreach { case (n, Capture(_, c)) =>
       sb.append(s"| $n | ${c.shuffles} | ${c.broadcasts} | ${c.sorts} | ${c.cartesians} | ${c.jobs} |\n")
     }
+    sb.toString
+  }
+
+  def renderPlans(rows: Seq[(String, Capture)]): String = {
+    val sb = new StringBuilder
+    sb.append("# PLANS — the operator tree of every registered query\n\n")
+    sb.append(s"Generated, together with `PLAN_BUDGETS.md`, by $Command;\n")
+    sb.append("asserted section-for-section by `PlanBudgetSpec`. Each section is the\n")
+    sb.append("operator-tree block of the query's `explain(\"formatted\")` physical\n")
+    sb.append("plan at sf0.001 on `local[4]`, captured with AQE disabled\n")
+    sb.append("(`spark.sql.adaptive.enabled=false`): the static plan, whose exchanges\n")
+    sb.append("AQE can only remove at runtime. The per-node detail sections are left\n")
+    sb.append("out, because their expression ids and lambda names differ between two\n")
+    sb.append("runs of one commit. To compare the plans of two commits, regenerate\n")
+    sb.append("this file at each and `git diff` it.\n\n")
+    rows.foreach { case (n, Capture(t, _)) => sb.append(s"## $n\n\n```\n$t```\n\n") }
     sb.toString
   }
 
@@ -167,14 +190,20 @@ object PlanBudget {
     }.toSeq
   }
 
+  /** Parse the checked-in plans back to (name → tree). */
+  def parsePlans(md: String): Seq[(String, String)] =
+    """(?ms)^## ([a-z0-9_]+)\n\n```\n(.*?)```\n""".r.findAllMatchIn(md)
+      .map(m => m.group(1) -> m.group(2)).toSeq
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    // fixed 4 cores, the shape PlanBudgetSpec's session has: the job
-    // column is deterministic only for a fixed session shape
+    // fixed 4 cores, the shape PlanBudgetSpec's session has: the plans
+    // and the job column are deterministic only for a fixed session shape
     val spark = Harness.session(4)
     val rows = table(spark, dir)
     Files.writeString(Paths.get("PLAN_BUDGETS.md"), render(rows))
-    println(s"wrote PLAN_BUDGETS.md (${rows.size} queries)")
+    Files.writeString(Paths.get("PLANS.md"), renderPlans(rows))
+    println(s"wrote PLAN_BUDGETS.md and PLANS.md (${rows.size} queries)")
     spark.stop()
   }
 }

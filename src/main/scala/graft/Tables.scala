@@ -21,13 +21,13 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * Schema memo: inferring a parquet schema is a Spark job (a footer read
   * per file), paid by every `spark.read.parquet` — at query-plane sizes
   * it costs more than the query it feeds. [[apply]] infers once per
-  * table and reads with the remembered schema afterwards. The memo is
-  * keyed on the qualified path and stamped with a fingerprint of the
-  * files under it (names, sizes, mtimes) and with the SQL conf entries
-  * that change parquet inference: rewriting the table or changing that
-  * conf re-infers. The fingerprint comes from the file index Spark
-  * builds for the read, so checking it lists nothing twice. Within a
-  * session the resolved relation itself is memoized too ([[read]]).
+  * table and reads with the remembered schema afterwards, in any
+  * session. Within a session the resolved relation itself is memoized
+  * too ([[read]]). Both memos are keyed on the qualified path and
+  * stamped with one fingerprint, taken by one listing per read: the
+  * files under the path (names, sizes, mtimes) and the SQL conf entries
+  * that change parquet inference. Rewriting the table or changing that
+  * conf misses both.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -80,10 +80,10 @@ object Tables {
     * with fresh attribute ids (two reads still self-join): resolving a
     * data source costs more than the query-plane op it feeds. Otherwise
     * it is resolved with the memoized schema, inferring it only when the
-    * memo has none or its stamp no longer matches the read's. The
-    * listing is taken before resolving, so a table rewritten meanwhile
-    * misses on the next read. A path that does not exist fails with
-    * Spark's own error.
+    * memo has none or its stamp no longer matches the read's. One
+    * listing stamps both memos; it is taken before resolving, so a table
+    * rewritten meanwhile misses on the next read. A path that does not
+    * exist fails with Spark's own error.
     */
   private def read(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
@@ -94,11 +94,12 @@ object Tables {
       case (st, rel) if listed.contains(st) => spark.baseRelationToDataFrame(rel)
     }.getOrElse {
       val df = Option(schemas.get(key))
-        .map { case (st, schema) => (st, spark.read.schema(schema).parquet(path)) }
-        .collect { case (st, df) if stamp(filesRead(df), spark) == st => df }
+        .collect { case (st, schema) if listed.contains(st) =>
+          spark.read.schema(schema).parquet(path)
+        }
         .getOrElse {
           val df = spark.read.parquet(path)
-          schemas.put(key, (stamp(filesRead(df), spark), df.schema))
+          listed.foreach(st => schemas.put(key, (st, df.schema)))
           df
         }
       df.queryExecution.analyzed match {

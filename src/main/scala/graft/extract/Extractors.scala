@@ -284,7 +284,8 @@ object Extractors {
     "state" -> glossary(c, states))
 
   /** KG long-format builder: (field → array<value>) extraction columns
-    * exploded into KgValue rows (SURVEY §1.2 exploded long-format
+    * exploded into one (doc_id, field, value, method, segment, key,
+    * confidence) row per extraction (SURVEY §1.2 exploded long-format
     * Dataset). `method`/`segment` record provenance.
     */
   def toKgValues(docs: DataFrame, idCol: String,

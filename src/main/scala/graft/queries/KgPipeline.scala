@@ -31,7 +31,7 @@ object KgPipeline {
       "size" -> TypeMapping(Seq("size" -> 5.0))))
 
   /** Build the long-format KG table from the corpus (E2 glossary
-    * extraction, §1.2 exploded KgValue layout), and next to it the
+    * extraction, §1.2 exploded long-format rows), and next to it the
     * corpus's [[Postings]] index. Memoized per (session, dir) until the
     * session stops ([[graft.SessionMemo]]): the KG and
     * the postings are the materialized artifacts the query plane reads

@@ -1425,9 +1425,8 @@ object Relational {
   private def coSupplyEdges(s: SparkSession, dir: String): DataFrame =
     graphBuild(s, dir)
 
-  /** The pair-count subplan of the co-supply build BEFORE its
-    * checkpoint — exposed for plan dumps (graph_build is a timed bench
-    * entry whose returned frame is a plan-opaque checkpoint).
+  /** The co-supply edge index: supplier pairs that share at least the
+    * p99 count of parts, with the shared-part count.
     *
     * r12: one explicit pk-hash exchange at the session's full width
     * serves BOTH the (pk, sk) dedup (hash partitioning on pk clusters
@@ -1439,7 +1438,7 @@ object Relational {
     *
     * r13 note (verdict #2 tried and REVERTED): replacing the distinct
     * + self-join with collect_set + in-row i<j pair expansion measured
-    * NEUTRAL on the build itself (@graph_build probe 1.67 s before vs
+    * NEUTRAL on the build itself (pair-count subplan 1.67 s before vs
     * 1.68 s after, warm — the r12 full-width fix had already removed
     * the join bottleneck; the residual is inherent pair volume + one-
     * time codegen) and ~5-10% WORSE across the six graph consumers:
@@ -1449,22 +1448,18 @@ object Relational {
     * (PLAN_BUDGETS jobs graph_bfs 10→16, kcore 5→10; A/B subset bench
     * 28.8 → 30.9 s over 12 consumers). The join shape stays.
     */
-  private[graft] def graphBuildPairsPlan(s: SparkSession, dir: String): DataFrame = {
+  private def buildCoSupplyEdges(s: SparkSession, dir: String): DataFrame = {
     val ps = Tables(s, dir, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
       .repartition(s.sparkContext.defaultParallelism, col("pk"))
       .distinct()
-    ps.as("a").join(ps.as("b"),
-        col("a.pk") === col("b.pk") && col("a.sk") < col("b.sk"))
-      .groupBy(col("a.sk").as("u"), col("b.sk").as("v"))
-      .agg(count(lit(1)).as("shared"))
-  }
-
-  private def buildCoSupplyEdges(s: SparkSession, dir: String): DataFrame = {
     // Materialized ONCE: the threshold scan and the final filter both
     // read the pair set — without the barrier the p99 pass and the edge
     // pass each re-run the self-join (the build's dominant cost).
-    val pairs = graphBuildPairsPlan(s, dir)
+    val pairs = ps.as("a").join(ps.as("b"),
+        col("a.pk") === col("b.pk") && col("a.sk") < col("b.sk"))
+      .groupBy(col("a.sk").as("u"), col("b.sk").as("v"))
+      .agg(count(lit(1)).as("shared"))
       .localCheckpoint(true)
     val hist = pairs.groupBy(col("shared")).agg(count(lit(1)).as("cnt"))
     // p99 threshold from the histogram WITHOUT a window: the histogram's

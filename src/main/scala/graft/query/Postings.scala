@@ -31,12 +31,13 @@ import graft.plans.NativeExpressions
   * `KgPipeline.kg` builds the index of a documents scan once, from the
   * token array its extraction already computes, as a local checkpoint
   * kept with the KG's, and registers it under the scan's files and
-  * their stamp (path, length, modification time), the way [[Tables]]
-  * stamps its schema memo. An op's documents input is served from it
-  * only when its analyzed plan is a bare scan of the same files, stamped
-  * alike, and the op's id and text columns are those the index was built
-  * over; every other input (a filtered or in-memory frame, a rewritten
-  * table, another head length) derives the same rows in its own plan.
+  * their stamp (path, length, modification time) as the scan's file
+  * index listed them (`Tables.filesRead`). An op's documents input is
+  * served from it only when its analyzed plan is a bare scan of the same
+  * files, stamped alike, and the op's id and text columns are those the
+  * index was built over; every other input (a filtered or in-memory
+  * frame, a rewritten table, another head length) derives the same rows
+  * in its own plan.
   */
 object Postings {
 

@@ -10,7 +10,8 @@ import graft.plans.NativeExpressions
 
 /** The structured-query plane (SURVEY §2.6, Q1–Q13): typed constraints →
   * field resolution → weighted relevance scoring + facets, compiled to
-  * one DataFrame plan over the long-format KgValue table.
+  * one DataFrame plan over the long-format KG table
+  * (`Extractors.toKgValues`).
   *
   * Reference pipeline (sandpaper coarse, config/etk/config.json:1-97):
   * predicate→type mapping (Q1), value normalization (Q2), constraint
@@ -18,7 +19,7 @@ import graft.plans.NativeExpressions
   * (Q4), type→field-path mapping (Q5), per-path weights (Q6), free-text
   * fallback (Q13), ranked + faceted execution (O1/A2).
   *
-  * Scale: constraints filter the KgValue table on (field, key) — both
+  * Scale: constraints filter the KG table on (field, key) — both
   * pushed to the Parquet scan — and, unioned with one row per document
   * carrying its free-text score, one groupBy(doc_id) shuffle scores
   * and enforces all-constraints-matched. Facets are per-field partial

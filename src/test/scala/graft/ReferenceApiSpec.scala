@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.extract.Extractors
 import graft.ingest.MappingRules
 import graft.sources.Sources
+import graft.ts.TimeSeriesOps
 
 /** The reference-parity API that no registry query runs, checked on small
   * inline fixtures. Each expectation follows the reference lines the
@@ -150,5 +151,56 @@ class ReferenceApiSpec extends SparkSpec {
       assert(spark.table("graft_bootstrap_t").orderBy("id").as[(Long, String)]
         .collect().toSeq == Seq((1L, "a"), (2L, "b")))
     } finally spark.sql("DROP TABLE IF EXISTS graft_bootstrap_t")
+  }
+
+  // E1 extract_as_is (generate_mydig_config.py:226-231): the segment's
+  // value becomes the field's one extraction, verbatim
+  test("asIs copies the segment value verbatim as a one-element extraction") {
+    val got = Seq(" Hello, World ", "MiXeD case").toDF("t")
+      .select(Extractors.asIs(col("t"))).as[Seq[String]].collect().toSeq
+    assert(got == Seq(Seq(" Hello, World "), Seq("MiXeD case")))
+  }
+
+  // T3 (trend/io_utils.py:15-48): x = days since the series' first point
+  // over a 365-day year, per series, whatever the row order
+  test("yearsSinceStart measures fractional 365-day years from each series' start") {
+    val day = 86400000L
+    val t0 = 1577836800000L // 2020-01-01, a leap year
+    val rows = Seq(("a", t0 + 365 * day), ("a", t0), ("a", t0 + 366 * day),
+      ("a", t0 + day * 365 / 2), ("b", 5 * day), ("b", 5 * day + 730 * day))
+    val w = TimeSeriesOps.seriesWindow(col("s"), Seq(col("ts")))
+    val got = rows.toDF("s", "ts")
+      .select(col("s"), col("ts"), TimeSeriesOps.yearsSinceStart(col("ts"), w).as("x"))
+      .as[(String, Long, Double)].collect().map { case (s, ts, x) => (s, ts) -> x }.toMap
+    assert(got(("a", t0)) == 0.0)
+    assert(got(("a", t0 + day * 365 / 2)) == 0.5)
+    assert(got(("a", t0 + 365 * day)) == 1.0)
+    assert(math.abs(got(("a", t0 + 366 * day)) - 366.0 / 365.0) < 1e-12,
+      "a leap year is 366/365 of a year, not 1")
+    assert(got(("b", 5 * day)) == 0.0)
+    assert(got(("b", 5 * day + 730 * day)) == 2.0)
+  }
+
+  // T14 (ts_label_maker.py:12-44): the label format-string reads the
+  // series metadata; a missing key or a null value renders as ''
+  test("labelTemplate renders series metadata into a label, missing keys as empty") {
+    val meta = Seq(("GDP", "France", "EUR"), ("CPI", "Chad", null))
+      .toDF("indicator", "country", "unit")
+    val got = TimeSeriesOps.labelTemplate("label", "{indicator} of {country} [{unit}]{region}")(meta)
+      .select("indicator", "label").as[(String, String)].collect().toMap
+    assert(got == Map("GDP" -> "GDP of France [EUR]", "CPI" -> "CPI of Chad []"))
+  }
+
+  // A6 (ts_converter.py:30-33,58-61,79-89): series id = upper-hex
+  // sha256(dataset + name); a measurement's id = lower-hex
+  // sha256(payload + series id)
+  test("seriesId and measurementId are the reference's content hashes") {
+    val sid = "47B2A0ED3B1A1E308EFB08650A336DE0F3705658A0ECC4719A4DC7C391F71340"
+    val got = Seq(("eurostat", "gdp")).toDF("dataset", "name")
+      .select(TimeSeriesOps.seriesId(col("dataset"), col("name"))).as[String].head()
+    assert(got == sid)
+    val mid = Seq(("""{"value": 1.5}""", sid)).toDF("payload", "sid")
+      .select(TimeSeriesOps.measurementId(col("payload"), col("sid"))).as[String].head()
+    assert(mid == "71b70f4d1bf6de4770ebcd900c9bad37cd795c63615e7fe49b84668abe3a5541")
   }
 }

@@ -48,6 +48,23 @@ class TablesSchemaMemoSpec extends SparkSpec {
     assert(df.as[(Long, Double, Boolean)].collect().toSeq == Seq((7L, 2.5, true)))
   }
 
+  test("another session's read of a path launches no job, and re-infers after a rewrite") {
+    // a new session misses the relation memo, so the schema memo serves it
+    val dir = tableDir()
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
+    Tables(spark, dir, "t")
+    val other = spark.newSession()
+    val (df, none) = Harness.countJobs(other)(Tables(other, dir, "t"))
+    assert(none == 0, "the schema memo was not served to the new session")
+    assert(df.orderBy("id").as[(Long, String)].collect().toSeq == Seq((1L, "a"), (2L, "b")))
+    Seq((7L, 2.5)).toDF("id", "x").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val third = spark.newSession()
+    val (rewritten, some) = Harness.countJobs(third)(Tables(third, dir, "t"))
+    assert(some >= 1, "the rewritten table was read with the memoized schema")
+    assert(rewritten.schema.map(f => f.name -> f.dataType) == Seq("id" -> LongType, "x" -> DoubleType))
+    assert(rewritten.as[(Long, Double)].collect().toSeq == Seq((7L, 2.5)))
+  }
+
   test("a repeat read serves the resolved relation with fresh attributes, so two reads self-join") {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     def relation(df: org.apache.spark.sql.DataFrame) =
