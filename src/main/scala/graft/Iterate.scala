@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{aggregate, col, lit, sequence, sum}
 
-/** The loop-carried checkpoint policy of every iterative operator.
+/** The one way to iterate, in three shapes.
   *
-  * A plan that references its previous round re-embeds the whole
-  * lineage per round (each join and each convergence test doubles it:
-  * analyzer OOM by depth ~8), so every round's frame is
-  * local-checkpointed — a flat LogicalRDD leaf for the next round. Two
-  * shapes:
+  * A DataFrame plan that references its previous round re-embeds the
+  * whole lineage per round (each join and each convergence test doubles
+  * it: analyzer OOM by depth ~8), so every round's frame is
+  * local-checkpointed — a flat LogicalRDD leaf for the next round:
   *
   *   - [[fixpoint]]: step until a convergence test over the newest
   *     frames holds or a round cap is hit; each frame is freed once a
@@ -19,6 +18,11 @@ import org.apache.spark.sql.functions.{col, sum}
   *     checkpoints, materialized by the consumer's first action (under
   *     AQE each round's earlier stages run as it is built; see
   *     [[rounds]]).
+  *
+  * The third shape needs no checkpoint: [[fold]] unrolls a fixed number
+  * of rounds inside one expression over an array collected into one
+  * row — for state bounded by an alphabet, not by the corpus (the
+  * event-type graph, a Markov chain's states).
   *
   * A fixpoint whose frames join copies of themselves also resets
   * Catalyst's size statistics at a caller-chosen cadence
@@ -128,4 +132,15 @@ object Iterate {
     (1 to n).foldLeft(List(init.localCheckpoint(false))) { (frames, r) =>
       step(frames, r).localCheckpoint(false) :: frames
     }
+
+  /** `n` rounds of `step` from `init` as one expression:
+    * `aggregate(sequence(1, n), init, (acc, _) => step(acc))`. The plan
+    * stays one linear projection at any round count, so it runs no job
+    * at construction and needs no checkpoint; the rounds run per row, so
+    * the state must be small (an alphabet-bounded array). `step` must
+    * return `init`'s type; a step that can produce nulls needs an `init`
+    * whose type already admits them.
+    */
+  def fold(n: Int, init: Column)(step: Column => Column): Column =
+    aggregate(sequence(lit(1), lit(n)), init, (acc, _) => step(acc))
 }

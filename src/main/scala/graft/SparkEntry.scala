@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{Attribution, Behavior, Causal, CurationQueries, Decisioning, DedupSim, Extended, Fairness, FeatureQueries, Geo, GraphExtra, Hierarchy, Inference, KgPipeline, LinkOps, LlmEval, LmExtras, MlExtra, MlPlane, MultimodalQueries, NonParam, RankingEval, RecSys, Relational, Spectral, Survival, TextOps, TimeSeriesQueries, TrainingPrep, TsExtra}
+import graft.queries.{Attribution, Behavior, Causal, CurationQueries, Decisioning, DedupSim, EventGraph, Extended, Fairness, FeatureQueries, Geo, Hierarchy, Inference, KgPipeline, LinkOps, LlmEval, LmExtras, MlExtra, MlPlane, MultimodalQueries, NonParam, RankingEval, RecSys, Relational, Spectral, Survival, TextOps, TimeSeriesQueries, TrainingPrep, TsExtra}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -19,7 +19,7 @@ object SparkEntry {
     Relational.all ++ TextOps.all ++ DedupSim.all ++ KgPipeline.all ++
       TimeSeriesQueries.all ++ MultimodalQueries.all ++ Extended.all ++
       CurationQueries.all ++ TrainingPrep.all ++ FeatureQueries.all ++ Inference.all ++
-      RankingEval.all ++ LinkOps.all ++ Behavior.all ++ GraphExtra.all ++ RecSys.all ++ Survival.all ++ LlmEval.all ++ Attribution.all ++ MlExtra.all ++ Spectral.all ++ Geo.all ++
+      RankingEval.all ++ LinkOps.all ++ Behavior.all ++ EventGraph.all ++ RecSys.all ++ Survival.all ++ LlmEval.all ++ Attribution.all ++ MlExtra.all ++ Spectral.all ++ Geo.all ++
       MlPlane.all ++ NonParam.all ++ TsExtra.all ++ Hierarchy.all ++ LmExtras.all ++
       Decisioning.all ++ Causal.all ++ Fairness.all
 
@@ -30,7 +30,7 @@ object SparkEntry {
     Relational.oracles ++ TextOps.oracles ++ DedupSim.oracles ++ KgPipeline.oracles ++
       TimeSeriesQueries.oracles ++ MultimodalQueries.oracles ++ Extended.oracles ++
       CurationQueries.oracles ++ TrainingPrep.oracles ++ FeatureQueries.oracles ++ Inference.oracles ++
-      RankingEval.oracles ++ LinkOps.oracles ++ Behavior.oracles ++ GraphExtra.oracles ++ RecSys.oracles ++ Survival.oracles ++ LlmEval.oracles ++ Attribution.oracles ++ MlExtra.oracles ++ Spectral.oracles ++ Geo.oracles ++
+      RankingEval.oracles ++ LinkOps.oracles ++ Behavior.oracles ++ EventGraph.oracles ++ RecSys.oracles ++ Survival.oracles ++ LlmEval.oracles ++ Attribution.oracles ++ MlExtra.oracles ++ Spectral.oracles ++ Geo.oracles ++
       MlPlane.oracles ++ NonParam.oracles ++ TsExtra.oracles ++ Hierarchy.oracles ++ LmExtras.oracles ++
       Decisioning.oracles ++ Causal.oracles ++ Fairness.oracles
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Iterate, Tables}
+import Exact.{intdiv, let}
 
 /** Removal-effect Markov attribution (Anderl et al. 2016) — the
   * data-driven sibling of the heuristic `attribution_position`
@@ -78,13 +79,6 @@ object Attribution {
   /** channel, p_base, p_removed, re_micro (integer removal effect in
     * micro-units of p_base), attribution (share of total effect).
     */
-  /** Expression-level LET (the TimeSeriesQueries helper): evaluate `e`
-    * once, hand it to `f` as a bound lambda value — CollapseProject
-    * re-inlines a projection column per reference otherwise.
-    */
-  private def let(e: Column)(f: Column => Column): Column =
-    element_at(transform(array(e), x => f(x)), 1)
-
   def markov(s: SparkSession, dir: String): DataFrame =
     markovFromEdges(journeyEdges(s, dir))
 
@@ -100,14 +94,13 @@ object Attribution {
     // linear plan (corpus window → edge aggregation → expression) —
     // zero checkpoints, zero loop jobs. Arithmetic is EXACTLY the r12
     // chain: per-state Σ cnt·v(dst) is an integer sum (order-free),
-    // the per-round division is the same Relational.intdiv
+    // the per-round division is the same Exact.intdiv
     // (a − a mod b)/b double-exact chain, knockout zeroing and the
     // CONV/NULL absorbing constants are reproduced in the lookup, and
     // the removal-effect / attribution tail is token-identical.
     // Oracle unchanged.
     val one = ed.agg(sort_array(collect_list(
       struct(col("src"), col("dst"), col("cnt"), col("outc")))).as("eds"))
-    def intdivE(a: Column, b: Column): Column = ((a - pmod(a, b)) / b).cast("long")
     val rowsArr = let(col("eds")) { eds =>
       // per-state table: (s, outc, xs=[(dst, cnt)]) in state order
       let(transform(array_distinct(transform(eds, e => e.getField("src"))), st =>
@@ -130,10 +123,10 @@ object Attribution {
         def vStart(r: Column): Column = {
           val v0 = transform(pe, e =>
             struct(e.getField("s").as("s"), lit(0L).as("v")))
-          val vf = aggregate(sequence(lit(1), lit(MkRounds)), v0, (acc, _) =>
+          val vf = Iterate.fold(MkRounds, v0)(acc =>
             transform(pe, e => struct(e.getField("s").as("s"),
               when(e.getField("s") === r, lit(0L)).otherwise(
-                intdivE(aggregate(e.getField("xs"), lit(0L), (a, x) =>
+                intdiv(aggregate(e.getField("xs"), lit(0L), (a, x) =>
                   a + x.getField("c") * look(acc, x.getField("d"))),
                   e.getField("o"))).as("v"))))
           element_at(filter(vf, y => y.getField("s") === lit("START")), 1)
@@ -147,7 +140,7 @@ object Attribution {
               x.getField("channel").as("channel"),
               x.getField("prem").as("prem"),
               when(pbase > 0,
-                intdivE((pbase - x.getField("prem")) * lit(Scale), pbase))
+                intdiv((pbase - x.getField("prem")) * lit(Scale), pbase))
                 .otherwise(lit(0L)).as("re_micro")))) { re =>
               let(aggregate(re, lit(0L), (a, x) => a + x.getField("re_micro"))) { t =>
                 transform(re, x => struct(

@@ -527,7 +527,7 @@ object Causal {
     val ranked = FeatureQueries.cumRanks(vals)
     def cap(pct: Long, name: String): DataFrame = ranked
       .filter(col("cum") >=
-        Relational.intdiv(lit(pct) * (col("n") - 1), lit(100L)) + 1L)
+        Exact.intdiv(lit(pct) * (col("n") - 1), lit(100L)) + 1L)
       .agg(min(col("v")).as(name))
     val caps = broadcast(cap(5L, "lo").crossJoin(cap(95L, "hi")))
     val capped = ev.crossJoin(caps)

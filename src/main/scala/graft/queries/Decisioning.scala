@@ -68,7 +68,7 @@ object Decisioning {
     val d0 = perDay.agg(min(col("day")).as("d0"))
     val perLook = perDay.crossJoin(broadcast(d0))
       .withColumn("look",
-        least(Relational.intdiv(col("day") - col("d0"), lit(6L)) + 1L, lit(5L)))
+        least(Exact.intdiv(col("day") - col("d0"), lit(6L)) + 1L, lit(5L)))
       .groupBy(col("look"))
       .agg(
         sum(col("pn_c")).as("pn_c"), sum(col("pn_t")).as("pn_t"),

@@ -757,10 +757,10 @@ object DedupSim {
     val ranked = FeatureQueries.cumRanksBy(dmin)
     ranked.groupBy(col("g")).agg(
         max(col("n")).as("n"), min(col("v")).as("min_d"),
-        min(when(col("cum") >= Relational.intdiv(col("n") + 1, lit(2L)),
+        min(when(col("cum") >= Exact.intdiv(col("n") + 1, lit(2L)),
           col("v"))).as("med_d"),
         min(when(col("cum") >=
-          Relational.intdiv(lit(95L) * (col("n") - 1), lit(100L)) + 1L,
+          Exact.intdiv(lit(95L) * (col("n") - 1), lit(100L)) + 1L,
           col("v"))).as("p95_d"),
         max(col("v")).as("max_d"))
       .select(col("g").cast("long").as("m"), col("n"), col("min_d"),

@@ -31,4 +31,20 @@ object Exact {
   /** SQL fragment mirroring [[davg]] for the oracle. */
   def sqlAvg(expr: String): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,6))) AS DOUBLE) / CAST(COUNT($expr) AS DOUBLE)"
+
+  /** Exact integer floor-division on non-negative longs: (a − a mod b)
+    * is divisible by b, and an IEEE division whose true quotient is a
+    * representable integer is exact — so the double division below
+    * cannot round, and DuckDB's `//` reproduces it bit-for-bit.
+    */
+  def intdiv(a: Column, b: Column): Column = ((a - pmod(a, b)) / b).cast("long")
+
+  /** Expression-level LET: evaluate `e` ONCE, hand it to `f` as a bound
+    * lambda value. A projection column referenced k times is re-inlined
+    * k times by CollapseProject — ruinous when the column is a derived
+    * array consumed by nested HOFs (the Theil–Sen lesson: the pair loop
+    * went O(n²)→O(n³) through exactly this, 96.7 s at sf0.1).
+    */
+  def let(e: Column)(f: Column => Column): Column =
+    element_at(transform(array(e), x => f(x)), 1)
 }

@@ -42,14 +42,14 @@ object Geo {
     val supp = Tables(s, dir, "supplier").select(col("s_suppkey").as("sid"),
       coord("gx:", col("s_suppkey") + lit(7000000L)).as("sx"),
       coord("gy:", col("s_suppkey") + lit(7000000L)).as("sy"))
-      .withColumn("gx", Relational.intdiv(col("sx"), lit(R)))
-      .withColumn("gy", Relational.intdiv(col("sy"), lit(R)))
+      .withColumn("gx", Exact.intdiv(col("sx"), lit(R)))
+      .withColumn("gy", Exact.intdiv(col("sy"), lit(R)))
     val probe = cust
       .withColumn("dx", explode(sequence(lit(-1), lit(1))))
       .withColumn("dy", explode(sequence(lit(-1), lit(1))))
       .select(col("cid"), col("cx"), col("cy"),
-        (Relational.intdiv(col("cx"), lit(R)) + col("dx")).as("gx"),
-        (Relational.intdiv(col("cy"), lit(R)) + col("dy")).as("gy"))
+        (Exact.intdiv(col("cx"), lit(R)) + col("dx")).as("gx"),
+        (Exact.intdiv(col("cy"), lit(R)) + col("dy")).as("gy"))
     val pairs = probe.join(supp, Seq("gx", "gy"))
       .withColumn("d2",
         (col("cx") - col("sx")) * (col("cx") - col("sx")) +

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Run-to-convergence variants of the fixed-iteration graph operators
@@ -119,16 +118,7 @@ object GraphConvergence {
       .union(e.select(col("dst").as("node"))).distinct()
     var delta = Long.MaxValue
     val fp = graft.Iterate.fixpoint(nodes.withColumn("r", lit(1000000L)),
-        maxIters, eager = true) { ranks =>
-      val contrib = e.join(wout, "src")
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), Relational.intdiv(col("r") * col("w"), col("wt")).as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("cs"))
-      nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (lit(150000L) + Relational.intdiv(lit(85L) * coalesce(col("cs"), lit(0L)),
-            lit(100L))).as("r"))
-    } {
+        maxIters, eager = true)(Relational.pagerankRound(e, wout, nodes)) {
       case next :: ranks :: _ =>
         delta = next.as("b").join(ranks.as("a"), col("a.node") === col("b.node"))
           .agg(max(abs(col("b.r") - col("a.r")))).first().getLong(0)
@@ -155,13 +145,7 @@ object GraphConvergence {
     */
   def sccConverged(s: SparkSession, dir: String,
                    maxRounds: Int = 10): DataFrame = {
-    val ev = graft.Tables(s, dir, "events")
-      .select(col("user_id"), col("event_type"),
-        unix_millis(col("ts")).as("ts_ms"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("a"), lead(col("event_type"), 1).over(w).as("b"))
-      .filter(col("b").isNotNull).distinct()
+    val edges = EventGraph.edges(s, dir).select(col("src").as("a"), col("dst").as("b"))
     val fp = graft.Iterate.fixpoint(edges, maxRounds, eager = true) { clo =>
       clo.union(
           clo.as("x").join(clo.as("y"), col("x.b") === col("y.a"))

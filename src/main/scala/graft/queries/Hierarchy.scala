@@ -40,7 +40,7 @@ object Hierarchy {
         round(col("p_retailprice") * 100.0).cast("long").as("c"))
     pr.select(col("p"), col("c"),
         explode(array(Shifts.map(lit(_)): _*)).as("d"))
-      .select(Relational.intdiv(col("p"), col("d")).as("node"), col("c"))
+      .select(Exact.intdiv(col("p"), col("d")).as("node"), col("c"))
       .filter(col("node") >= 1 && col("node") <= 127)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("n_desc"),

@@ -115,7 +115,7 @@ object LinkOps {
     var x = nodes.withColumn("x", lit(1000000L))
     (1 to KatzIters).foreach { _ =>
       val contrib = sym.join(x.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), Relational.intdiv(lit(5L) * col("x"), lit(100L)).as("cx"))
+        .select(col("dst"), Exact.intdiv(lit(5L) * col("x"), lit(100L)).as("cx"))
         .groupBy(col("dst")).agg(sum(col("cx")).as("sc"))
       x = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"), (lit(1000000L) + coalesce(col("sc"), lit(0L))).as("x"))

@@ -16,7 +16,7 @@ object MlExtra {
   /** Truncating integer division (toward zero) — Spark's `%` carries
     * the dividend's sign, so (a − a%b)/b is an exact multiple ≤ 2⁵³
     * and the double division is exact. Matches DuckDB `//` on
-    * negative operands, where Relational.intdiv (floor) does not.
+    * negative operands, where Exact.intdiv (floor) does not.
     */
   private def truncDiv(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -129,7 +129,7 @@ object MlExtra {
       .select(col("n_name").as("nation"), col("c_mktsegment").as("segment"),
         // +4000.00 offset keeps cents positive (acctbal ≥ −999.99), where
         // floor and truncating integer division agree across engines
-        Relational.intdiv(round(col("c_acctbal") * 100.0).cast("long") + 400000L,
+        Exact.intdiv(round(col("c_acctbal") * 100.0).cast("long") + 400000L,
           lit(200000L)).as("band"))
     c.groupBy(col("nation"), col("segment"))
       .agg(count(lit(1)).as("n"),
@@ -239,7 +239,7 @@ object MlExtra {
       .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
         sum((col("y") * col("y")).cast("decimal(38,0)")).as("sy2"))
       .localCheckpoint(true)
-    val f0 = cells0.agg(Relational.intdiv(sum(col("sy")), sum(col("n"))).as("f0"))
+    val f0 = cells0.agg(Exact.intdiv(sum(col("sy")), sum(col("n"))).as("f0"))
     val cells = cells0.crossJoin(broadcast(f0))
       .select(keys.map(col) ++ Seq(
         col("n"),
@@ -282,7 +282,7 @@ object MlExtra {
         col("srr").as("sum_right"),
         // residual sums go NEGATIVE: DuckDB's // truncates toward zero
         // there (floor only for non-negative), so mirror with a
-        // truncating div, not Relational.intdiv (floor)
+        // truncating div, not Exact.intdiv (floor)
         truncDiv(col("sl"), col("nl")).as("leaf_left"),
         truncDiv(col("srr"), col("nr")).as("leaf_right"),
         col("gain"))
@@ -598,7 +598,7 @@ object MlExtra {
         col("n").as("npos"))
     cumN.join(cumP, "v")
       .select(col("n"), col("npos"),
-        (col("pos") * Relational.intdiv(col("tp") * lit(1000000L), col("nn")))
+        (col("pos") * Exact.intdiv(col("tp") * lit(1000000L), col("nn")))
           .as("contrib"))
       .groupBy(col("n"), col("npos"))
       .agg(sum(col("contrib")).as("ap_micro"))
@@ -837,7 +837,7 @@ object MlExtra {
         .select(col("n_nationkey"), col("n_name"))),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("n_name").as("nation"), col("c_mktsegment").as("segment"),
-        Relational.intdiv(round(col("c_acctbal") * 100.0).cast("long") + 400000L,
+        Exact.intdiv(round(col("c_acctbal") * 100.0).cast("long") + 400000L,
           lit(200000L)).as("band"))
       .groupBy(col("nation"), col("segment"), col("band"))
       .agg(count(lit(1)).as("c"))

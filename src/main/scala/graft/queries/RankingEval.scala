@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import Exact.let
 
 /** Ranking-quality metrics for the retrieval plane — the offline eval
   * suite a search/recommendation team runs against a judged corpus:
@@ -207,13 +208,6 @@ object RankingEval {
     * coalesce(1) + broadcast so the tail never schedules 32-partition
     * jobs over 8 rows.
     */
-  /** Expression-level LET (the TimeSeriesQueries helper): evaluate `e`
-    * once, hand it to `f` as a bound lambda value — CollapseProject
-    * re-inlines a projection column per reference otherwise.
-    */
-  private def let(e: Column)(f: Column => Column): Column =
-    element_at(transform(array(e), x => f(x)), 1)
-
   def evalBt(s: SparkSession, dir: String, rounds: Int = 5): DataFrame = {
     val li = Tables(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"),

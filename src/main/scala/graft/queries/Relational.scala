@@ -640,67 +640,24 @@ object Relational {
       |SELECT cohort_day, day_offset, COUNT(*) AS n_active
       |FROM a GROUP BY cohort_day, day_offset ORDER BY cohort_day, day_offset""".stripMargin
 
-  /** Exact integer floor-division on non-negative longs: (a − a mod b)
-    * is divisible by b, and an IEEE division whose true quotient is a
-    * representable integer is exact — so the double division below
-    * cannot round, and DuckDB's `//` reproduces it bit-for-bit.
-    */
-  private[queries] def intdiv(a: org.apache.spark.sql.Column,
-                              b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    ((a - pmod(a, b)) / b).cast("long")
-
-  private val PrIters = 5
-
-  /** Weighted PageRank over the event-type transition graph
-    * (consecutive events per user define weighted edges), 5 Jacobi
-    * iterations in SCALED INTEGER arithmetic — rank×10⁶, damping
-    * 0.85 as (85·x) div 100 — so every iteration is exact integer
-    * math and the oracle REPLAYS the full computation in unrolled
-    * CTEs (the text_bpe_train convention: iterative algorithms get
-    * replay oracles, not golden values).
-    *
-    * Scale shape: each iteration is one keyed join + one aggregate on
-    * the EDGE set — the clusters() shape; at real graph sizes the
-    * loop adds localCheckpoint lineage barriers, ranks/edges shuffle
-    * on node ids, and iterations are bounded, never data-dependent.
-    * Dangling mass is dropped (documented simplification; no dangling
-    * nodes exist in a transition graph where every observed type has
-    * an outgoing edge — and the oracle makes the same choice).
-    */
-  def graphPagerank(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables(s, dir, "events")
-      .select(col("user_id"), col("event_type"),
-        unix_millis(col("ts")).as("ts_ms"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"), lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-    pagerank(edges, PrIters).orderBy(col("node"))
-  }
-
-  /** The iteration core over any weighted edge table (src, dst, w).
-    * The edge table is checkpointed ONCE before the loop — without the
-    * barrier every unrolled iteration re-embeds the full edge
-    * derivation lineage (measured: 61 Exchange nodes in the 5-iter
-    * plan vs 13 with the barrier), which at real graph sizes means
-    * recomputing the edge build 5×.
+  /** Scaled-integer weighted PageRank over any weighted edge table
+    * (src, dst, w): ranks ×10⁶ from 10⁶ everywhere, `iters` rounds of
+    * [[pagerankRound]], dangling mass dropped. The reference for
+    * general graphs; the alphabet-bounded event-type graph folds the
+    * same arithmetic on one row ([[EventGraph.pagerank]]). The edge
+    * table is checkpointed ONCE before the loop — without the barrier
+    * every unrolled iteration re-embeds the full edge derivation
+    * lineage (measured: 61 Exchange nodes in the 5-iter plan vs 13 with
+    * the barrier), which at real graph sizes means recomputing the edge
+    * build 5×.
     */
   def pagerank(edges: DataFrame, iters: Int): DataFrame = {
     val e = edges.localCheckpoint(true)
     val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wt"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    var ranks = nodes.withColumn("r", lit(1000000L))
-    (1 to iters).foreach { _ =>
-      val contrib = e.join(wout, "src")
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), intdiv(col("r") * col("w"), col("wt")).as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (lit(150000L) + intdiv(lit(85L) * coalesce(col("s"), lit(0L)), lit(100L))).as("r"))
+    val ranks = (1 to iters).foldLeft(nodes.withColumn("r", lit(1000000L))) { (r, _) =>
+      pagerankRound(e, wout, nodes)(r)
     }
     // Materialize the final ranks so the edge checkpoint's blocks can be
     // freed NOW instead of pinning executor storage for the session
@@ -711,25 +668,20 @@ object Relational {
     out
   }
 
-  val graphPagerankSql: String = {
-    val base =
-      """ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id FROM events),
-        |nx AS (SELECT event_type AS src, lead(event_type) OVER (
-        |    PARTITION BY user_id ORDER BY ts_ms, event_id) AS dst FROM ev),
-        |edges AS (SELECT src, dst, COUNT(*) AS w FROM nx WHERE dst IS NOT NULL GROUP BY 1, 2),
-        |wout AS (SELECT src, CAST(SUM(w) AS BIGINT) AS wt FROM edges GROUP BY src),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes)""".stripMargin
-    val iters = (1 to PrIters).map { i =>
-      s"""r$i AS (SELECT n.node, CAST(150000 + (85 * COALESCE(CAST(SUM((r.r * e.w) // w2.wt) AS BIGINT), 0)) // 100 AS BIGINT) AS r
-         |  FROM nodes n LEFT JOIN edges e ON e.dst = n.node
-         |  LEFT JOIN r${i - 1} r ON r.node = e.src
-         |  LEFT JOIN wout w2 ON w2.src = e.src
-         |  GROUP BY n.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $base,
-       |$iters
-       |SELECT node, r FROM r$PrIters ORDER BY node""".stripMargin
+  /** One Jacobi round over the edges `e`, the out-weights `wout` (src,
+    * wt) and the node list: r'(n) = 150000 + (85·Σ (r(src)·w) div wt)
+    * div 100 over n's in-edges, one keyed join + aggregate on the edge
+    * set. A node with no in-edge keeps the restart mass alone.
+    */
+  private[queries] def pagerankRound(e: DataFrame, wout: DataFrame, nodes: DataFrame)(
+      ranks: DataFrame): DataFrame = {
+    val contrib = e.join(wout, "src")
+      .join(ranks.withColumnRenamed("node", "src"), "src")
+      .select(col("dst"), intdiv(col("r") * col("w"), col("wt")).as("c"))
+      .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+    nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+      .select(col("node"),
+        (lit(150000L) + intdiv(lit(85L) * coalesce(col("s"), lit(0L)), lit(100L))).as("r"))
   }
 
   /** Data-quality validation report (the Deequ-style constraint suite
@@ -1227,35 +1179,6 @@ object Relational {
       |SELECT event_type, bucket, COUNT(*) AS n
       |FROM bk GROUP BY event_type, bucket ORDER BY event_type, bucket""".stripMargin
 
-  /** First-order Markov transition probabilities over the event-type
-    * graph (the normalized form of [[graphPagerank]]'s edge table):
-    * P(next = dst | cur = src) as one exact division per edge.
-    */
-  def graphTransitions(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables(s, dir, "events")
-      .select(col("user_id"), col("event_type"),
-        unix_millis(col("ts")).as("ts_ms"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"), lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-    edges.withColumn("wt", sum(col("w")).over(Window.partitionBy(col("src"))))
-      .select(col("src"), col("dst"), col("w"),
-        (col("w").cast("double") / col("wt")).as("p"))
-      .orderBy(col("src"), col("dst"))
-  }
-
-  val graphTransitionsSql: String =
-    """WITH ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id FROM events),
-      |nx AS (SELECT event_type AS src, lead(event_type) OVER (
-      |    PARTITION BY user_id ORDER BY ts_ms, event_id) AS dst FROM ev),
-      |edges AS (SELECT src, dst, COUNT(*) AS w FROM nx WHERE dst IS NOT NULL GROUP BY 1, 2)
-      |SELECT src, dst, w,
-      |  CAST(w AS DOUBLE) / CAST(SUM(w) OVER (PARTITION BY src) AS DOUBLE) AS p
-      |FROM edges ORDER BY src, dst""".stripMargin
-
   /** Pearson correlation + least-squares line of extendedprice on
     * quantity per return flag, with EXACT integer moments: quantity is
     * integral and price has exactly 2 decimals, so round(p*100) is the
@@ -1662,49 +1585,6 @@ object Relational {
        |SELECT n.node, COALESCE(bc.bc, 0.0e0) AS bc
        |FROM nodes n LEFT JOIN bc ON bc.node = n.node ORDER BY n.node""".stripMargin
   }
-
-  /** Reciprocity of the DIRECTED transition graph: the fraction of
-    * edges whose reverse also exists — the dyad-level symmetry
-    * statistic. One self-join on the distinct edge set + one
-    * division of exact integers.
-    */
-  def graphReciprocity(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables(s, dir, "events")
-      .select(col("user_id"), col("event_type"),
-        unix_millis(col("ts")).as("ts_ms"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("a"), lead(col("event_type"), 1).over(w).as("b"))
-      .filter(col("b").isNotNull && col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    val rev = edges.select(col("b").as("a"), col("a").as("b"))
-    val out = edges
-      .agg(count(lit(1)).as("n_edges"))
-      .crossJoin(broadcast(
-        edges.join(rev, Seq("a", "b"), "left_semi")
-          .agg(count(lit(1)).as("n_reciprocal"))))
-      .select(col("n_edges"), col("n_reciprocal"),
-        when(col("n_edges") > 0,
-          col("n_reciprocal").cast("double") / col("n_edges").cast("double"))
-          .as("reciprocity"))
-      .localCheckpoint(true)
-    graft.Caches.free(edges)
-    out
-  }
-
-  val graphReciprocitySql: String =
-    """WITH ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id FROM events),
-      |nx AS (SELECT event_type AS a, lead(event_type) OVER (
-      |    PARTITION BY user_id ORDER BY ts_ms, event_id) AS b FROM ev),
-      |e AS (SELECT DISTINCT a, b FROM nx WHERE b IS NOT NULL AND a <> b),
-      |r AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_reciprocal FROM e
-      |  WHERE EXISTS (SELECT 1 FROM e x WHERE x.a = e.b AND x.b = e.a)),
-      |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM e)
-      |SELECT n_edges, n_reciprocal,
-      |  CASE WHEN n_edges > 0
-      |    THEN CAST(n_reciprocal AS DOUBLE) / CAST(n_edges AS DOUBLE) END AS reciprocity
-      |FROM n CROSS JOIN r""".stripMargin
 
   /** One-row profile of the co-supply graph index — the summary every
     * graph workload starts from: node/edge counts, density
@@ -3446,69 +3326,6 @@ object Relational {
       |  CAST(SUM(CASE WHEN cnt < 5 THEN cnt ELSE 0 END) AS BIGINT) AS rows_below_k
       |FROM c""".stripMargin
 
-  /** Strongly connected components of the DIRECTED transition graph —
-    * the directed twin of [[graphCc]]: v,w share a component iff each
-    * reaches the other. Reachability closes by 3 unrolled DOUBLING
-    * rounds (covers path length 2³ ≥ any simple path in the type
-    * graph; the spec asserts round 3 IS the fixpoint), then
-    * scc_id(v) = min over the mutual-reach set. Every round is one
-    * self-join + distinct on the PAIR set — never a per-node frontier.
-    */
-  def graphScc(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables(s, dir, "events")
-      .select(col("user_id"), col("event_type"),
-        unix_millis(col("ts")).as("ts_ms"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("a"), lead(col("event_type"), 1).over(w).as("b"))
-      .filter(col("b").isNotNull).distinct()
-      .localCheckpoint(true)
-    val nodes = edges.select(col("a").as("node"))
-      .union(edges.select(col("b").as("node"))).distinct()
-    var clo = edges
-    val rounds = scala.collection.mutable.Buffer.empty[DataFrame]
-    (1 to SccRounds).foreach { _ =>
-      clo = clo.union(
-          clo.as("x").join(clo.as("y"), col("x.b") === col("y.a"))
-            .select(col("x.a").as("a"), col("y.b").as("b")))
-        .distinct()
-        .localCheckpoint(true)
-      rounds += clo
-    }
-    val both = clo.as("f")
-      .join(clo.as("r"), col("f.a") === col("r.b") && col("f.b") === col("r.a"))
-      .select(col("f.a").as("v"), col("f.b").as("w"))
-      .union(nodes.select(col("node").as("v"), col("node").as("w")))
-    val out = both.groupBy(col("v").as("node")).agg(min(col("w")).as("scc_id"))
-      .orderBy(col("node"))
-      .localCheckpoint(true)
-    graft.Caches.free(edges)
-    rounds.foreach(graft.Caches.free)
-    out
-  }
-
-  private val SccRounds = 3
-
-  val graphSccSql: String = {
-    val base =
-      """ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id FROM events),
-        |nx AS (SELECT event_type AS a, lead(event_type) OVER (
-        |    PARTITION BY user_id ORDER BY ts_ms, event_id) AS b FROM ev),
-        |c0 AS (SELECT DISTINCT a, b FROM nx WHERE b IS NOT NULL),
-        |nodes AS (SELECT a AS node FROM c0 UNION SELECT b FROM c0)""".stripMargin
-    val rounds = (1 to 3).map { i =>
-      s"""c$i AS (SELECT a, b FROM c${i - 1}
-         |  UNION SELECT x.a, y.b FROM c${i - 1} x JOIN c${i - 1} y ON x.b = y.a)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $base,
-       |$rounds,
-       |mut AS (SELECT f.a AS v, f.b AS w FROM c3 f
-       |    JOIN c3 r ON f.a = r.b AND f.b = r.a
-       |  UNION SELECT node, node FROM nodes)
-       |SELECT v AS node, MIN(w) AS scc_id FROM mut GROUP BY v ORDER BY node""".stripMargin
-  }
-
   /** Wald–Wolfowitz runs test on the DIRECTION of daily count changes
     * per type (randomness check on a series' ups and downs): signs
     * from day-over-day deltas (zeros dropped), R = sign flips + 1,
@@ -3572,201 +3389,6 @@ object Relational {
       |  CASE WHEN n_pos > 0 AND n_neg > 0 AND var > 0
       |    THEN (CAST(runs AS DOUBLE) - mu) / sqrt(var) END AS z
       |FROM v ORDER BY event_type""".stripMargin
-
-  private val PprIters = 5
-
-  /** PERSONALIZED PageRank from a data-derived seed (the highest
-    * out-weight event type, id tiebreak): restart mass returns to the
-    * SEED only — the "related to X" ranking a recommender runs, vs the
-    * global importance [[graphPagerank]] computes. Same scaled-integer
-    * discipline (rank ×10⁶, 85/100 damping via exact integral
-    * division), 5 unrolled replay iterations in the oracle; the seed
-    * is a 1-row broadcast carried through the loop, never a driver
-    * value — the plan is identical at any graph size.
-    */
-  def graphPpr(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables(s, dir, "events")
-      .select(col("user_id"), col("event_type"),
-        unix_millis(col("ts")).as("ts_ms"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"), lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      .localCheckpoint(true)
-    val wout = edges.groupBy(col("src")).agg(sum(col("w")).as("wt"))
-    val seed = wout.orderBy(col("wt").desc, col("src")).limit(1)
-      .select(col("src").as("seed"))
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .crossJoin(broadcast(seed))
-    var ranks = nodes.withColumn("r",
-      when(col("node") === col("seed"), lit(1000000L)).otherwise(lit(0L)))
-    (1 to PprIters).foreach { _ =>
-      val contrib = edges.join(wout, "src")
-        .join(ranks.select(col("node").as("src"), col("r")), "src")
-        .select(col("dst"), intdiv(col("r") * col("w"), col("wt")).as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s2"))
-      ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(col("node"), col("seed"),
-          (when(col("node") === col("seed"), lit(150000L)).otherwise(lit(0L)) +
-            intdiv(lit(85L) * coalesce(col("s2"), lit(0L)), lit(100L))).as("r"))
-    }
-    val out = ranks.select(col("node"), col("r")).orderBy(col("node"))
-      .localCheckpoint(true)
-    graft.Caches.free(edges)
-    out
-  }
-
-  val graphPprSql: String = {
-    val base =
-      """ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id FROM events),
-        |nx AS (SELECT event_type AS src, lead(event_type) OVER (
-        |    PARTITION BY user_id ORDER BY ts_ms, event_id) AS dst FROM ev),
-        |edges AS (SELECT src, dst, COUNT(*) AS w FROM nx WHERE dst IS NOT NULL GROUP BY 1, 2),
-        |wout AS (SELECT src, CAST(SUM(w) AS BIGINT) AS wt FROM edges GROUP BY src),
-        |seed AS (SELECT src AS sn FROM wout ORDER BY wt DESC, src LIMIT 1),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |r0 AS (SELECT node, CASE WHEN node = (SELECT sn FROM seed)
-        |    THEN CAST(1000000 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS r FROM nodes)""".stripMargin
-    val iters = (1 to PprIters).map { i =>
-      s"""r$i AS (SELECT n.node,
-         |    CAST(CASE WHEN n.node = (SELECT sn FROM seed) THEN 150000 ELSE 0 END
-         |      + (85 * COALESCE(CAST(SUM((r.r * e.w) // w2.wt) AS BIGINT), 0)) // 100 AS BIGINT) AS r
-         |  FROM nodes n LEFT JOIN edges e ON e.dst = n.node
-         |  LEFT JOIN r${i - 1} r ON r.node = e.src
-         |  LEFT JOIN wout w2 ON w2.src = e.src
-         |  GROUP BY n.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $base,
-       |$iters
-       |SELECT node, r FROM r$PprIters ORDER BY node""".stripMargin
-  }
-
-  private val HitsIters = 3
-
-  /** Expression-level LET (the TimeSeriesQueries helper): evaluate `e`
-    * once, hand it to `f` as a bound lambda value — CollapseProject
-    * re-inlines a projection column per reference otherwise.
-    */
-  private def letC(e: org.apache.spark.sql.Column)(
-      f: org.apache.spark.sql.Column => org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    element_at(transform(array(e), x => f(x)), 1)
-
-  /** Weighted HITS (Kleinberg hubs/authorities) over the event-type
-    * transition graph — the link-analysis companion to
-    * [[graphPagerank]], same scaled-integer discipline: scores ×10⁶,
-    * every iteration is (edge join → integer sum → L1 normalize via
-    * exact integral `div`), so the oracle REPLAYS all three unrolled
-    * iterations bit-for-bit. Normalization totals are exact integer
-    * sums (never a float reduction); `div` is Spark's integral
-    * division (no IEEE step, unlike the double-division intdiv trick,
-    * so 10¹⁸-scale numerators stay exact). Scale shape: per iteration
-    * two keyed edge joins + aggregates plus a broadcastable 1-row
-    * total — the pagerank shape; iterations fixed, never
-    * data-dependent.
-    */
-  def graphHits(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables(s, dir, "events")
-      .select(col("user_id"), col("event_type"),
-        unix_millis(col("ts")).as("ts_ms"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"), lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-    // r13: the HITS iteration runs on the EVENT-TYPE alphabet (≤ a
-    // dozen nodes at any corpus size), yet the r12 shape paid per
-    // half-step one eager checkpoint + a normalization agg + a
-    // broadcast — 24 construction jobs for 5-node algebra (the
-    // attribution_markov collapse, applied here). Collapse: collect
-    // the edge table into ONE row and unroll the 3 iterations as
-    // array folds in a single linear plan (corpus window → edge
-    // aggregation → expression) — zero checkpoints, zero loop jobs.
-    // Arithmetic preserved exactly: Σ w·score per node is an integer
-    // sum (order-free), absent in/out-edges contribute the same 0 the
-    // old left-join coalesce did, and (x·10⁶) div total is replayed
-    // as the (a − a mod b)/b chain — identical on these non-negative
-    // operands. Oracle unchanged.
-    val one = edges.agg(sort_array(collect_list(
-      struct(col("src"), col("dst"), col("w")))).as("es"))
-    def intdivE(a: Column, b: Column): Column = ((a - pmod(a, b)) / b).cast("long")
-    val rowsArr = letC(col("es")) { es =>
-      letC(array_sort(array_distinct(concat(
-        transform(es, e => e.getField("src")),
-        transform(es, e => e.getField("dst")))))) { nodesArr =>
-        // per-node in/out edge lists
-        letC(transform(nodesArr, n => struct(n.as("n"),
-          transform(filter(es, e => e.getField("dst") === n), e =>
-            struct(e.getField("src").as("o"), e.getField("w").as("w"))).as("ins"),
-          transform(filter(es, e => e.getField("src") === n), e =>
-            struct(e.getField("dst").as("o"), e.getField("w").as("w"))).as("outs")))) { pe =>
-          def look(vs: Column, n: Column): Column =
-            element_at(filter(vs, y => y.getField("n") === n), 1).getField("v")
-          def normalize(raw: Column): Column =
-            letC(aggregate(raw, lit(0L), (a, y) => a + y.getField("v"))) { tot =>
-              transform(raw, y => struct(y.getField("n").as("n"),
-                intdivE(y.getField("v") * lit(1000000L), tot).as("v")))
-            }
-          val h0 = transform(pe, e => struct(e.getField("n").as("n"),
-            lit(1000000L).as("v")))
-          val a0 = transform(pe, e => struct(e.getField("n").as("n"),
-            lit(0L).as("v")))
-          // acc = (hub scores, auth scores); one iteration = auth from
-          // hubs over in-edges, normalize; hubs from auths over
-          // out-edges, normalize
-          val fin = aggregate(sequence(lit(1), lit(HitsIters)),
-            struct(h0.as("hs"), a0.as("as")),
-            (acc, _) => letC(normalize(transform(pe, e =>
-              struct(e.getField("n").as("n"),
-                aggregate(e.getField("ins"), lit(0L), (a, x) =>
-                  a + x.getField("w") * look(acc.getField("hs"), x.getField("o")))
-                  .as("v"))))) { anew =>
-              struct(normalize(transform(pe, e =>
-                struct(e.getField("n").as("n"),
-                  aggregate(e.getField("outs"), lit(0L), (a, x) =>
-                    a + x.getField("w") * look(anew, x.getField("o"))).as("v"))))
-                .as("hs"), anew.as("as"))
-            })
-          transform(pe, (e, idx) => struct(
-            e.getField("n").as("node"),
-            element_at(fin.getField("hs"), idx + 1).getField("v").as("hub_score"),
-            element_at(fin.getField("as"), idx + 1).getField("v").as("auth_score")))
-        }
-      }
-    }
-    one.filter(size(col("es")) > 0)
-      .select(explode(rowsArr).as("r"))
-      .select(col("r.node").as("node"), col("r.hub_score").as("hub_score"),
-        col("r.auth_score").as("auth_score"))
-      .orderBy(col("node"))
-  }
-
-  val graphHitsSql: String = {
-    val base =
-      """ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id FROM events),
-        |nx AS (SELECT event_type AS src, lead(event_type) OVER (
-        |    PARTITION BY user_id ORDER BY ts_ms, event_id) AS dst FROM ev),
-        |edges AS (SELECT src, dst, COUNT(*) AS w FROM nx WHERE dst IS NOT NULL GROUP BY 1, 2),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes)""".stripMargin
-    val iters = (1 to HitsIters).map { i =>
-      s"""a${i}r AS (SELECT n.node, COALESCE(CAST(SUM(e.w * h.h) AS BIGINT), 0) AS ar
-         |  FROM nodes n LEFT JOIN edges e ON e.dst = n.node
-         |  LEFT JOIN h${i - 1} h ON h.node = e.src GROUP BY n.node),
-         |a$i AS (SELECT node, (ar * 1000000) // (SELECT CAST(SUM(ar) AS BIGINT) FROM a${i}r) AS a FROM a${i}r),
-         |h${i}r AS (SELECT n.node, COALESCE(CAST(SUM(e.w * a.a) AS BIGINT), 0) AS hr
-         |  FROM nodes n LEFT JOIN edges e ON e.src = n.node
-         |  LEFT JOIN a$i a ON a.node = e.dst GROUP BY n.node),
-         |h$i AS (SELECT node, (hr * 1000000) // (SELECT CAST(SUM(hr) AS BIGINT) FROM h${i}r) AS h FROM h${i}r)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $base,
-       |$iters
-       |SELECT node, h$HitsIters.h AS hub_score, a$HitsIters.a AS auth_score
-       |FROM h$HitsIters JOIN a$HitsIters USING (node) ORDER BY node""".stripMargin
-  }
 
   /** Spearman rank correlation of quantity vs price per return flag —
     * the robust companion to [[statsCorr]] (Pearson): identical moment
@@ -4137,22 +3759,18 @@ object Relational {
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stats_spearman" -> (statsSpearman _),
     "stats_kendall" -> (statsKendall _),
-    "graph_hits" -> (graphHits _),
     "stream_dedup" -> (streamDedup _),
     "dq_kanon" -> (dqKanon _),
     "er_jarowinkler" -> (erJarowinkler _),
     "sketch_quantile" -> (sketchQuantile _),
-    "graph_ppr" -> (graphPpr _),
     "rec_jaccard" -> (recJaccard _),
     "stats_ols" -> (statsOls _),
-    "graph_scc" -> (graphScc _),
     "stats_runs" -> (statsRuns _),
     "stats_kruskal" -> (statsKruskal _),
     "graph_assortativity" -> (graphAssortativity _),
     "graph_betweenness" -> (graphBetweenness _),
     "graph_closeness" -> (graphCloseness _),
     "graph_bc_coverage" -> (graphBcCoverage _),
-    "graph_reciprocity" -> (graphReciprocity _),
     "graph_summary" -> (graphSummary _),
     "er_blocking_eval" -> (erBlockingEval _),
     "stream_dau" -> (streamDau _),
@@ -4191,12 +3809,10 @@ object Relational {
     "stats_bootstrap" -> (statsBootstrap _),
     "basket_pairs" -> (basketPairs _),
     "ts_histogram" -> (tsHistogram _),
-    "graph_transitions" -> (graphTransitions _),
     "er_match" -> (erMatch _),
     "er_sorted_neighborhood" -> (erSortedNeighborhood _),
     "sketch_hll_intersect" -> (sketchHllIntersect _),
     "dq_report" -> (dqReport _),
-    "graph_pagerank" -> (graphPagerank _),
     "funnel_conversion" -> (funnelConversion _),
     "cohort_retention" -> (cohortRetention _),
     "sketch_hll_merge" -> (sketchHllMerge _),
@@ -4217,22 +3833,18 @@ object Relational {
   val oracles: Map[String, String] = Map(
     "stats_spearman" -> statsSpearmanSql,
     "stats_kendall" -> statsKendallSql,
-    "graph_hits" -> graphHitsSql,
     "stream_dedup" -> streamDedupSql,
     "dq_kanon" -> dqKanonSql,
     "er_jarowinkler" -> erJarowinklerSql,
     "sketch_quantile" -> sketchQuantileSql,
-    "graph_ppr" -> graphPprSql,
     "rec_jaccard" -> recJaccardSql,
     "stats_ols" -> statsOlsSql,
-    "graph_scc" -> graphSccSql,
     "stats_runs" -> statsRunsSql,
     "stats_kruskal" -> statsKruskalSql,
     "graph_assortativity" -> graphAssortativitySql,
     "graph_betweenness" -> graphBetweennessSql,
     "graph_closeness" -> graphClosenessSql,
     "graph_bc_coverage" -> graphBcCoverageSql,
-    "graph_reciprocity" -> graphReciprocitySql,
     "graph_summary" -> graphSummarySql,
     "er_blocking_eval" -> erBlockingEvalSql,
     "stream_dau" -> streamDauSql,
@@ -4271,12 +3883,10 @@ object Relational {
     "stats_bootstrap" -> statsBootstrapSql,
     "basket_pairs" -> basketPairsSql,
     "ts_histogram" -> tsHistogramSql,
-    "graph_transitions" -> graphTransitionsSql,
     "er_match" -> erMatchSql,
     "er_sorted_neighborhood" -> erSortedNeighborhoodSql,
     "sketch_hll_intersect" -> sketchHllIntersectSql,
     "dq_report" -> dqReportSql,
-    "graph_pagerank" -> graphPagerankSql,
     "funnel_conversion" -> funnelConversionSql,
     "cohort_retention" -> cohortRetentionSql,
     "sketch_hll_merge" -> sketchHllMergeSql,

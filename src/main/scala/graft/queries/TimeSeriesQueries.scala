@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ts.{TimeSeriesOps => T, TrendFit}
+import Exact.let
 
 /** Time-series operator queries (SURVEY §2.9) over the events table,
   * treating user_id as the series key (the reference's tiny-series
@@ -1535,15 +1536,6 @@ object TimeSeriesQueries {
     * emitted slope is bit-exact unrounded. x is in DAYS (ms/86.4e6 —
     * one division before the slope) to keep magnitudes readable.
     */
-  /** Expression-level LET: evaluate `e` ONCE, hand it to `f` as a bound
-    * lambda value. A projection column referenced k times is re-inlined
-    * k times by CollapseProject — ruinous when the column is a derived
-    * array consumed by nested HOFs (the Theil–Sen lesson: the pair loop
-    * went O(n²)→O(n³) through exactly this, 96.7 s at sf0.1).
-    */
-  private def let(e: Column)(f: Column => Column): Column =
-    element_at(transform(array(e), x => f(x)), 1)
-
   def tsTheilsen(s: SparkSession, dir: String): DataFrame = {
     val arr = events(s, dir)
       .filter(col("value").isNotNull)

@@ -471,7 +471,7 @@ object TrainingPrep {
       .select(col("bucket"), col("off"))
     val wb = Window.partitionBy(col("bucket")).orderBy(col("v"), col("doc_id"))
     def m(c: org.apache.spark.sql.Column) =
-      graft.queries.Relational.intdiv(
+      graft.queries.Exact.intdiv(
         lit(2L * k) * c + col("wtot"), lit(2L) * col("wtot"))
     bucketed.join(broadcast(offsets), "bucket")
       .withColumn("cum", col("off") + sum(col("w")).over(wb))

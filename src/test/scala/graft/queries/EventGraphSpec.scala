@@ -1,17 +1,21 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Harness, SparkSpec}
 
-/** [[GraphExtra]] certified against independent plain-Scala references
+/** [[EventGraph]] certified against independent plain-Scala references
   * (the DuckDB oracle runs in the driver gate): Floyd–Warshall for the
   * doubling-closure eccentricities, and a step-by-step md5 replay for
-  * the deterministic walks.
+  * the deterministic walks. Also pinned: building a query runs no job,
+  * and the transition window is derived in one place.
   */
-class GraphExtraSpec extends SparkSpec {
+class EventGraphSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -44,7 +48,7 @@ class GraphExtraSpec extends SparkSpec {
     val want = dist.keys.groupBy(_._1).map { case (n, ks) =>
       n -> (ks.size.toLong, ks.map(dist).max)
     }
-    val got = GraphExtra.graphEccentricity(spark, dir).collect()
+    val got = EventGraph.graphEccentricity(spark, dir).collect()
     assert(got.length == want.size)
     got.foreach { r =>
       val (nReach, ecc) = want(r.getString(0))
@@ -60,7 +64,7 @@ class GraphExtraSpec extends SparkSpec {
         .map(b => f"$b%02x").mkString.substring(0, 8)
       java.lang.Long.parseLong(hex, 16)
     }
-    val got = GraphExtra.graphWalks(spark, dir).collect()
+    val got = EventGraph.graphWalks(spark, dir).collect()
     val nodes = es.flatMap(e => Seq(e._1, e._2))
     assert(got.map(_.getString(0)).toSet == nodes)
     got.foreach { r =>
@@ -81,5 +85,29 @@ class GraphExtraSpec extends SparkSpec {
     }
     // walks must actually move (fixture sanity)
     assert(got.exists(r => r.getString(2) != null && r.getString(2) != r.getString(1)))
+  }
+
+  test("the nine event-graph queries run no job at construction under AQE") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    graft.Tables(spark, dir, "events") // the schema memo's first read is not the query's
+    val jobs = EventGraph.all.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> Harness.countJobs(spark)(fn(spark, dir))._2
+    }
+    assert(jobs.size == 9)
+    assert(jobs.forall(_._2 == 0), s"construction jobs: $jobs")
+  }
+
+  test("the per-user event_type transition window is written only in EventGraph and Attribution.journeyEdges") {
+    val window = """lead(col("event_type"), 1)"""
+    val uses = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p))
+      .map { case (f, text) => f -> (text.split(java.util.regex.Pattern.quote(window), -1).length - 1) }
+      .filter(_._2 > 0).toMap
+    assert(uses == Map("EventGraph.scala" -> 1, "Attribution.scala" -> 1))
+    // the journey graph has its own START/CONV/NULL states
+    val attribution = Files.readString(Paths.get("src/main/scala/graft/queries/Attribution.scala"))
+    val journey = attribution.drop(attribution.indexOf("def journeyEdges"))
+    assert(journey.take(journey.indexOf("\n  }\n")).contains(window))
   }
 }

@@ -81,7 +81,7 @@ class GraphConvergenceSpec extends graft.SparkSpec {
     assert(rows.nonEmpty)
     assert(rows.forall(_.getBoolean(3)), "must converge on the driver corpus")
     assert(rows.head.getInt(2) <= 10)
-    val fixed = Relational.graphScc(spark, dir).collect()
+    val fixed = EventGraph.graphScc(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     val got = rows.map(r => (r.getString(0), r.getString(1))).toSet
     assert(got == fixed, "converged SCC diverges from the certified 3-round doubling")

@@ -5,14 +5,22 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Integer-scaled PageRank: hand-computed fixpoints on tiny graphs and
-  * invariants on the real transition graph.
+  * invariants on the real transition graph. Each tiny graph runs through
+  * both the DataFrame core ([[Relational.pagerank]]) and the event-graph
+  * fold ([[EventGraph.pagerank]]), which must agree rank for rank.
   */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ranksOf(edges: Seq[(String, String, Long)], iters: Int = 5) =
-    Relational.pagerank(edges.toDF("src", "dst", "w"), iters)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  private def ranksOf(edges: Seq[(String, String, Long)]) = {
+    val df = edges.toDF("src", "dst", "w")
+    def ranks(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val core = ranks(Relational.pagerank(df, 5))
+    assert(ranks(EventGraph.pagerank(df, personalized = false)) == core,
+      "the fold and the DataFrame core disagree")
+    core
+  }
 
   test("2-cycle is a fixpoint at the initial rank") {
     // r' = 150000 + 85*((1000000*1)//1)//100 = 1000000 every iteration
@@ -33,7 +41,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("real transition graph: every node ranked, ranks positive, source nodes present") {
-    val rows = Relational.graphPagerank(spark, "/root/testdata/sf0.001").collect()
+    val rows = EventGraph.graphPagerank(spark, "/root/testdata/sf0.001").collect()
     assert(rows.length == 5) // the five event types
     rows.foreach(r => assert(r.getLong(1) >= 150000L))
   }

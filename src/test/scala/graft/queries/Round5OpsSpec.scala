@@ -354,7 +354,7 @@ class Round5OpsSpec extends SparkSpec {
   }
 
   test("graph_hits equals the plain-Scala scaled-integer replay exactly") {
-    val got = Relational.graphHits(spark, dir).collect()
+    val got = EventGraph.graphHits(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // independent replay of the same integer iteration on collected edges
     val ev = graft.Tables(spark, dir, "events")
@@ -475,7 +475,7 @@ class Round5OpsSpec extends SparkSpec {
   }
 
   test("graph_ppr equals the plain-Scala scaled-integer replay; mass concentrates at the seed") {
-    val got = Relational.graphPpr(spark, dir).collect()
+    val got = EventGraph.graphPpr(spark, dir).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val ev = graft.Tables(spark, dir, "events")
       .select(col("user_id"), col("event_type"), unix_millis(col("ts")), col("event_id"))
@@ -658,7 +658,7 @@ class Round5OpsSpec extends SparkSpec {
   }
 
   test("graph_scc: components equal mutual-reachability on the collected graph; round 3 is the fixpoint") {
-    val got = Relational.graphScc(spark, dir).collect()
+    val got = EventGraph.graphScc(spark, dir).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val ev = graft.Tables(spark, dir, "events")
       .select(col("user_id"), col("event_type"), unix_millis(col("ts")), col("event_id"))
@@ -891,7 +891,7 @@ class Round5OpsSpec extends SparkSpec {
   }
 
   test("graph_reciprocity equals brute force on the collected transition edges") {
-    val r = Relational.graphReciprocity(spark, dir).collect().head
+    val r = EventGraph.graphReciprocity(spark, dir).collect().head
     val ev = graft.Tables(spark, dir, "events")
       .select(col("user_id"), col("event_type"), unix_millis(col("ts")), col("event_id"))
       .collect().map(x => (x.getLong(0), x.getString(1), x.getLong(2), x.getLong(3)))

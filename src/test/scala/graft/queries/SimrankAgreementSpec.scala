@@ -41,7 +41,7 @@ class SimrankAgreementSpec extends SparkSpec {
         (a, b) -> v
       }).toMap
     }
-    val got = GraphExtra.graphSimrank(spark, dir).collect()
+    val got = EventGraph.graphSimrank(spark, dir).collect()
     assert(got.length == nodes.size * nodes.size && got.nonEmpty)
     got.foreach { r =>
       val want = s((r.getString(0), r.getString(1)))

@@ -145,21 +145,53 @@ class PreparedSpec extends SparkSpec {
     }
   }
 
+  /** Spark's codegen cache entries, each named by its class, the
+    * operator prefixes of its variables, its source hash and its class
+    * loader (the cache's key holds both), to say what a window compiled.
+    */
+  private def codegenEntries(): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
+    val get = CodeGenerator.getClass.getDeclaredMethod("cache")
+    get.setAccessible(true)
+    val memo = get.invoke(CodeGenerator)
+    val cache = memo.getClass.getMethod("cache").invoke(memo)
+    val keys = Class.forName("org.sparkproject.guava.cache.Cache").getMethod("asMap")
+      .invoke(cache).asInstanceOf[java.util.Map[AnyRef, AnyRef]].keySet.asScala
+    keys.map { k =>
+      val (loader, code) = k.asInstanceOf[(AnyRef, CodeAndComment)]
+      val body = code.body
+      val cls = "class (\\w+)".r.findFirstMatchIn(body).map(_.group(1)).getOrElse("?")
+      val ops = "\\b([a-z]+)_\\w".r.findAllMatchIn(body).map(_.group(1)).toSeq.distinct.sorted
+      s"$cls${ops.mkString("[", ",", "]")}#${body.hashCode} (loader ${loader.hashCode})"
+    }.toSet
+  }
+
   test("the second op of each kind runs no optimizer pass over the op's tree and compiles nothing") {
     import org.apache.spark.metrics.source.CodegenMetrics
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val kinds = ops(0).groupBy(_._1.takeWhile(_ != ' ')).values.map(_.take(2)).toSeq
+    // Per kind, in a fixed order, two ops of one shape with different
+    // values, so the first compiles every class the second needs: a
+    // class only another shape uses (a facets op's SpecificSafeProjection)
+    // may have been evicted from Spark's 100-entry codegen cache since.
+    def op(p: Int, name: String) = ops(p).find(_._1 == name).get
+    val kinds = Seq("search", "facets over search").map { kind =>
+      Seq(0, 1).map(p => op(p, s"$kind ${cycle(p).head}"))
+    } ++ Seq("bm25", "bm25f", "qld").map { kind =>
+      Seq("spark stream join", "hash zebra fast").map(q => op(0, s"$kind '$q'"))
+    }
     val saved = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations = saved :+ Spy
     try {
       for (Seq((_, first), (name, second)) <- kinds) {
         rows(Prepared(first))
         Spy.largest = 0
-        val (before, c0) = (Prepared.builds, compiles)
+        val (before, c0, cached) = (Prepared.builds, compiles, codegenEntries())
         rows(Prepared(second))
         assert(Prepared.builds == before, name)
         assert(Spy.largest == 1, s"$name: the optimizer saw a tree of ${Spy.largest} nodes")
-        assert(compiles == c0, s"$name compiled ${compiles - c0} new classes")
+        assert(compiles == c0, s"$name compiled ${compiles - c0} new classes: " +
+          (codegenEntries() -- cached).mkString(", "))
       }
     } finally spark.experimental.extraOptimizations = saved
   }
